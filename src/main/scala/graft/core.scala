@@ -41,7 +41,13 @@ object Tables {
     * thereafter — exactly what a production job does by declaring its
     * table schemas.  This memoizes METADATA only: every query still
     * scans and computes from the parquet data.  Keyed by full path so
-    * different SF dirs never share an entry. */
+    * different SF dirs never share an entry.
+    *
+    * Contract: a path read through [[table]] keeps its schema for the
+    * life of the process.  The memo is never invalidated, so a writer
+    * that rewrites such a path in-process with a different schema would
+    * have later reads use the stale schema; write to a fresh path
+    * instead (the specs write synthetic tables under new temp dirs). */
   private val schemaMemo = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.types.StructType]
 
@@ -200,23 +206,6 @@ object Scratch {
       })
     }
 
-  /** Materialize `df` to a PER-INVOCATION scratch parquet and read it
-    * back — the recompute boundary for corpus-scale intermediate
-    * streams that feed multiple differently-keyed consumers (the
-    * positional-gram and winnow-fingerprint streams, ~k x the corpus).
-    * persist()/localCheckpoint pin such a stream in executor
-    * storage/memory: at 100 TB that starves execution memory, and
-    * localCheckpoint additionally truncates lineage without
-    * replication (a lost executor kills the job).  A scratch parquet
-    * spills to disk by construction, survives executor loss, and is
-    * exactly where a cluster deployment would put the reliable
-    * checkpoint.
-    *
-    * Unlike [[buildOnce]] this is deliberately NOT memoized: every
-    * invocation recomputes and rewrites (no cross-invocation reuse of
-    * intermediates — each bench/oracle run computes from the parquet
-    * inputs).  Paths are app-unique + call-unique; the shutdown hook
-    * reclaims them. */
   /** Spread a CPU-heavy scan across the session's full parallelism
     * when the file layout yields fewer input splits than cores — the
     * small-file / local-fixture case, where a per-row kernel pass
@@ -246,6 +235,24 @@ object Scratch {
   }
 
   private val matCounter = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Materialize `df` to a PER-INVOCATION scratch parquet and read it
+    * back — the recompute boundary for corpus-scale intermediate
+    * streams that feed multiple differently-keyed consumers (the
+    * positional-gram and winnow-fingerprint streams, ~k x the corpus).
+    * persist()/localCheckpoint pin such a stream in executor
+    * storage/memory: at 100 TB that starves execution memory, and
+    * localCheckpoint additionally truncates lineage without
+    * replication (a lost executor kills the job).  A scratch parquet
+    * spills to disk by construction, survives executor loss, and is
+    * exactly where a cluster deployment would put the reliable
+    * checkpoint.
+    *
+    * Unlike [[buildOnce]] this is deliberately NOT memoized: every
+    * invocation recomputes and rewrites (no cross-invocation reuse of
+    * intermediates — each bench/oracle run computes from the parquet
+    * inputs).  Paths are app-unique + call-unique; the shutdown hook
+    * reclaims them. */
   def materialize(s: org.apache.spark.sql.SparkSession,
       df: DataFrame, kind: String): DataFrame = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_mat_${kind}_" +

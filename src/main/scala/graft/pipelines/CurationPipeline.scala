@@ -1,8 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Corpus, Tables}
+import graft.Corpus
 
 /** End-to-end curation run: the engine's operators composed into the
   * single job a pretraining ingest actually executes, with in-pass
@@ -23,12 +24,26 @@ import graft.{Corpus, Tables}
   *   7. deterministic md5 train/val/test split  (split_train_val_test)
   *   8. per-split partitioned parquet write   (sink_per_record_files)
   *
-  * Wide-stage budget: the dedup groupBy, the fingerprint index + pair
-  * aggregation (near-dup), the p5/p95 aggregate, and the k-anonymity
-  * class count — every other stage is a narrow transformation or a
-  * broadcast-bounded join, so composition adds shuffles only where an
-  * operator is genuinely wide. Metrics ride a Dataset.observe() so
-  * counts cost no extra action: one write triggers the pipeline once.
+  * Plan: flag, count once, filter last. Each gate adds a boolean
+  * column instead of dropping rows: `dd_ok` (md5 min-id window),
+  * `nd_ok` (not a winnow loser: a left join to the distinct loser ids
+  * plus a null test), `q_ok` (language and quality rules), `r_ok`
+  * (p5/p95 bounds from a broadcast one-row aggregate over the `q_ok`
+  * rows) and `k_ok` (a class count window over the `r_ok` rows). One
+  * Dataset.observe() above the last exchange counts every flag, then
+  * `filter(k_ok)` feeds the one partitioned write, so the write is the
+  * run's only action and the six stage counts come with it. Wide
+  * stages: the md5 window, the fingerprint index + pair aggregation
+  * (near-dup), the loser join, the p5/p95 aggregate and the k-anon
+  * window. The trade-off: rejected rows ride through the loser join
+  * and the k-anon window exchange before the final filter drops them.
+  *
+  * Per-stage observe() calls on a filtered plan would lose counts:
+  * when a stage empties (every document rejected, an empty corpus),
+  * adaptive execution's empty-relation propagation prunes the
+  * materialized stage holding the lower CollectMetrics nodes from the
+  * final plan, and their metrics never arrive. The single observe sits
+  * where no pruning reaches it.
   *
   * Reference: this is §3.1's generate-filter-write loop
   * (data_generation/generate_narratives_from_data.py:79-96) as one
@@ -50,18 +65,15 @@ object CurationPipeline {
 
     val ingested = Corpus.withDups(spark, sfDir)
 
-    // 1. exact dedup: keep the minimum doc_id per content hash
+    // 1. exact dedup: the minimum doc_id per content hash is kept
     val deduped = ingested
-      .withColumn("h", md5(col("text")))
-      .withColumn("keeper", min(col("doc_id"))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("h"))))
-      .filter(col("doc_id") === col("keeper"))
-      .drop("h", "keeper")
+      .withColumn("dd_ok", col("doc_id") === min(col("doc_id"))
+        .over(Window.partitionBy(md5(col("text")))))
 
     // 2. winnowing near-dup removal: containment >= 50% of the smaller
     // fingerprint set (after a 64-doc hot-fp cap) drops the LARGER id —
-    // the winnow_overlap_pairs operator run as an anti join
-    val fps = deduped.filter(length(col("text")) >= 11)
+    // the winnow_overlap_pairs operator over the dedup keepers
+    val fps = deduped.filter(col("dd_ok") && length(col("text")) >= 11)
       .select(col("doc_id"),
         explode(graft.functions.WinnowKernel.winnowFps(col("text")))
           .as("fp"))
@@ -80,7 +92,9 @@ object CurationPipeline {
         Seq("b"))
       .filter(col("n_shared") * 2 >= least(col("na"), col("nb")))
       .select(col("b").as("doc_id")).distinct()
-    val nearDeduped = deduped.join(dupLosers, Seq("doc_id"), "left_anti")
+      .withColumn("loser", lit(true))
+    val nearDeduped = deduped.join(dupLosers, Seq("doc_id"), "left")
+      .withColumn("nd_ok", col("dd_ok") && col("loser").isNull)
 
     // 3+4. language + quality gates (pure row predicates); n_chars is
     // derived — withDups truncations change lengths, so never trust a
@@ -88,57 +102,58 @@ object CurationPipeline {
     val toks = split(col("text"), " ")
     val gated = nearDeduped
       .withColumn("n_chars", length(col("text")).cast("long"))
-      .filter(col("lang").isin("en", "de", "fr", "es", "zh"))
-      .filter(size(toks) >= 10 && size(toks) <= 2048)
-      .filter( // mean word length in [3, 12] — cross-multiplied
+      .withColumn("q_ok", col("nd_ok") &&
+        col("lang").isin("en", "de", "fr", "es", "zh") &&
+        size(toks) >= 10 && size(toks) <= 2048 &&
+        // mean word length in [3, 12] — cross-multiplied
         col("n_chars") * 1 >= size(toks) * 3 &&
-          col("n_chars") <= size(toks) * 13)
+        col("n_chars") <= size(toks) * 13)
 
-    // 4. length outliers out by exact percentile bounds (broadcast row)
+    // 5. length outliers out by exact percentile bounds over the gated
+    // rows (broadcast row); no gated rows means null bounds: none pass
     val bounds = gated.agg(
-      expr("percentile(n_chars, 0.05)").as("p05"),
-      expr("percentile(n_chars, 0.95)").as("p95"))
+      expr("percentile(CASE WHEN q_ok THEN n_chars END, 0.05)").as("p05"),
+      expr("percentile(CASE WHEN q_ok THEN n_chars END, 0.95)").as("p95"))
     val inRange = gated.crossJoin(broadcast(bounds))
-      .filter(col("n_chars") >= ceil(col("p05")) &&
-        col("n_chars") <= floor(col("p95")))
-      .drop("p05", "p95")
+      .withColumn("r_ok", col("q_ok") && coalesce(
+        col("n_chars") >= ceil(col("p05")) &&
+          col("n_chars") <= floor(col("p95")), lit(false)))
 
     // 6. k-anonymity release gate: quasi-identifier classes (lang,
-    // 100-char length bucket) under k=3 members are suppressed —
-    // the k_anonymity_violations screen applied as a semi join on the
-    // classes that pass
-    val kClass = inRange
-      .withColumn("kbucket", expr("(n_chars div 100)"))
-    val okClasses = kClass.groupBy(col("lang"), col("kbucket"))
-      .agg(count(lit(1)).as("kn"))
-      .filter(col("kn") >= 3)
-      .select(col("lang"), col("kbucket"))
-    val released = kClass.join(okClasses, Seq("lang", "kbucket"))
-      .drop("kbucket")
+    // 100-char length bucket) with fewer than k=3 in-range members are
+    // suppressed — the k_anonymity_violations screen as a class window
+    val released = inRange
+      .withColumn("k_ok", col("r_ok") && count(when(col("r_ok"), 1))
+        .over(Window.partitionBy(col("lang"), expr("n_chars div 100"))) >= 3)
+      .observe(obs,
+        count(lit(1)).as("ingested"),
+        count(when(col("dd_ok"), 1)).as("dedup"),
+        count(when(col("nd_ok"), 1)).as("near_dup"),
+        count(when(col("q_ok"), 1)).as("quality"),
+        count(when(col("k_ok"), 1)).as("k_anon"))
 
-    // 7. deterministic split
+    // 7. deterministic split of the released rows
     val bucket = pmod(
       conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long"), lit(100L))
-    val curated = released
+    val curated = released.filter(col("k_ok"))
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        col("n_chars"))
       .withColumn("split",
         when(bucket < 80, "train").when(bucket < 90, "val")
           .otherwise("test"))
-      .observe(obs,
-        count(lit(1)).as("written"),
-        sum(col("n_chars")).as("chars_written"))
 
     // 8. one partitioned write drives the whole plan exactly once
     curated.write.mode("overwrite")
       .partitionBy("split").parquet(outDir)
 
-    val written = obs.get("written").asInstanceOf[Long]
+    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
     Result(outDir,
-      ingested = ingested.count(),
-      afterDedup = deduped.count(),
-      afterNearDup = nearDeduped.count(),
-      afterQuality = gated.count(),
-      afterKAnon = released.count(),
-      written = written)
+      ingested = m("ingested"),
+      afterDedup = m("dedup"),
+      afterNearDup = m("near_dup"),
+      afterQuality = m("quality"),
+      afterKAnon = m("k_anon"),
+      written = m("k_anon"))
   }
 }

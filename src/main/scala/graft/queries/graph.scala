@@ -369,11 +369,13 @@ object GraphQueries {
         // passes. localCheckpoint(eager) TRUNCATES LINEAGE — without it
         // every round's plan re-derives all prior rounds and the loop
         // goes exponential (at 100 TB: reliable checkpoint to storage).
-        // Convergence is a 4-counter checksum equality, one cheap agg
-        // per round instead of two exceptAll shuffles; the edge sets of
-        // consecutive rounds are equal iff the stars stopped moving
-        // (checksum collision is 2^-64-ish, and the oracle would catch
-        // a wrong final labeling anyway).
+        // Convergence is a checksum equality, one cheap agg per round
+        // instead of two exceptAll shuffles. The 4th counter equals
+        // 1000003*sum(a) + sum(b), a linear combination of the 2nd and
+        // 3rd, so the test really compares (count, sum(a), sum(b)): a
+        // round that moves edges but keeps all three stops the loop
+        // early with a non-fixpoint labeling. No collision bound holds;
+        // only the oracle's check of the final labeling catches it.
         def checksum(e: DataFrame): (Long, Long, Long, Long) = {
           val r = e.agg(count(lit(1)), sum(col("a")), sum(col("b")),
             sum(col("a") * 1000003L + col("b"))).head()

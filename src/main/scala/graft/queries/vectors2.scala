@@ -55,8 +55,12 @@ object Vector2Queries {
     // form exploded k rows per point and re-aggregated them with a
     // POINTS-SIZED exchange per assign pass; this form shuffles
     // nothing on the points side at any scale — only the k-row
-    // centroid collect pays a single tiny exchange.
+    // centroid collect pays a single tiny exchange.  An empty centroid
+    // frame still aggregates to one empty-array row; dropping that row
+    // assigns no rows (no centroid, no assignment) instead of one
+    // null-cluster row per point.
     val cl = cents.agg(collect_list(struct(col("cid"), col("cvec"))).as("cl"))
+      .filter(size(col("cl")) > 0)
     points.crossJoin(broadcast(cl))
       .select(col("vec_id"), col("qe"), array_min(transform(col("cl"),
         c => struct(sqDist(col("qe"), c.getField("cvec")).as("dist"),
