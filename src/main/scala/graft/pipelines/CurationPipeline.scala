@@ -33,10 +33,12 @@ import graft.Corpus
   * Dataset.observe() above the last exchange counts every flag, then
   * `filter(k_ok)` feeds the one partitioned write, so the write is the
   * run's only action and the six stage counts come with it. Wide
-  * stages: the md5 window, the fingerprint index + pair aggregation
-  * (near-dup), the loser join, the p5/p95 aggregate and the k-anon
-  * window. The trade-off: rejected rows ride through the loser join
-  * and the k-anon window exchange before the final filter drops them.
+  * stages: the md5 window, the fingerprint stream (one fp-partitioned
+  * exchange under the hot-fp cap window, shared by the fp sizes and both
+  * sides of the pair join) + pair aggregation (near-dup), the loser
+  * join, the p5/p95 aggregate and the k-anon window. The trade-off:
+  * rejected rows ride through the loser join and the k-anon window
+  * exchange before the final filter drops them.
   *
   * Per-stage observe() calls on a filtered plan would lose counts:
   * when a stage empties (every document rejected, an empty corpus),
@@ -73,13 +75,16 @@ object CurationPipeline {
     // 2. winnowing near-dup removal: containment >= 50% of the smaller
     // fingerprint set (after a 64-doc hot-fp cap) drops the LARGER id —
     // the winnow_overlap_pairs operator over the dedup keepers
-    val fps = deduped.filter(col("dd_ok") && length(col("text")) >= 11)
+    // the cap is a count window over the one fp-partitioned stream, so
+    // every consumer below (sizes, both pair sides) reuses that exchange
+    // and the fingerprint kernel runs once; a hot fp's rows are buffered
+    // in one window partition (and can spill) before the cap drops them
+    val cappedFps = deduped.filter(col("dd_ok") && length(col("text")) >= 11)
       .select(col("doc_id"),
         explode(graft.functions.WinnowKernel.winnowFps(col("text")))
           .as("fp"))
-    val okFp = fps.groupBy(col("fp")).agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= 64).select(col("fp"))
-    val cappedFps = fps.join(okFp, Seq("fp"))
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy(col("fp"))))
+      .filter(col("bn") <= 64).select(col("doc_id"), col("fp"))
     val fpSizes = cappedFps.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("nf"))
     val dupLosers = cappedFps.as("x").join(cappedFps.as("y"),

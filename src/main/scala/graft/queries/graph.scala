@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -108,6 +108,91 @@ object GraphQueries {
       |l2 AS (SELECT l.vec_id, least(l.lbl, coalesce(n.nbmin, l.lbl)) AS lbl
       |       FROM l1 l LEFT JOIN n2 n ON n.a = l.vec_id),
       |comm AS (SELECT vec_id, lbl AS community FROM l2)""".stripMargin
+
+  /** Connected components by alternating large-star and small-star to an
+    * exact fixpoint (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC 2014): O(log² n) rounds where recursive label
+    * spreading needs O(diameter) passes.
+    *
+    * `nodes` has a long column `vec_id`; `edges` has long columns `a`
+    * and `b` in any orientation (duplicates and self-loops are dropped).
+    * Returns (vec_id, component) for every node, the component being the
+    * minimum id connected to it; a node without edges labels itself.
+    *
+    * State between rounds is the edge set oriented larger -> smaller.
+    * Each round is one eager `localCheckpoint` and no other job:
+    *   - each star step takes a node's closed-neighbourhood minimum as
+    *     `min(b) over (partitionBy a)` on the adjacency, so it costs one
+    *     exchange. The trade-off: a hub's whole neighbourhood is buffered
+    *     in one window partition, and that buffer can spill;
+    *   - one aggregate keyed on (a, b) over the new edges (`nw`) and the
+    *     previous ones (`od`) deduplicates the new set, and an `observe`
+    *     on it counts the symmetric difference (`nw =!= od`) and the new
+    *     edges, so the exact change count arrives with the checkpoint;
+    *   - the loop stops when a round changes nothing. The checkpoint
+    *     truncates lineage: without it every round re-plans all earlier
+    *     rounds (at scale: a reliable checkpoint to storage).
+    * The canonical input is round 0, compared with the empty set, so its
+    * change count is its edge count m. A graph that has not reached its
+    * fixpoint after `maxRounds` rounds (default max(8, 2·⌈log₂(2m+2)⌉²),
+    * Kiveris' O(log² n) bound with room to spare) throws
+    * IllegalStateException instead of returning a wrong labelling. */
+  private[queries] def starComponents(nodes: DataFrame, edges: DataFrame,
+      maxRounds: Option[Int] = None): DataFrame = {
+    val nbrMin =
+      least(col("a"), min(col("b")).over(Window.partitionBy(col("a"))))
+    def both(e: DataFrame) =
+      e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
+    // large-star: link each strictly larger neighbour of a to m(a)
+    def largeStar(e: DataFrame) = both(e).withColumn("m", nbrMin)
+      .filter(col("b") > col("a"))
+      .select(col("b").as("a"), col("m").as("b"))
+    // small-star: link a and its smaller neighbours to their minimum
+    def smallStar(e: DataFrame) = both(e).filter(col("b") < col("a"))
+      .withColumn("m", nbrMin)
+      .select(explode(array(col("a"), col("b"))).as("a"), col("m").as("b"))
+      .filter(col("a") =!= col("b"))
+    def tagged(e: DataFrame, isNew: Boolean) =
+      e.withColumn("nw", lit(isNew)).withColumn("od", lit(!isNew))
+    // checkpoints the `nw` rows; returns them with (changed, edge count)
+    def checkpoint(e: DataFrame): (DataFrame, Long, Long) = {
+      val obs = Observation()
+      val next = e
+        .observe(obs, count(when(col("nw") =!= col("od"), 1)).as("changed"),
+          count(when(col("nw"), 1)).as("edges"))
+        .filter(col("nw")).select(col("a"), col("b"))
+        .localCheckpoint(true)
+      val m = obs.get
+      (next, m("changed").asInstanceOf[Long], m("edges").asInstanceOf[Long])
+    }
+
+    var (cur, changed, m) = checkpoint(tagged(edges
+      .select(greatest(col("a"), col("b")).as("a"),
+        least(col("a"), col("b")).as("b"))
+      .filter(col("a") =!= col("b")).distinct(), isNew = true))
+    val logM = 64 - java.lang.Long.numberOfLeadingZeros(2 * m + 1)
+    val cap = maxRounds.getOrElse(math.max(8, 2 * logM * logM))
+    var rounds = 0
+    while (changed > 0) {
+      if (rounds >= cap) throw new IllegalStateException(
+        s"large-star/small-star: no fixpoint after round $rounds " +
+          s"(cap $cap, last change count $changed of $m edges)")
+      val (next, c, e) = checkpoint(
+        tagged(smallStar(largeStar(cur)), isNew = true)
+          .unionByName(tagged(cur, isNew = false))
+          .groupBy(col("a"), col("b"))
+          .agg(max(col("nw")).as("nw"), max(col("od")).as("od")))
+      cur = next
+      changed = c
+      m = e
+      rounds += 1
+    }
+    nodes
+      .join(cur.select(col("a").as("vec_id"), col("b").as("component")),
+        Seq("vec_id"), "left")
+      .select(col("vec_id"), coalesce(col("component"), col("vec_id"))
+        .as("component"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -327,85 +412,10 @@ object GraphQueries {
     // --------------------- scalable connected components (star ops)
     QueryDef(
       "connected_components_largestar",
-      (s, d) => {
-        val nodes = Tables.embeddings(s, d).filter(col("vec_id") < 300)
-          .select(col("vec_id"))
-        val selfLoops = nodes.select(col("vec_id").as("a"),
-          col("vec_id").as("b"))
-        // Large-star: every node links its strictly-larger neighbors to
-        // the minimum of its closed neighborhood; small-star: links its
-        // smaller-or-equal neighborhood to that minimum. Alternating the
-        // two converges to per-component stars in O(log n) rounds
-        // (Kiveris et al., "Connected Components in MapReduce and
-        // Beyond") — the scalable CC construction, vs the recursive-CTE
-        // label spread the (bounded) dedup_clusters oracle uses.
-        def largeStar(e: DataFrame): DataFrame = {
-          val adj = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-            .unionByName(selfLoops)
-          val mins = adj.groupBy(col("a")).agg(min(col("b")).as("m"))
-          // NO dedup here (r15): duplicates — (b, m) emitted once per
-          // smaller neighbor of b sharing the same neighborhood min,
-          // bounded by degree — pass through smallStar unchanged (its
-          // min-agg is duplicate-blind and its trailing distinct
-          // restores set form before the checksum), so the round's
-          // RESULT is identical while each round runs one exchange
-          // fewer (measured 0.55-0.62 -> 0.38-0.46 s/round at
-          // sf0.1/local[32]).
-          adj.join(mins, "a")
-            .filter(col("b") > col("a"))
-            .select(col("b").as("a"), col("m").as("b"))
-            .filter(col("a") =!= col("b"))
-        }
-        def smallStar(e: DataFrame): DataFrame = {
-          val adj = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-            .filter(col("b") <= col("a"))
-            .unionByName(selfLoops)
-          val mins = adj.groupBy(col("a")).agg(min(col("b")).as("m"))
-          adj.join(mins, "a")
-            .select(col("b").as("a"), col("m").as("b"))
-            .filter(col("a") =!= col("b")).distinct()
-        }
-        // driver-controlled fixpoint: each round is two bounded shuffle
-        // passes. localCheckpoint(eager) TRUNCATES LINEAGE — without it
-        // every round's plan re-derives all prior rounds and the loop
-        // goes exponential (at 100 TB: reliable checkpoint to storage).
-        // Convergence is a checksum equality, one cheap agg per round
-        // instead of two exceptAll shuffles. The 4th counter equals
-        // 1000003*sum(a) + sum(b), a linear combination of the 2nd and
-        // 3rd, so the test really compares (count, sum(a), sum(b)): a
-        // round that moves edges but keeps all three stops the loop
-        // early with a non-fixpoint labeling. No collision bound holds;
-        // only the oracle's check of the final labeling catches it.
-        def checksum(e: DataFrame): (Long, Long, Long, Long) = {
-          val r = e.agg(count(lit(1)), sum(col("a")), sum(col("b")),
-            sum(col("a") * 1000003L + col("b"))).head()
-          (r.getLong(0),
-            if (r.isNullAt(1)) 0L else r.getLong(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            if (r.isNullAt(3)) 0L else r.getLong(3))
-        }
-        var edges = knnEdges(s, d)
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct().localCheckpoint(true)
-        var sig = checksum(edges)
-        var converged = false
-        var rounds = 0
-        while (!converged && rounds < 12) {
-          val next = smallStar(largeStar(edges)).localCheckpoint(true)
-          val nextSig = checksum(next)
-          converged = nextSig == sig
-          edges = next
-          sig = nextSig
-          rounds += 1
-        }
-        val labeled = nodes
-          .join(edges.select(col("a").as("vec_id"), col("b").as("root")),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            coalesce(col("root"), col("vec_id")).as("component"))
-        labeled
-      },
+      (s, d) => starComponents(
+        Tables.embeddings(s, d).filter(col("vec_id") < 300)
+          .select(col("vec_id")),
+        knnEdges(s, d).select(col("src").as("a"), col("dst").as("b"))),
       Some(s"""WITH RECURSIVE $knnEdgesSql,
         |und AS (SELECT a, b FROM (
         |    SELECT least(src, dst) AS a, greatest(src, dst) AS b FROM edges)
@@ -419,15 +429,20 @@ object GraphQueries {
         |  SELECT u.b AS node, r.lbl FROM reach r JOIN und u ON u.a = r.node)
         |SELECT node AS vec_id, min(lbl) AS component
         |FROM reach GROUP BY node""".stripMargin),
-      "Connected components by alternating large-star/small-star to a " +
-        "driver-checked fixpoint — the O(log n)-round algorithm that " +
-        "computes CC at 100 TB where recursive label spreading needs " +
-        "O(diameter) passes. Each round is two map-side-combinable " +
-        "groupBy-min passes + equi-joins; state between rounds is one " +
-        "bounded edge list (monotonically star-ifying), and the final " +
-        "label of every node is the component minimum — exactly what " +
-        "the oracle's recursive reach computes independently. The " +
-        "same loop body scales by swapping persist for checkpoint."),
+      "Connected components by alternating large-star/small-star to an " +
+        "exact observed fixpoint (starComponents) — the O(log² n)-round " +
+        "algorithm that computes CC at 100 TB where recursive label " +
+        "spreading needs O(diameter) passes. Each round is one eager " +
+        "checkpoint: two star steps, each a min over a window " +
+        "partitioned by node (one exchange; a hub's neighbourhood is " +
+        "buffered in one window partition and can spill), then one " +
+        "(a, b) aggregate over the new and previous edges whose observed " +
+        "symmetric-difference count stops the loop at zero. No round " +
+        "runs a separate convergence job, and a graph that misses the " +
+        "O(log² m) round cap throws instead of returning a non-fixpoint " +
+        "labelling. The final label of every node is the component " +
+        "minimum — exactly what the oracle's recursive reach computes " +
+        "independently."),
 
     // ------------------------------------ multi-source BFS hop layers
     QueryDef(

@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pipelines.CurationPipeline
@@ -14,10 +11,11 @@ import graft.pipelines.CurationPipeline
 /** The composed curation pipeline: monotone stage counts, exact-dup
   * elimination, split integrity of the written output, and observe()
   * metrics agreeing with the files on disk. */
-class CurationPipelineSpec extends SparkSpec {
+class CurationPipelineSpec extends SparkSpec with TempDirs
+    with AdaptiveSparkPlanHelper {
 
   private lazy val out =
-    Files.createTempDirectory("graft_pipeline").toString + "/curated"
+    tempDir("graft_pipeline") + "/curated"
   private lazy val result = CurationPipeline.run(spark, sfDir, out)
 
   private def counts(r: CurationPipeline.Result) =
@@ -26,7 +24,7 @@ class CurationPipelineSpec extends SparkSpec {
 
   /** Runs the pipeline over `docs` written as a one-table corpus. */
   private def runOn(docs: DataFrame): CurationPipeline.Result = {
-    val dir = Files.createTempDirectory("graft_pipeline_in").toString
+    val dir = tempDir("graft_pipeline_in")
     docs.write.parquet(s"$dir/documents.parquet")
     CurationPipeline.run(spark, dir, s"$dir/curated")
   }
@@ -59,43 +57,29 @@ class CurationPipelineSpec extends SparkSpec {
 
   test("plan law: one run is one SQL execution, the write") {
     result // a first run warms the fixture's schema memo
-    val sc = spark.sparkContext
-    val done = ArrayBuffer.empty[String]
-    val sites = ArrayBuffer.empty[(Long, String)]
-    val jobExecs = ArrayBuffer.empty[Option[Long]]
+    val done = ArrayBuffer.empty[(String, QueryExecution)]
     val qel = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        done.synchronized(done += f)
+        done.synchronized(done += (f -> qe))
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        done.synchronized(done += s"failed $f")
+        done.synchronized(done += (s"failed $f" -> qe))
     }
-    val jobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobExecs.synchronized(jobExecs += Option(e.properties)
-          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
-          .map(_.toLong))
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart =>
-          sites.synchronized(sites += (x.executionId -> x.description))
-        case _ =>
-      }
-    }
-    ListenerBusDrain(sc)
     spark.listenerManager.register(qel)
-    sc.addSparkListener(jobs)
-    try CurationPipeline.run(spark, sfDir,
-      Files.createTempDirectory("graft_pipeline").toString + "/law")
-    finally {
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(jobs)
-      spark.listenerManager.unregister(qel)
-    }
-    assert(done.toSeq === Seq("command"))
-    assert(sites.size === 1, sites)
-    val (writeId, site) = sites.head
+    val (_, log) =
+      try JobLog.during(spark.sparkContext)(CurationPipeline.run(spark, sfDir,
+        tempDir("graft_pipeline") + "/law"))
+      finally spark.listenerManager.unregister(qel)
+    assert(done.map(_._1).toSeq === Seq("command"))
+    assert(log.executions.size === 1, log.executions)
+    val (writeId, site) = log.executions.head
     assert(site.startsWith("parquet at CurationPipeline.scala"), site)
-    assert(jobExecs.nonEmpty)
-    assert(jobExecs.forall(_.contains(writeId)), jobExecs)
+    assert(log.jobs.nonEmpty)
+    assert(log.jobs.forall(_.contains(writeId)), log.jobs)
+    // every fingerprint consumer reads one fp-partitioned exchange, so
+    // the winnow kernel's Generate appears once in the final plan
+    val plan = done.head._2.executedPlan
+    val generates = collect(plan) { case g: GenerateExec => g }
+    assert(generates.size === 1, plan.treeString)
   }
 
   test("stage counts are monotone and dedup removes the injected copies") {

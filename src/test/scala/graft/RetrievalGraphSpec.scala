@@ -174,8 +174,14 @@ class RetrievalGraphSpec extends SparkSpec {
 
   test("connected_components_largestar: edges never cross components, " +
     "roots are component minima") {
-    val lbl = byName("connected_components_largestar").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (cc, log) = JobLog.during(spark.sparkContext)(
+      byName("connected_components_largestar"))
+    // the fixpoint loop runs no job besides its eager checkpoints: the
+    // convergence count arrives with each checkpoint's own job
+    assert(log.jobs.nonEmpty)
+    assert(log.jobSites.forall(_.exists(
+      _.startsWith("localCheckpoint at graph.scala:"))), log.jobSites)
+    val lbl = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     undEdges.foreach { case (a, b) =>
       assert(lbl(a) == lbl(b), s"edge ($a,$b) crosses components")
     }
