@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
@@ -16,7 +17,85 @@ import graft.{QueryDef, Tables}
   */
 object Curation48Queries {
 
-  import Vector2Queries.{quant, quantSql, sqDist, sqDistSql}
+  import Vector2Queries.{centroidDists, nearestCentroid, quant, quantSql,
+    sqDist, sqDistSql}
+
+  /** The composed IVF-PQ search as a scan-local probe (the REPOSE
+    * pattern, ICDE 2021: each partition generates its candidates
+    * locally, one bounded top-k merge follows).  Coarse lists are the
+    * vectors with vec_id % 31 = 7, the PQ codebook is the first 8
+    * vectors (4 subspaces x 16 dims), the queries are vec_id < 6; all
+    * arithmetic is on the e6 integer grid.
+    *
+    *  1. One aggregate over the rows it needs builds a one-row index:
+    *     the coarse list `cl`, the codebook `cb` and the query panel
+    *     `qs`, where each query already carries its 2 nearest lists
+    *     (array_sort over (dist, cid), ties to the lowest list id).
+    *  2. That row is broadcast onto a second scan of the corpus.  Each
+    *     vector takes its list_id (nearestCentroid, the argmin Lloyd's
+    *     assign uses), explodes the queries and keeps the (query,
+    *     vector) pairs whose list the query probes, qid <> vec_id.
+    *  3. Only those candidates pay for PQ work: one lambda over the 4
+    *     subspaces picks each subspace's code by array_min over (dist,
+    *     cid, cvec) and sums the ADC distance sqDist(q_m, cb[code_m]_m).
+    *  4. The row_number window by qid keeps the top 5 by (adc, vec_id).
+    *
+    * Exchanges: the single-partition index aggregate and the qid window;
+    * the corpus side shuffles nothing.
+    *
+    * Plan traps.  (1) CollapseProject inlines an alias that a HOF
+    * lambda references, and the lambda then re-evaluates it per
+    * element: filtering the queries in a projection over the list_id
+    * one, `filter(qs, q -> array_contains(q.lists, list_id))`, puts the
+    * whole coarse argmin inside that lambda, once per query, and filter
+    * inference copies it into the join condition as well.  So list_id
+    * stays in a projection directly below the explode (a Generate does
+    * not collapse), the probe test runs after the explode, and the ADC
+    * lambda computes each code in place instead of reading an aliased
+    * `codes` array.  (2) The probe test is `exists(q.lists, l -> l =
+    * list_id)`, not the null-intolerant `array_contains(q.lists,
+    * list_id)`: from that, filter inference derives isnotnull(list_id)
+    * and pushes it through the Generate and the projection into the
+    * join condition, which then evaluates the coarse argmin a second
+    * time per vector. */
+  private def ivfPqTopk(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), quant(col("embedding")).as("qe"))
+    def sub(v: Column, m: Column): Column = slice(v, m * 16 + 1, lit(16))
+    def entry(id: String, v: String) =
+      struct(col("vec_id").as(id), col("qe").as(v))
+    val isList = pmod(col("vec_id"), lit(31)) === 7
+    val index = e.filter(isList || col("vec_id") < 8)
+      .agg(
+        collect_list(when(isList, entry("cid", "cvec"))).as("cl"),
+        collect_list(when(col("vec_id") < 8, entry("cid", "cvec"))).as("cb"),
+        collect_list(when(col("vec_id") < 6, entry("qid", "qe"))).as("qs"))
+      .select(col("cl"), col("cb"),
+        transform(col("qs"), q => struct(q.getField("qid").as("qid"),
+          q.getField("qe").as("qe"),
+          transform(slice(array_sort(centroidDists(q.getField("qe"),
+            col("cl"))), 1, 2), p => p.getField("cid")).as("lists")))
+          .as("qs"))
+    val adc = aggregate(sequence(lit(0), lit(3)), lit(0L), (acc, m) => {
+      val code = array_min(transform(col("cb"), c => struct(
+        sqDist(sub(col("qe"), m), sub(c.getField("cvec"), m)).as("dist"),
+        c.getField("cid").as("cid"), c.getField("cvec").as("cvec"))))
+      acc + sqDist(sub(col("q.qe"), m), sub(code.getField("cvec"), m))
+    })
+    e.crossJoin(broadcast(index))
+      .select(col("vec_id"), col("qe"), col("cb"), col("qs"),
+        nearestCentroid(col("qe"), col("cl")).getField("cid").as("list_id"))
+      .select(col("vec_id"), col("qe"), col("cb"), col("list_id"),
+        explode(col("qs")).as("q"))
+      .filter(exists(col("q.lists"), l => l === col("list_id")) &&
+        col("q.qid") =!= col("vec_id"))
+      .select(col("q.qid").as("qid"), col("vec_id"), adc.as("adc_dist"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid"))
+          .orderBy(col("adc_dist"), col("vec_id"))).cast("long"))
+      .filter(col("rk") <= 5)
+      .select(col("qid"), col("vec_id"), col("rk"), col("adc_dist"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -120,79 +199,7 @@ object Curation48Queries {
     // ------------------------------------------------ IVF-PQ combined
     QueryDef(
       "ivf_pq_topk",
-      (s, d) => {
-        // The composed index: coarse quantizer routes each vector to an
-        // inverted list; queries probe their 2 nearest lists; candidates
-        // are scored by PQ asymmetric distance (4 code lookups against a
-        // per-query distance table), never by raw vectors.  Codebooks
-        // and centroids are deterministic subsamples (swap-in point for
-        // kmeans_cluster_assign's iterated centroids, as pq_encode
-        // documents); all arithmetic on the e6 integer grid.
-        // the quantized scan feeds FIVE consumers (cents, assign, sub,
-        // probes, dt) — persist it once per the cache contract so the
-        // parquet scan + float->e6 quantization run once, not five
-        // times (measured 2.1-2.9 s -> see PLANS.md)
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), quant(col("embedding")).as("qe"))
-          .persist()
-        val cents = e.filter(pmod(col("vec_id"), lit(31)) === 7)
-          .select(col("vec_id").as("ivf_cid"), col("qe").as("cvec"))
-        // coarse assignment: min integer L2, ties to the lowest list id
-        val assign = e.crossJoin(broadcast(cents))
-          .select(col("vec_id"),
-            struct(sqDist(col("qe"), col("cvec")).as("dist"),
-              col("ivf_cid")).as("dc"))
-          .groupBy(col("vec_id"))
-          .agg(min(col("dc")).as("m"))
-          .select(col("vec_id"), col("m.ivf_cid").as("list_id"))
-        // PQ codes: 4 subspaces x 16 dims, codebook = first 8 vectors
-        // the subvector explode feeds three consumers (cb, codes, dt)
-        val sub = e.select(col("vec_id"),
-            explode(sequence(lit(0), lit(3))).as("m"), col("qe"))
-          .select(col("vec_id"), col("m"),
-            expr("slice(qe, m * 16 + 1, 16)").as("sv"))
-          .persist()
-        val cb = sub.filter(col("vec_id") < 8)
-          .select(col("m"), col("vec_id").as("cid"), col("sv").as("csub"))
-        val codes = sub.join(broadcast(cb), "m")
-          .select(col("vec_id"), col("m"),
-            struct(sqDist(col("sv"), col("csub")).as("dist"),
-              col("cid")).as("dc"))
-          .groupBy(col("vec_id"), col("m"))
-          .agg(min(col("dc")).as("mm"))
-          .select(col("vec_id"), col("m"), col("mm.cid").as("code"))
-        // queries: 6 probes x their top-2 coarse lists
-        val probes = e.filter(col("vec_id") < 6).crossJoin(broadcast(cents))
-          .select(col("vec_id").as("qid"),
-            sqDist(col("qe"), col("cvec")).as("cdist"), col("ivf_cid"))
-          .withColumn("crn", row_number().over(
-            Window.partitionBy(col("qid"))
-              .orderBy(col("cdist"), col("ivf_cid"))))
-          .filter(col("crn") <= 2)
-          .select(col("qid"), col("ivf_cid").as("list_id"))
-        // per-query ADC distance tables: 6 x 4 x 8 cells, broadcast
-        val dt = sub.filter(col("vec_id") < 6)
-          .select(col("vec_id").as("qid"), col("m").as("dm"),
-            col("sv").as("qsv"))
-          .join(broadcast(cb), col("dm") === col("m"))
-          .select(col("qid"), col("dm"), col("cid"),
-            sqDist(col("qsv"), col("csub")).as("dist"))
-        // candidates = union of probed lists; scored by code lookups
-        val cand = probes.join(assign, "list_id")
-          .filter(col("qid") =!= col("vec_id"))
-          .select(col("qid"), col("vec_id"))
-        cand.join(codes, "vec_id")
-          .join(broadcast(dt),
-            col("dm") === col("m") && col("cid") === col("code") &&
-              dt("qid") === cand("qid"))
-          .groupBy(cand("qid").as("qid"), col("vec_id"))
-          .agg(sum(col("dist")).as("adc_dist"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("qid"))
-              .orderBy(col("adc_dist"), col("vec_id"))).cast("long"))
-          .filter(col("rk") <= 5)
-          .select(col("qid"), col("vec_id"), col("rk"), col("adc_dist"))
-      },
+      ivfPqTopk,
       Some(s"""WITH q AS (SELECT vec_id,
         |    ${quantSql.format("embedding")} AS qe FROM embeddings),
         |cents AS (SELECT vec_id AS ivf_cid, qe AS cvec FROM q
@@ -234,12 +241,16 @@ object Curation48Queries {
         |  SELECT *, row_number() OVER (PARTITION BY qid
         |    ORDER BY adc_dist, vec_id)::BIGINT AS rk FROM adc)
         |WHERE rk <= 5""".stripMargin),
-      "The composed IVF-PQ index (Jegou et al., TPAMI 2011): coarse " +
-        "quantizer routes vectors to inverted lists (broadcast " +
-        "centroids, one narrow pass), queries probe their 2 nearest " +
-        "lists, and candidates are scored by asymmetric distance — 4 " +
-        "table lookups against a broadcast per-query 4x8 distance " +
-        "table — never by raw vectors.  At 100 TB list_id is the " +
+      "The composed IVF-PQ index (Jegou et al., TPAMI 2011) as a " +
+        "scan-local probe: one aggregate builds a one-row index (the " +
+        "|corpus|/31 coarse centroids, the 8-vector PQ codebook and the " +
+        "6 queries with their 2 nearest lists), broadcast onto the " +
+        "corpus scan; each vector takes its nearest list, pairs with the " +
+        "queries that probe it, and only those candidates are PQ-encoded " +
+        "and scored by asymmetric distance (4 codeword lookups), never " +
+        "by raw vectors; one qid window keeps the top 5.  Two exchanges " +
+        "(the single-partition index aggregate, the qid window); the " +
+        "corpus side never shuffles.  At 100 TB list_id is the " +
         "write-time partition column and the probe reads 2 partitions " +
         "of 4-byte codes: candidate I/O ~ lists-probed x code bytes, " +
         "while ann_ivf_topk (exact re-rank) and pq_adc_topk (full-" +

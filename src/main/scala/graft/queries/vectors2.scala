@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.functions.SqDist
 import graft.functions.VectorOps._
+import org.apache.spark.sql.graftx.Bridge
 
 /** Embedding-space curation operators, round 4: random-projection
   * dimensionality reduction, deterministic fixed-point k-means (the
@@ -33,38 +35,48 @@ object Vector2Queries {
   private[queries] val quantSql =
     "list_transform(%s, x -> floor(x::DOUBLE * 1000000)::BIGINT)"
 
-  /** Integer squared L2 distance between two array<long>. */
+  /** Integer squared L2 distance between two array<long>: the native
+    * codegen kernel [[SqDist]] (NULL on a NULL element or a length
+    * mismatch, overflow raising under ANSI).  [[sqDistSql]] is its
+    * DuckDB twin for the oracles. */
   private[queries] def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
+    Bridge.column(SqDist(Bridge.expression(a), Bridge.expression(b)))
 
   private[queries] def sqDistSql(a: String, b: String): String =
     s"list_reduce(list_prepend(0::BIGINT, list_transform(list_zip($a, $b), " +
       s"p -> (p[1] - p[2]) * (p[1] - p[2]))), (acc, x) -> acc + x)"
 
+  /** Each entry of the centroid array `cl` (array<struct<cid, cvec>>)
+    * scored against `v`: array<struct<dist, cid>>, whose struct ordering
+    * is (integer squared distance, then the lowest cid). */
+  private[queries] def centroidDists(v: Column, cl: Column): Column =
+    transform(cl, c => struct(sqDist(v, c.getField("cvec")).as("dist"),
+      c.getField("cid").as("cid")))
+
+  /** Nearest centroid of `v` in `cl` as struct(dist, cid), ties to the
+    * lowest cid; NULL on an empty `cl`.  Costs |cl| distances per row:
+    * k <= 8 for the Lloyd queries, |corpus|/31 for IVF coarse lists
+    * (ivf_pq_topk). */
+  private[queries] def nearestCentroid(v: Column, cl: Column): Column =
+    array_min(centroidDists(v, cl))
+
   /** One Lloyd assignment step: nearest centroid by integer squared
-    * distance, ties to the lowest centroid id. Centroid sets are k rows
-    * — always broadcast; the points side never shuffles. */
+    * distance, ties to the lowest centroid id. */
   private[queries] def assign(points: DataFrame, cents: DataFrame): DataFrame = {
-    // Scan-local argmin (r15): the k centroids collapse to ONE array
-    // row (bounded: k <= 8 everywhere) broadcast to the points side,
-    // and each point picks its nearest centroid with array_min over a
-    // per-row transform — struct ordering (dist, cid) is exactly the
-    // old min(struct(dist, cid)) groupBy, ties to the lowest cid, so
-    // the assignment is row-identical (oracle re-proves it).  The old
-    // form exploded k rows per point and re-aggregated them with a
-    // POINTS-SIZED exchange per assign pass; this form shuffles
-    // nothing on the points side at any scale — only the k-row
-    // centroid collect pays a single tiny exchange.  An empty centroid
-    // frame still aggregates to one empty-array row; dropping that row
-    // assigns no rows (no centroid, no assignment) instead of one
-    // null-cluster row per point.
+    // Scan-local argmin: the k centroids collapse to ONE array row
+    // (k <= 8 at every call site) broadcast to the points side, and
+    // each point picks its nearestCentroid — struct ordering (dist,
+    // cid) is exactly a min(struct(dist, cid)) groupBy, ties to the
+    // lowest cid.  The points side shuffles nothing at any scale; only
+    // the k-row centroid collect pays a single tiny exchange.  An empty
+    // centroid frame still aggregates to one empty-array row; dropping
+    // that row assigns no rows (no centroid, no assignment) instead of
+    // one null-cluster row per point.
     val cl = cents.agg(collect_list(struct(col("cid"), col("cvec"))).as("cl"))
       .filter(size(col("cl")) > 0)
     points.crossJoin(broadcast(cl))
-      .select(col("vec_id"), col("qe"), array_min(transform(col("cl"),
-        c => struct(sqDist(col("qe"), c.getField("cvec")).as("dist"),
-          c.getField("cid").as("cid")))).as("m"))
+      .select(col("vec_id"), col("qe"),
+        nearestCentroid(col("qe"), col("cl")).as("m"))
       .select(col("vec_id"), col("qe"),
         col("m.cid").as("cluster"), col("m.dist").as("dist"))
   }

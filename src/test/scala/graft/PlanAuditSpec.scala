@@ -121,7 +121,9 @@ class PlanAuditSpec extends SparkSpec {
     "knn_label_accuracy",          // bounded 300-vector kNN slice
     "zipf_coverage_curve",         // broadcast of the 1-row corpus total
     "abc_part_classification",     // broadcast of the 1-row revenue total
-    "ivf_pq_topk",                 // broadcast ~16-row coarse centroid set
+    "ivf_pq_topk",                 // broadcast ONE-row index: |corpus|/31
+                                   // coarse centroids, the 8-vector
+                                   // codebook and the 6-query panel
     "perceptron_quality_epochs",   // broadcast 1-row inter-epoch weights
     "tpch_q22_sales_opportunity",  // broadcast 1-row global-average gate
     "tpch_q11_important_stock",    // broadcast 1-row fraction gate (the
@@ -134,9 +136,8 @@ class PlanAuditSpec extends SparkSpec {
                                    // equi-joins)
     "ann_graph_hier_topk",         // entry routing: broadcast 10-query
                                    // panel x ~|corpus|/31 centroid grid
-                                   // (the IVF coarse-quantizer product,
-                                   // same shape as ivf_pq_topk); the
-                                   // graph build and search rounds are
+                                   // (the IVF coarse-quantizer product);
+                                   // the graph build and search rounds are
                                    // all equi-joins over the WRITTEN
                                    // edge table
     "ann_index_insert",            // same routing product, 20-row
@@ -277,7 +278,8 @@ class PlanAuditSpec extends SparkSpec {
     "variant_shred_props" -> 1,      // one bounded event-type rollup
     "best_of_n_reward_curve" -> 2,   // tpl window + bounded rollups
     "cross_source_novelty" -> 2,     // gram agg + source rollup
-    "dynamic_partition_prune_join" -> 3) // year-dim distinct + fact agg
+    "dynamic_partition_prune_join" -> 3, // year-dim distinct + fact agg
+    "ivf_pq_topk" -> 2)              // 1-partition index agg + qid window
 
   test("round-5 operators stay inside their documented shuffle budgets") {
     val offenders = exchangeBudgets.toSeq.sortBy(_._1).flatMap {
