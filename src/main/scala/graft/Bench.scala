@@ -9,22 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // old events fixtures carry TIMESTAMP(NANOS) parquet; session-wide so no
-      // reader ever mutates a live session conf (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    // ERROR, not WARN: the driver probe reads the LAST ~2000 chars of
-    // output, so any post-result warning flood (WindowExec, shuffle
-    // spill, shutdown) can push the single JSON line out of the parse
-    // window — r3..r5 all show parsed:null from exactly this.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     // JVM/codegen warmup outside the timed loop
     try SparkEntry.entry(spark).queryExecution.toRdd.count()
     catch { case _: Throwable => () }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for the named queries
   * (or all), for checking pushdown (PushedFilters/ReadSchema), join
   * strategy (BroadcastHashJoin vs SortMergeJoin), and WholeStageCodegen
@@ -13,16 +11,7 @@ object Explain {
       else Seq("retrieval_eval_detail", "cosine_topk", "equijoin_meta",
         "dedup_minhash_lsh", "tumbling_window_counts", "scan_text_lines",
         "ann_lsh_topk", "text_langid")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // old events fixtures carry TIMESTAMP(NANOS) parquet; session-wide so no
-      // reader ever mutates a live session conf (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     names.foreach { n =>
       println(s"\n========== $n ==========")

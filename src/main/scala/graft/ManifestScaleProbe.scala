@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 
@@ -26,13 +25,7 @@ object ManifestScaleProbe {
     val nSmall = if (args.length > 1) args(1).toInt else 100
     val factor = if (args.length > 2) args(2).toInt else 100
     val nBig = nSmall * factor
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     import spark.implicits._
 
     // probe-scale auto-group seams: same switch, smaller constants

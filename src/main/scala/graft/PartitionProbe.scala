@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 
@@ -25,23 +25,10 @@ object PartitionProbe {
     val scratch = args(1)
     val factor = args(2).toInt
     val reps = args(3).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
-    val docs = Tables.documents(spark, base)
-    val replicated = (0 until factor).map { i =>
-      docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        (if (i == 0) col("text") else concat(lit(s"v$i "), col("text")))
-          .as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
+    val replicated =
+      ScaleProbe.replicateDocuments(Tables.documents(spark, base), factor)
 
     // layout A: hive-style directory partitioning on lang
     val hiveDir = s"$scratch/hive_lang"

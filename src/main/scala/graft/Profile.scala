@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-profiler: runs each named query N times, printing per-iteration
   * seconds — separates one-time codegen/compile cost from steady state.
   * Usage: runMain graft.Profile <sfDir> <reps> <query ...> */
@@ -10,21 +8,7 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      // shuffle partitions default to the core count (the Bench
-      // convention); SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for
-      // partition-sensitivity sweeps at a fixed core count
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.sql.session.timeZone", "UTC")
-      // old events fixtures carry TIMESTAMP(NANOS) parquet; session-wide so no
-      // reader ever mutates a live session conf (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     // SPARK_GRAFT_PHASES=1: per-rep attribution — DataFrame build
     // (driver-side fn() incl. parquet schema resolution), Catalyst

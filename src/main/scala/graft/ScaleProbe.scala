@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence harness: replicates the documents/embeddings fixture
@@ -16,33 +16,27 @@ import org.apache.spark.sql.functions._
   * parquet rewrite; the old nanos fixture did not).
   */
 object ScaleProbe {
+  /** `factor` copies of the documents table: copy i offsets `doc_id`
+    * by i·10⁷ and prefixes its text with `v$i ` (copy 0 is verbatim),
+    * so copies are near- but not exact duplicates. */
+  def replicateDocuments(docs: DataFrame, factor: Int): DataFrame =
+    (0 until factor).map { i =>
+      docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
+        (if (i == 0) col("text") else concat(lit(s"v$i "), col("text")))
+          .as("text"),
+        col("lang"), col("source"), col("n_chars"))
+    }.reduce(_ unionByName _)
+
   def main(args: Array[String]): Unit = {
     val base = args(0)
     val scratch = args(1)
     val factor = args(2).toInt
     val reps = args(3).toInt
     val names = args.drop(4).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // old events fixtures carry TIMESTAMP(NANOS) parquet; session-wide so no
-      // reader ever mutates a live session conf (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
-    val docs = Tables.documents(spark, base)
-    val reps10 = (0 until factor).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        (if (i == 0) col("text")
-         else concat(lit(s"v$i "), col("text"))).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
-    reps10.write.mode("overwrite").parquet(s"$scratch/documents.parquet")
+    replicateDocuments(Tables.documents(spark, base), factor)
+      .write.mode("overwrite").parquet(s"$scratch/documents.parquet")
     val emb = Tables.embeddings(spark, base)
     (0 until factor).map { i =>
       emb.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),

@@ -67,8 +67,7 @@ object Tables {
     *  - TIMESTAMP(NANOS) parquet (old fixtures): Spark rejects it
     *    (PARQUET_TYPE_ILLEGAL) unless read as long via
     *    `spark.sql.legacy.parquet.nanosAsLong` — set at SESSION BUILD
-    *    time by every graft entrypoint (Verify/Bench/Profile/Explain/
-    *    ScaleProbe/SparkSpec), never flipped here: a reader mutating a
+    *    time by `GraftSession`, never flipped here: a reader mutating a
     *    live session conf could be observed half-configured by a
     *    concurrent reader. The values are micro-precision so
     *    `ts div 1000` + timestamp_micros is lossless.

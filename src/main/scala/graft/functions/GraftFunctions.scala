@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-surface registration for the engine's native expressions, so
   * `spark.sql("SELECT cosine_similarity(a, b) ...")` works like a
-  * built-in.
-  *
-  * Two entry points:
-  *  - [[GraftExtensions]]: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    — the standard deploy-time hook (SparkSessionExtensions.injectFunction).
-  *  - [[GraftFunctions.register]]: imperative registration on a live
-  *    session (used by tests and by hosts that didn't set the conf).
+  * built-in. [[GraftExtensions]] injects them
+  * (SparkSessionExtensions.injectFunction) into every session
+  * `graft.GraftSession` builds.
   */
 object GraftFunctions {
 
@@ -169,12 +164,6 @@ object GraftFunctions {
       (FunctionIdentifier("simhash60"), simhash60Info, simhash60Builder),
       (FunctionIdentifier("common_prefix_len"), commonPrefixLenInfo,
         commonPrefixLenBuilder))
-
-  /** Imperative registration on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, _, builder) =>
-      org.apache.spark.sql.graftx.Bridge.registerFunction(spark, ident.funcName, builder)
-    }
 }
 
 /** `spark.sql.extensions` entry point: SQL function surface, the

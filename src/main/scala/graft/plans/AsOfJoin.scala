@@ -12,8 +12,8 @@ import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** Whole-operator as-of join as a first-class physical operator: logical
-  * node + planner strategy + SparkPlan, registered through the public
-  * ExperimentalMethods / SparkSessionExtensions hooks.
+  * node + planner strategy + SparkPlan; `GraftExtensions` injects the
+  * strategy (SparkSessionExtensions.injectPlannerStrategy).
   *
   * Semantics (reference: the epoch->latest-checkpoint consumption loop,
   * train_adapters/create_all_models.py:54-63): for each left row, the
@@ -36,12 +36,12 @@ import org.apache.spark.sql.types.LongType
 object AsOfJoin {
 
   /** Left as-of join `left` with `right`, carrying `rightValue` from the
-    * latest right row at-or-before each left row's time. */
+    * latest right row at-or-before each left row's time. Planned on a
+    * session that loads `GraftExtensions` (`graft.GraftSession`). */
   def latest(left: DataFrame, leftKey: String, leftTime: String,
       right: DataFrame, rightKey: String, rightTime: String,
       rightValue: String, outName: String): DataFrame = {
     val spark = left.sparkSession
-    Bridge.withStrategy(spark, AsOfJoinStrategy)
     val lp = Bridge.logicalPlan(left)
     val rp = Bridge.logicalPlan(right)
     def attr(p: LogicalPlan, n: String): Attribute =

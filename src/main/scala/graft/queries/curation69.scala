@@ -381,8 +381,6 @@ object Curation69Queries {
       "sql_catalog_time_travel_read",
       (s, d) => {
         val root = table(s, d)
-        s.conf.set("spark.sql.catalog.graft",
-          "graft.sources.v2.GraftCatalog")
         val q = graft.sources.v2.GraftSql.sql(s,
           s"SELECT lang, count(*) AS n_docs, " +
             "sum(n_chars) AS sum_n_chars " +

@@ -86,8 +86,6 @@ object Curation70Queries {
     * commit after the connector seed is SQL text. */
   private def table(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqldmltab") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       val docs = Tables.documents(s, d)
       docs.write.format("graft-table").option("keyCol", "doc_id")
         .option("numFiles", "4").save(root)

@@ -23,8 +23,6 @@ object Curation71Queries {
     * ALTER TABLE ADD CONSTRAINT — no connector seed anywhere. */
   private def createdTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlcreate") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_create_docs")
       GraftSql.sql(s,
@@ -49,8 +47,6 @@ object Curation71Queries {
   /** CTAS table: created AND filled by one statement. */
   private def ctasTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlctas") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_ctas_docs")
       GraftSql.sql(s,
@@ -65,8 +61,6 @@ object Curation71Queries {
     * carries a residual predicate beside the key equality. */
   private def compoundTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlcompound") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
@@ -86,8 +80,6 @@ object Curation71Queries {
   /** IN-subquery delete table (the decontamination shape). */
   private def decontamTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqldecontam") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
@@ -103,8 +95,6 @@ object Curation71Queries {
   /** Schema-evolution merge table: a `quality` column born by MERGE. */
   private def evolveTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlevolve") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
@@ -123,8 +113,6 @@ object Curation71Queries {
     * column, one `SET props.nc = ...` statement. */
   private def nestedTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlnested") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d)
         .selectExpr("doc_id", "lang",
           "named_struct('src', source, 'nc', n_chars) AS props")
@@ -143,8 +131,6 @@ object Curation71Queries {
     * UPDATE and one SQL DELETE — both deletion-vector commits. */
   private def morDmlTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlmordml") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       GraftSql.sql(s, s"ALTER TABLE graft.`$root` " +
@@ -160,8 +146,6 @@ object Curation71Queries {
     * half (re-scored) in ONE statement. */
   private def replaceWhereTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlreplwhere") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
@@ -179,8 +163,6 @@ object Curation71Queries {
     * refill with the re-keyed survivors — all SQL. */
   private def truncateTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqltrunc") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_trunc_docs")
       GraftSql.sql(s,

@@ -27,8 +27,6 @@ object Curation72Queries {
     * copy-on-write fallback. */
   private def morKeyInTable(s: SparkSession, d: String): String =
     Scratch.buildOnce(s, d, "sqlmorkeyin") { root =>
-      s.conf.set("spark.sql.catalog.graft",
-        "graft.sources.v2.GraftCatalog")
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       GraftSql.sql(s, s"ALTER TABLE graft.`$root` " +

@@ -17,8 +17,7 @@ import graft.sources.VersionedTable
   * [[TableCatalog]], Delta's `delta.`/path/to/table`` architecture:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft",
-  *     "graft.sources.v2.GraftCatalog")
+  *   val spark = graft.GraftSession(4) // registers this catalog as `graft`
   *   spark.sql("SELECT * FROM graft.`/data/corpus`")
   *   spark.sql("SELECT * FROM graft.`/data/corpus` VERSION AS OF 3")
   *   spark.sql("SELECT * FROM graft.`/data/corpus` TIMESTAMP AS OF

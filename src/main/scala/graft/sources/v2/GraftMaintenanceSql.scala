@@ -3,7 +3,7 @@ package graft.sources.v2
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParseException, ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
@@ -288,14 +288,25 @@ final case class GraftFsckCommand(root: String, dryRun: Boolean)
 
 /** Delegating parser (Delta's DeltaSqlParser construction): the
   * maintenance mini-grammar first, everything else verbatim to the
-  * session's ordinary parser. */
+  * session's ordinary parser — parameterized `spark.sql(text, args)`
+  * included: the interface's default `parsePlanWithParameters` drops
+  * the parameters, so it is forwarded explicitly. */
 final class GraftSqlParser(session: SparkSession,
     delegate: ParserInterface) extends ParserInterface {
   @throws[ParseException]
-  override def parsePlan(sqlText: String): LogicalPlan = {
+  override def parsePlan(sqlText: String): LogicalPlan =
+    graftPlan(sqlText, delegate.parsePlan(sqlText))
+
+  @throws[ParseException]
+  override def parsePlanWithParameters(sqlText: String,
+      params: ParameterContext): LogicalPlan =
+    graftPlan(sqlText, delegate.parsePlanWithParameters(sqlText, params))
+
+  private def graftPlan(sqlText: String, parse: => LogicalPlan)
+      : LogicalPlan = {
     GraftMaintenanceSql.fromText(session, sqlText)
       .foreach(cmd => return cmd)
-    val parsed = delegate.parsePlan(sqlText)
+    val parsed = parse
     // MERGE ... WITH SCHEMA EVOLUTION over a graft target must convert
     // BEFORE analysis: the analyzer's assignment resolution throws on
     // the source-born column (it cannot resolve against the

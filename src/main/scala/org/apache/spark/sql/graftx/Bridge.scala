@@ -21,24 +21,6 @@ object Bridge {
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Register a function builder on a live session's FunctionRegistry
-    * (the imperative twin of SparkSessionExtensions.injectFunction). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
-
-  /** Add a planner strategy to a live session (imperative twin of
-    * SparkSessionExtensions.injectPlannerStrategy; public
-    * ExperimentalMethods surface, idempotent). */
-  def withStrategy(spark: org.apache.spark.sql.SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(strategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ strategy
-  }
-
   /** Wrap a (resolved) logical plan as a DataFrame. */
   def dataFrame(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

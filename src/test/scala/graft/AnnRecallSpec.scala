@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * runs before trusting an index. The oracle pins each query's OUTPUT;
   * this pins the RELATIONSHIP between the approximate and exact
   * operators, which no single-query check can see. */
-class AnnRecallSpec extends SparkSpec {
+class AnnRecallSpec extends SparkSpec with TempDirs {
 
   private def byName(name: String) =
     SparkEntry.registry.find(_.name == name).get.fn(spark, sfDir)
@@ -239,8 +239,7 @@ class AnnRecallSpec extends SparkSpec {
       .toDF("cid", "ce").persist()
     // the SHIPPING construction, not a replica: same NN-descent build
     // the registry materializes, over this corpus
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ann_clustered").toString
+    val base = tempDir("graft_ann_clustered")
     Curation56Queries.nnDescentOver(spark, clustered, base, 300L)
     val edges = spark.read.parquet(s"$base/r4")
     val und = edges.unionByName(

@@ -17,9 +17,7 @@ class BucketedJoinSpec extends SparkSpec {
       .fn(spark, sfDir).queryExecution.toRdd.count()
     val tag =
       s"${Scratch.tag(spark.sparkContext.applicationId)}_${Scratch.tag(sfDir)}"
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table(s"graft_li_by_orderkey_$tag")
         .join(spark.table(s"graft_ord_by_orderkey_$tag"),
           col("l_orderkey") === col("o_orderkey"))
@@ -31,8 +29,7 @@ class BucketedJoinSpec extends SparkSpec {
         s"bucketed+sorted layout should not re-sort:\n$plan")
       // and it's not just an empty plan — the join actually matches
       assert(joined.count() > 0)
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("bucketed join values equal the raw-parquet join") {

@@ -22,8 +22,7 @@ class BucketingSpec extends SparkSpec {
       .mode("overwrite").saveAsTable("lineitem_b")
 
     // disable auto-broadcast so the join would otherwise shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("lineitem_b")
         .join(spark.table("orders_b"),
           col("l_orderkey") === col("o_orderkey"))
@@ -48,7 +47,6 @@ class BucketingSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1))).toMap
       assert(got === expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }

@@ -21,21 +21,11 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
   *  3. plans stay result-identical with CBO on/off (cost changes the
   *     shape, never the answer).
   *
-  * Conf mutations follow the repo spec convention (set + restore in
-  * finally, BucketingSpec.scala:25); tables are managed in the default
-  * warehouse and dropped after, so no state escapes the suite.
+  * Conf mutations go through SparkSpec.withConf; tables are managed in
+  * the default warehouse and dropped after, so no state escapes the
+  * suite.
   */
 class CboSpec extends SparkSpec {
-
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   private def setup(): Unit = {
     spark.sql("DROP TABLE IF EXISTS cbo_lineitem")
@@ -55,7 +45,7 @@ class CboSpec extends SparkSpec {
 
   test("ANALYZE lands an exact rowCount in optimized-plan stats") {
     setup()
-    try withConfs("spark.sql.cbo.enabled" -> "true") {
+    try withConf("spark.sql.cbo.enabled" -> "true") {
       val exact = spark.table("cbo_lineitem").count()
       val stats = spark.table("cbo_lineitem")
         .queryExecution.optimizedPlan.stats
@@ -85,12 +75,12 @@ class CboSpec extends SparkSpec {
       val confs = Seq(
         "spark.sql.autoBroadcastJoinThreshold" -> "10240",
         "spark.sql.adaptive.enabled" -> "false")
-      withConfs(confs :+ ("spark.sql.cbo.enabled" -> "true"): _*) {
+      withConf(confs :+ ("spark.sql.cbo.enabled" -> "true"): _*) {
         val bhj = joinPlan.collect { case j: BroadcastHashJoinExec => j }
         assert(bhj.nonEmpty,
           s"CBO on: expected BroadcastHashJoin, got\n$joinPlan")
       }
-      withConfs(confs :+ ("spark.sql.cbo.enabled" -> "false"): _*) {
+      withConf(confs :+ ("spark.sql.cbo.enabled" -> "false"): _*) {
         val smj = joinPlan.collect { case j: SortMergeJoinExec => j }
         assert(smj.nonEmpty,
           s"CBO off: expected SortMergeJoin, got\n$joinPlan")
@@ -109,16 +99,10 @@ class CboSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("q"))
         .orderBy(col("o_orderstatus"))
         .collect().toSeq
-      val off = withConfsValue("spark.sql.cbo.enabled" -> "false")(run)
-      val on = withConfsValue("spark.sql.cbo.enabled" -> "true",
+      val off = withConf("spark.sql.cbo.enabled" -> "false")(run)
+      val on = withConf("spark.sql.cbo.enabled" -> "true",
         "spark.sql.cbo.joinReorder.enabled" -> "true")(run)
       assert(on == off, "CBO must be semantics-preserving")
     } finally teardown()
-  }
-
-  private def withConfsValue[T](pairs: (String, String)*)(body: => T): T = {
-    var out: Option[T] = None
-    withConfs(pairs: _*) { out = Some(body) }
-    out.get
   }
 }

@@ -67,7 +67,6 @@ class CommonPrefixLenSpec extends SparkSpec {
   }
 
   test("registered SQL surface: common_prefix_len works in spark.sql") {
-    graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT common_prefix_len('prefix cache', 'prefix match') AS l")
       .collect().head.getLong(0)

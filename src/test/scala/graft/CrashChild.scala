@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 import graft.sources.VersionedTable.MatchedUpdate
@@ -23,14 +22,7 @@ import graft.sources.VersionedTable.MatchedUpdate
 object CrashChild {
   def main(args: Array[String]): Unit = {
     val root = args(0); val op = args(1); val kill = args(2)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-crash-$op")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(2)
     import spark.implicits._
     val halt: () => Unit = () => Runtime.getRuntime.halt(42)
     kill match {

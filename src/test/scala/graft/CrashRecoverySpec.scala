@@ -35,24 +35,9 @@ class CrashRecoverySpec extends SparkSpec {
     ()
   }
 
-  private val javaBin = s"${System.getProperty("java.home")}/bin/java"
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   /** Run the child to its halt; returns its exit code. */
   private def crash(root: String, op: String, kill: String): Int = {
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.CrashChild", root, op, kill)).toIndexedSeq
-    val p = new ProcessBuilder(cmd: _*).inheritIO().start()
+    val p = ChildJvm.start("graft.CrashChild", root, op, kill)
     val done = p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) {
       // never leak a live Spark child still holding the shared root

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{RewriteTokenCount, SwKernel}
+import graft.functions.{RewriteTokenCount, SwKernel, TokenCountWs}
 import graft.functions.TokenCountKernel.tokenCount
 
 /** Batch-4 invariants: Smith-Waterman laws, token-count kernel parity
@@ -69,43 +69,44 @@ class Curation10Spec extends SparkSpec {
   // ------------------------------------------------ token_count
 
   test("token_count kernel equals size(split) on fixture and edges") {
-    val fixture = Tables.documents(spark, sfDir)
-      .select(size(split(col("text"), " ")).as("viaSplit"),
-        tokenCount(col("text")).as("viaKernel"))
-      .filter(col("viaSplit") =!= col("viaKernel"))
-    assert(fixture.count() === 0)
     import spark.implicits._
+    val fixture = Tables.documents(spark, sfDir).select(col("text").as("t"))
     val edges = Seq("", " ", "a", "a ", " a", "a  b", "héllo wörld",
-      "多字节 字符 test")
-    val got = edges.toDF("t")
-      .select(size(split(col("t"), " ")).as("s"),
-        tokenCount(col("t")).as("k")).collect()
-    got.foreach(r => assert(r.getInt(0) === r.getInt(1)))
+      "多字节 字符 test").toDF("t")
+    for (texts <- Seq(fixture, edges)) {
+      // the reference must stay size(split): plan it without the rewrite
+      val viaSplit =
+        withConf(SparkSpec.ExcludedRules -> RewriteTokenCount.ruleName) {
+          val ref = texts.select(col("t"), size(split(col("t"), " ")))
+          assert(optimizedExprs(ref) { case k: TokenCountWs => k }.isEmpty)
+          ref.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+        }
+      val viaKernel = texts.select(col("t"), tokenCount(col("t")))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(viaKernel === viaSplit)
+    }
   }
 
   test("RewriteTokenCount rewrites the space form and only that form") {
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = before :+ RewriteTokenCount
-    try {
-      val q = Tables.documents(spark, sfDir)
-        .select(size(split(col("text"), " ")).as("n"))
-      val plan = q.queryExecution.optimizedPlan.toString
-      assert(plan.contains("token_count"), s"not rewritten:\n$plan")
-      assert(!plan.contains("split"), s"split survived:\n$plan")
-      // rewritten plan computes identical values
-      val viaRule = q.agg(sum(col("n"))).head().getLong(0)
-      spark.experimental.extraOptimizations = before
-      val plain = Tables.documents(spark, sfDir)
-        .select(size(split(col("text"), " ")).as("n"))
-        .agg(sum(col("n"))).head().getLong(0)
-      assert(viaRule === plain)
-      // negative: regex separators are left alone
-      spark.experimental.extraOptimizations = before :+ RewriteTokenCount
-      val negative = Tables.documents(spark, sfDir)
-        .select(size(split(col("text"), "\\s+")).as("n"))
-        .queryExecution.optimizedPlan.toString
-      assert(!negative.contains("token_count"), s"over-matched:\n$negative")
-    } finally spark.experimental.extraOptimizations = before
+    def spaceForm = Tables.documents(spark, sfDir)
+      .select(size(split(col("text"), " ")).as("n"))
+    val plan = spaceForm.queryExecution.optimizedPlan.toString
+    assert(plan.contains("token_count"), s"not rewritten:\n$plan")
+    assert(!plan.contains("split"), s"split survived:\n$plan")
+    // rewritten plan computes identical values
+    val viaRule = spaceForm.agg(sum(col("n"))).head().getLong(0)
+    val plain =
+      withConf(SparkSpec.ExcludedRules -> RewriteTokenCount.ruleName) {
+        val ref = spaceForm.agg(sum(col("n")))
+        assert(optimizedExprs(ref) { case k: TokenCountWs => k }.isEmpty)
+        ref.head().getLong(0)
+      }
+    assert(viaRule === plain)
+    // negative: regex separators are left alone
+    val negative = Tables.documents(spark, sfDir)
+      .select(size(split(col("text"), "\\s+")).as("n"))
+      .queryExecution.optimizedPlan.toString
+    assert(!negative.contains("token_count"), s"over-matched:\n$negative")
   }
 
   // ------------------------------------------------ histogram drift

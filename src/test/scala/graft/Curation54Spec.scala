@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Batch-54 invariants: exact replay of the prefix-cache planner and
   * the LCP(min,max) identity it relies on. */
-class Curation54Spec extends SparkSpec {
+class Curation54Spec extends SparkSpec with TempDirs {
 
   private def byName(name: String) =
     SparkEntry.registry.find(_.name == name).get.fn(spark, sfDir)
@@ -112,8 +112,7 @@ class Curation54Spec extends SparkSpec {
     assert(allRow === exact)
     // the deployment story: sketch BLOBS survive a parquet round-trip
     // and merge later without touching the events again
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hll").toString
+    val dir = tempDir("graft_hll")
     ev.groupBy(col("event_type"))
       .agg(expr("hll_sketch_agg(user_id)").as("sk"))
       .write.mode("overwrite").parquet(dir)

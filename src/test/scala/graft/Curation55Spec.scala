@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Batch-55 invariants: exact driver replay of the BLEU ingredients
   * and the bounds the prefix-truncation construction implies. */
-class Curation55Spec extends SparkSpec {
+class Curation55Spec extends SparkSpec with TempDirs {
 
   private def byName(name: String) =
     SparkEntry.registry.find(_.name == name).get.fn(spark, sfDir)
@@ -91,8 +91,7 @@ class Curation55Spec extends SparkSpec {
     // a corpus where the selected pair set (doc_id % 50 == 0) contains
     // a 1-token / 2-char doc: unguarded, the BLEU enumeration throws
     // (slice at i <= 0) and the chrF one silently invents char-grams
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_c55_short").toString
+    val dir = tempDir("graft_c55_short")
     Seq(
       (0L, "hi"),                       // 1 token, 2 chars — the trap
       (50L, "alpha beta gamma delta epsilon zeta eta theta"),

@@ -87,8 +87,6 @@ class DmlScenarioSpec extends SparkSpec {
     assert(srcRows.length === 302) // 300 + merge insert + replace adds 1
 
     // 6. SQL over both sides through the catalog, with time travel
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
     def sql1(q0: String): Long =
       graft.sources.v2.GraftSql.sql(spark, q0).head().getLong(0)
     assert(sql1(s"SELECT count(*) AS n FROM graft.`$src`") === 302L)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 /** The DataSource V2 genome connector: row parity with the built-in JSON
   * reader, column pruning reaching the reader, filter pushdown visible
   * in the physical plan, and per-file partition planning. */
-class GenomeSourceV2Spec extends SparkSpec {
+class GenomeSourceV2Spec extends SparkSpec with TempDirs {
 
   private def res(name: String): String =
     getClass.getResource(s"/$name").getPath
@@ -49,7 +49,7 @@ class GenomeSourceV2Spec extends SparkSpec {
   test("zone-map sidecar skips whole shards the predicate cannot " +
     "touch; results are unchanged") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_zm").toString
+    val dir = tempDir("graft_zm")
     // three shards with disjoint gene_count ranges
     def shard(name: String, lo: Long): Unit = {
       val body = (lo until lo + 10).map(v =>
@@ -85,7 +85,7 @@ class GenomeSourceV2Spec extends SparkSpec {
   test("a stale zone-map entry never skips: a shard rewritten after the " +
     "sidecar was built is planned unconditionally") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_zm_stale").toString
+    val dir = tempDir("graft_zm_stale")
     def shard(name: String, lo: Long, n: Int = 10): Unit = {
       val body = (lo until lo + n).map(v =>
         s"""{"genome_id":"g$v","genome_name":"n$v","pathway":"p",""" +
@@ -125,7 +125,7 @@ class GenomeSourceV2Spec extends SparkSpec {
   }
 
   test("a directory of shards plans one partition per file") {
-    val dir = Files.createTempDirectory("graft_v2")
+    val dir = Paths.get(tempDir("graft_v2"))
     Files.copy(Paths.get(res("genome-records.jsonl")),
       dir.resolve("part-0.jsonl"), StandardCopyOption.REPLACE_EXISTING)
     Files.copy(Paths.get(res("genome-records.jsonl")),
@@ -136,7 +136,7 @@ class GenomeSourceV2Spec extends SparkSpec {
   }
 
   test("V2 sink round-trip: staged-commit JSONL out, V2 source back") {
-    val dir = Files.createTempDirectory("graft_v2_sink").toString + "/out"
+    val dir = tempDir("graft_v2_sink") + "/out"
     val src = v2(res("genome-records.jsonl"))
       .filter(col("genome_id").isNotNull)
     src.repartition(3)
@@ -155,11 +155,11 @@ class GenomeSourceV2Spec extends SparkSpec {
 
   test("streaming read: file-set offsets give exactly-once across restart") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = Files.createTempDirectory("graft_v2_stream")
-    val ckpt = Files.createTempDirectory("graft_v2_ckpt").toString
+    val dir = Paths.get(tempDir("graft_v2_stream"))
+    val ckpt = tempDir("graft_v2_ckpt")
     Files.copy(Paths.get(res("genome-records.jsonl")),
       dir.resolve("a.jsonl"), StandardCopyOption.REPLACE_EXISTING)
-    val outDir = Files.createTempDirectory("graft_v2_out").toString
+    val outDir = tempDir("graft_v2_out")
     def drain(): Long = {
       val q = spark.readStream.format("graft.sources.v2.GenomeSource")
         .load(dir.toString)

@@ -7,9 +7,9 @@ import graft.sources.v2.GraftSqlResolution
 
 /** The SQL face: `graft.`/path`` identifiers through a path-based
   * TableCatalog, SQL VERSION AS OF / TIMESTAMP AS OF, and the
-  * v2-relation -> V1 HadoopFsRelation swap (both through the injected
-  * extension on a dedicated session, and via the manual rule
-  * application library code uses on extension-free sessions). */
+  * v2-relation -> V1 HadoopFsRelation swap, both through
+  * [[graft.sources.v2.GraftSql.sql]] and through plain `spark.sql`,
+  * where the extension's resolution rule does the swap. */
 class GraftCatalogSpec extends SparkSpec {
 
   private def freshRoot(kind: String): String =
@@ -35,8 +35,6 @@ class GraftCatalogSpec extends SparkSpec {
     "pins an old snapshot; filters keep manifest file-skipping") {
     val root = freshRoot("sel")
     build(root)
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
     assert(swapped(spark,
       s"SELECT count(*) AS n FROM graft.`$root`")
       .head().getLong(0) === 50L)
@@ -58,8 +56,6 @@ class GraftCatalogSpec extends SparkSpec {
   test("TIMESTAMP AS OF resolves at-or-before through SQL micros") {
     val root = freshRoot("ts")
     build(root)
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
     val t1 = VersionedTable.snapshot(spark, root, 1).tsMillis
     val probe = java.time.Instant.ofEpochMilli(t1)
       .toString.replace("T", " ").replace("Z", "")
@@ -69,8 +65,6 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("unknown tables and namespaced identifiers are rejected") {
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
     intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql(s"SELECT * FROM graft.`${freshRoot("missing")}`")
     }
@@ -82,25 +76,30 @@ class GraftCatalogSpec extends SparkSpec {
   test("end to end in a child JVM whose FIRST session installs the " +
     "extension: spark.sql alone resolves, time-travels and prunes — " +
     "spark.sql.extensions is static, so only a fresh JVM proves it") {
+    // in-process: the shared session is GraftSession's, whose first
+    // build in this JVM installed the extension
     val root = freshRoot("ext")
     build(root)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", cp, "graft.SqlCatalogChild", root)).toIndexedSeq
-    val p = new ProcessBuilder(cmd: _*).inheritIO().start()
-    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
-      "SQL catalog child JVM did not finish in time")
-    assert(p.exitValue() === 0, "SQL catalog child JVM failed")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$root`")
+      .head().getLong(0) === 50L, "head count via plain spark.sql")
+    assert(spark.sql(
+      s"SELECT count(*) AS n FROM graft.`$root` VERSION AS OF 1")
+      .head().getLong(0) === 30L, "VERSION AS OF 1 count")
+    assert(spark.sql(
+      s"""SELECT count(*) AS n FROM graft.`$root` a
+         |JOIN graft.`$root` VERSION AS OF 1 b USING (doc_id)"""
+        .stripMargin).head().getLong(0) === 30L,
+      "self-join across two pinned snapshots")
+    // the swap must serve the connector's FileIndex: key filter
+    // scans fewer files than the snapshot holds
+    val pruned = spark.sql(s"SELECT * FROM graft.`$root` WHERE doc_id < 5")
+    val scan = pruned.queryExecution.executedPlan.collectLeaves()
+      .collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      .getOrElse(fail("expected FileSourceScanExec after swap"))
+    assert(pruned.count() === 5L, "pruned read row count")
+    assert(scan.metrics("numFiles").value < 4,
+      s"zone-map skip through SQL (numFiles = " +
+        s"${scan.metrics("numFiles").value})")
   }
 }

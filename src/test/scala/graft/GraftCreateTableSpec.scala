@@ -18,12 +18,6 @@ class GraftCreateTableSpec extends SparkSpec {
 
   private def sql(q: String) = graft.sources.v2.GraftSql.sql(spark, q)
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
-  }
-
   test("CREATE TABLE births an empty readable table; INSERT fills it; " +
     "the whole lifecycle is SQL text") {
     val root = freshRoot("basic")

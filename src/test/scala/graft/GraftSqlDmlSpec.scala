@@ -5,11 +5,10 @@ import graft.sources.VersionedTable
 import graft.sources.v2.GraftSql
 
 /** The SQL WRITE/DML face: INSERT / UPDATE / DELETE / MERGE over
-  * `graft.`/root`` identifiers.  The shared test session has no
-  * extensions, so these tests drive [[GraftSql.sql]]'s parse-level
-  * interception — the extension-installed path (plain `spark.sql`)
-  * runs end-to-end in a child JVM (SqlDmlChild), mirroring
-  * GraftCatalogSpec's construction. */
+  * `graft.`/root`` identifiers.  Most tests drive [[GraftSql.sql]],
+  * which intercepts DML at parse level; the end-to-end test drives
+  * plain `spark.sql` on the shared session, where the extension's
+  * GraftDmlRule and parser take the statements. */
 class GraftSqlDmlSpec extends SparkSpec {
 
   private def freshRoot(kind: String): String =
@@ -22,8 +21,6 @@ class GraftSqlDmlSpec extends SparkSpec {
     (0 until n).map(i => (i.toLong, s"g${i % 2}", i.toLong))
       .toDF("id", "grp", "x")
       .write.format("graft-table").option("keyCol", "id").save(root)
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
   }
 
   private def count(root: String, where: String = ""): Long =
@@ -318,25 +315,203 @@ class GraftSqlDmlSpec extends SparkSpec {
   test("end to end in a child JVM with the extension installed: plain " +
     "spark.sql drives INSERT / UPDATE / DELETE / MERGE / OVERWRITE " +
     "and constraint enforcement through GraftDmlRule") {
+    // in-process: the shared session is GraftSession's, whose first
+    // build in this JVM installed the extension
     val root = freshRoot("ext")
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-Dspark.ui.enabled=false",
-      "-cp", cp, "graft.SqlDmlChild", root)).toIndexedSeq
-    val p = new ProcessBuilder(cmd: _*).inheritIO().start()
-    assert(p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
-      "SQL DML child JVM did not finish in time")
-    assert(p.exitValue() === 0, "SQL DML child JVM failed")
+    def rows(where: String = ""): Long =
+      spark.sql(s"SELECT count(*) AS n FROM graft.`$root` $where")
+        .head().getLong(0)
+
+    import spark.implicits._
+    seed(root)
+
+    // INSERT INTO, positional
+    spark.sql(s"INSERT INTO graft.`$root` VALUES (100, 'new', 7)")
+    assert(rows() == 11L, "INSERT INTO positional")
+    assert(rows("WHERE id = 100 AND grp = 'new' AND x = 7") == 1L,
+      "inserted row readable")
+    // INSERT INTO with a column list: unlisted columns become NULL
+    spark.sql(s"INSERT INTO graft.`$root` (id, x) VALUES (101, 9)")
+    assert(rows("WHERE id = 101 AND grp IS NULL AND x = 9") == 1L,
+      "INSERT with column list null-fills")
+    assert(VersionedTable.latestVersion(spark, root).contains(3),
+      "each INSERT is one commit")
+
+    // UPDATE with WHERE; assignments see the pre-update row
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 1000, grp = 'upd' " +
+      "WHERE id < 3")
+    assert(rows("WHERE grp = 'upd' AND x >= 1000") == 3L,
+      "UPDATE applied where cond true")
+    assert(rows("WHERE id = 5 AND x = 5") == 1L,
+      "UPDATE left non-matching rows")
+
+    // DELETE
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id = 101")
+    assert(rows("WHERE id = 101") == 0L, "DELETE removed the row")
+    assert(rows() == 11L, "DELETE removed exactly one row")
+
+    // MERGE: update / conditional delete / insert / NMBS delete
+    (Seq((0L, "src", 1L), (5L, "src", 2L), (200L, "src", 3L)))
+      .toDF("id", "grp", "x").createOrReplaceTempView("dml_src")
+    spark.sql(
+      s"""MERGE INTO graft.`$root` AS t USING dml_src AS src
+         |ON t.id = src.id
+         |WHEN MATCHED AND src.x = 1 THEN UPDATE SET x = src.x * 10
+         |WHEN MATCHED THEN DELETE
+         |WHEN NOT MATCHED THEN INSERT (id, grp, x)
+         |  VALUES (src.id, src.grp, src.x)
+         |WHEN NOT MATCHED BY SOURCE AND t.id >= 9 AND t.id < 100
+         |  THEN DELETE""".stripMargin)
+    assert(rows("WHERE id = 0 AND x = 10") == 1L,
+      "MERGE first matched clause wins (update, not delete)")
+    assert(rows("WHERE id = 5") == 0L, "MERGE matched delete")
+    assert(rows("WHERE id = 200 AND grp = 'src'") == 1L,
+      "MERGE not-matched insert")
+    assert(rows("WHERE id = 9") == 0L, "MERGE NMBS delete")
+    assert(rows("WHERE id = 100") == 1L,
+      "MERGE NMBS condition gates")
+
+    // INSERT OVERWRITE replaces the head (history stays)
+    val beforeOvw = VersionedTable.latestVersion(spark, root).get
+    spark.sql(s"INSERT OVERWRITE graft.`$root` VALUES (1, 'only', 1)")
+    assert(rows() == 1L, "INSERT OVERWRITE replaced content")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$root` " +
+      s"VERSION AS OF $beforeOvw").head().getLong(0) > 1L,
+      "history survives the overwrite")
+
+    // CHECK constraint surfaces through SQL INSERT
+    VersionedTable.addConstraint(spark, root, "x_pos", "x >= 0")
+    val threw =
+      try { spark.sql(s"INSERT INTO graft.`$root` VALUES (2, 'bad', -5)")
+        false }
+      catch { case e: Throwable =>
+        e.getMessage != null &&
+          e.getMessage.contains("CHECK constraint") ||
+          Option(e.getCause).exists(c => c.getMessage != null &&
+            c.getMessage.contains("CHECK constraint")) }
+    assert(threw, "constraint violation rejected through SQL")
+    assert(rows("WHERE x < 0") == 0L, "violating row not committed")
+
+    // maintenance grammar through the INJECTED PARSER (plain
+    // spark.sql — the delegating-parser path)
+    val hist = spark.sql(s"DESCRIBE HISTORY graft.`$root`").collect()
+    assert(hist.length == VersionedTable.versions(spark, root).size,
+      "DESCRIBE HISTORY row per version via plain spark.sql")
+    assert(spark.sql(s"DESCRIBE DETAIL graft.`$root`").head()
+      .getAs[String]("key_col") == "id",
+      "DESCRIBE DETAIL via plain spark.sql")
+    val opt = spark.sql(s"OPTIMIZE graft.`$root`").head()
+    assert(opt.getAs[Long]("num_files_after") <=
+      opt.getAs[Long]("num_files_before"),
+      "OPTIMIZE via plain spark.sql")
+    val dry = spark.sql(s"VACUUM graft.`$root` RETAIN 0 HOURS DRY RUN")
+      .count()
+    VersionedTable.setProperty(spark, root, "vacuum.retentionCheck",
+      "false") // sub-floor retention needs the explicit opt-out
+    val vac = spark.sql(s"VACUUM graft.`$root` RETAIN 0 HOURS").head()
+    assert(vac.getAs[Long]("data_files_deleted") >= dry,
+      "VACUUM via plain spark.sql reclaims at least the dry-run list")
+    assert(rows() == 1L, "table reads after maintenance")
+    // ordinary SQL still parses through the delegate
+    assert(spark.sql("SELECT 3 AS three").head().getInt(0) == 3,
+      "delegating parser passes ordinary SQL through")
+
+    // ---------------- round-13 surface, RESOLVED-path (plain
+    // spark.sql through GraftDmlRule / the analyzer) ----------------
+    val r13 = freshRoot("ext_r13")
+    // CREATE TABLE with inline CHECK + table.key; empty read; INSERT
+    spark.sql(s"CREATE TABLE graft.`$r13` (id BIGINT, grp STRING, " +
+      "x BIGINT, CONSTRAINT x_pos CHECK (x >= 0)) " +
+      "TBLPROPERTIES ('table.key'='id')")
+    assert(spark.sql(s"SELECT * FROM graft.`$r13`").count() == 0L,
+      "created table reads empty with schema")
+    spark.sql(s"INSERT INTO graft.`$r13` SELECT id, 'g' || " +
+      s"cast(id % 2 AS string), id FROM range(20)")
+    def c13(where: String = ""): Long =
+      spark.sql(s"SELECT count(*) AS n FROM graft.`$r13` $where")
+        .head().getLong(0)
+    assert(c13() == 20L, "CREATE + INSERT INTO ... SELECT via spark.sql")
+    val cThrew =
+      try { spark.sql(s"INSERT INTO graft.`$r13` VALUES (99, 'g', -1)")
+        false }
+      catch { case e: Throwable =>
+        (e.getMessage + Option(e.getCause).map(_.getMessage)
+          .getOrElse("")).contains("x_pos") }
+    assert(cThrew, "inline CREATE constraint enforced, named")
+    // ALTER TABLE ADD/DROP CONSTRAINT through the injected parser
+    spark.sql(s"ALTER TABLE graft.`$r13` ADD CONSTRAINT x_cap " +
+      "CHECK (x < 1000000)")
+    assert(VersionedTable.snapshot(spark, r13,
+      VersionedTable.latestVersion(spark, r13).get)
+      .constraints.keySet == Set("x_pos", "x_cap"),
+      "ADD CONSTRAINT via plain spark.sql")
+    spark.sql(s"ALTER TABLE graft.`$r13` DROP CONSTRAINT x_cap")
+    // IN-subquery DELETE (resolved InSubquery through GraftDmlRule)
+    spark.sql("SELECT id * 2 AS k FROM range(5)")
+      .createOrReplaceTempView("r13_doomed")
+    spark.sql(s"DELETE FROM graft.`$r13` WHERE id IN " +
+      "(SELECT k FROM r13_doomed) AND grp = 'g0'")
+    assert(c13() == 15L, "IN-subquery DELETE with residual (resolved)")
+    assert(c13("WHERE id IN (0, 2, 4, 6, 8)") == 0L,
+      "IN-subquery DELETE removed the right keys")
+    // compound-ON MERGE (resolved side attribution)
+    spark.sql("SELECT id AS id, id + 500 AS nx FROM range(3)")
+      .createOrReplaceTempView("r13_src")
+    spark.sql(
+      s"""MERGE INTO graft.`$r13` AS t USING r13_src AS sq
+         |ON t.id = sq.id AND t.grp = 'g1'
+         |WHEN MATCHED THEN UPDATE SET x = sq.nx
+         |WHEN NOT MATCHED THEN INSERT (id, grp, x)
+         |VALUES (sq.id + 700, 'ins', sq.nx)""".stripMargin)
+    assert(c13("WHERE id = 1 AND x = 501") == 1L,
+      "compound-ON matched (residual holds) updated")
+    assert(c13("WHERE id = 700 AND grp = 'ins'") == 1L,
+      "compound-ON residual-failed source row inserted")
+    // MERGE WITH SCHEMA EVOLUTION (resolved path)
+    spark.sql("SELECT id * 3 + 1 AS id, id AS q FROM range(3)")
+      .createOrReplaceTempView("r13_evo")
+    spark.sql(
+      s"""MERGE WITH SCHEMA EVOLUTION INTO graft.`$r13` AS t
+         |USING r13_evo AS sq ON t.id = sq.id
+         |WHEN MATCHED THEN UPDATE SET q = sq.q""".stripMargin)
+    assert(spark.sql(s"SELECT q FROM graft.`$r13` WHERE id = 7")
+      .head().getLong(0) == 2L,
+      "WITH SCHEMA EVOLUTION widened + filled (resolved)")
+    assert(c13("WHERE q IS NULL") > 0L,
+      "evolution: untouched rows read NULL")
+    // dml.mode=mor via SQL property, then MoR UPDATE
+    spark.sql(s"ALTER TABLE graft.`$r13` SET TBLPROPERTIES " +
+      "('dml.mode'='mor')")
+    spark.sql(s"UPDATE graft.`$r13` SET x = x + 9000 WHERE id = 7")
+    assert(VersionedTable.snapshot(spark, r13,
+      VersionedTable.latestVersion(spark, r13).get).op == "update-mor",
+      "dml.mode=mor routes SQL UPDATE merge-on-read")
+    assert(c13("WHERE id = 7 AND x = 9007") == 1L,
+      "MoR SQL UPDATE applied")
+    // column DEFAULTs through the ANALYZER's own resolution
+    // (SUPPORT_COLUMN_DEFAULT_VALUE + field metadata)
+    val r13d = freshRoot("ext_r13def")
+    spark.sql(s"CREATE TABLE graft.`$r13d` (id BIGINT, " +
+      "x BIGINT DEFAULT 42) TBLPROPERTIES ('table.key'='id')")
+    spark.sql(s"INSERT INTO graft.`$r13d` (id) VALUES (1)")
+    assert(spark.sql(s"SELECT x FROM graft.`$r13d` WHERE id = 1")
+      .head().getLong(0) == 42L,
+      "column DEFAULT filled by plain spark.sql INSERT")
+    // INSERT ... REPLACE WHERE through the resolved rule
+    spark.sql(s"INSERT INTO graft.`$r13` REPLACE WHERE id >= 700 " +
+      "VALUES (700, 'rw', 7, CAST(NULL AS BIGINT))")
+    assert(c13("WHERE id = 700 AND grp = 'rw'") == 1L,
+      "REPLACE WHERE swapped the slice via plain spark.sql")
+    assert(c13("WHERE id = 702") == 0L,
+      "REPLACE WHERE removed the rest of the slice")
+    // CTAS through plain spark.sql
+    val r13c = freshRoot("ext_r13ctas")
+    spark.sql(s"CREATE TABLE graft.`$r13c` TBLPROPERTIES " +
+      s"('table.key'='id') AS SELECT id, x FROM graft.`$r13` " +
+      "WHERE x < 100")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$r13c`")
+      .head().getLong(0) ==
+      c13("WHERE x < 100"), "CTAS via plain spark.sql")
   }
 
   test("MERGE ON conjunction: key equality + residual predicates — a " +
@@ -499,8 +674,6 @@ class GraftSqlDmlSpec extends SparkSpec {
       .selectExpr("id",
         "named_struct('user', props._1, 'n', props._2) AS props")
       .write.format("graft-table").option("keyCol", "id").save(root)
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
     GraftSql.sql(spark,
       s"UPDATE graft.`$root` SET props.n = props.n + 100, " +
         "props.user = upper(props.user) WHERE id < 3")

@@ -12,7 +12,7 @@ import graft.sources.VersionedTable
   * data filters — zone maps, column stats, string stats and blooms all
   * reachable from a plain `.filter(...)`, conservatively (answers
   * never change, only the planned file count). */
-class GraftTableSourceSpec extends SparkSpec {
+class GraftTableSourceSpec extends SparkSpec with TempDirs {
 
   private def freshRoot(kind: String): String =
     Scratch.register(
@@ -188,8 +188,7 @@ class GraftTableSourceSpec extends SparkSpec {
     "versions exactly-once across restarts, through the standard " +
     "writeStream surface") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_gts_stream").toString
+    val dir = tempDir("graft_gts_stream")
     val src = s"$dir/src"; val chk = s"$dir/chk"; val root = s"$dir/table"
     new java.io.File(src).mkdirs()
     def start() = spark.readStream
@@ -227,8 +226,7 @@ class GraftTableSourceSpec extends SparkSpec {
   test("streaming autoCompact bounds the small-file count: a trickle " +
     "of tiny batches stays at the target file count, rows exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_gts_compact").toString
+    val dir = tempDir("graft_gts_compact")
     val src = s"$dir/src"; val chk = s"$dir/chk"; val root = s"$dir/table"
     new java.io.File(src).mkdirs()
     def start() = spark.readStream

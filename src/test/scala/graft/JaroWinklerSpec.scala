@@ -37,7 +37,6 @@ class JaroWinklerSpec extends SparkSpec {
 
   test("codegen path equals the static kernel, and SQL registration works") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), substring(col("text"), 1, 50).as("k1"),
         substring(col("text"), 7, 50).as("k2"))

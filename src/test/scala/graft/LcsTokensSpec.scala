@@ -61,7 +61,6 @@ class LcsTokensSpec extends SparkSpec {
   }
 
   test("SQL surface and codegen plan") {
-    graft.functions.GraftFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT lcs_tokens('a b c', 'a x c') AS l").head().getLong(0)
     assert(viaSql === 2L)

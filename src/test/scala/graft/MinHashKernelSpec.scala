@@ -107,7 +107,6 @@ class MinHashKernelSpec extends SparkSpec {
   }
 
   test("SQL surface: shingle_hashes/minhash_sig/sorted_intersect registered") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT sorted_intersect(shingle_hashes('a b c d'),
         |                        shingle_hashes('a b c e')) AS ni,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 
@@ -21,14 +20,7 @@ object MultiWriterChild {
     val root = args(0)
     val writerId = args(1).toInt
     val numAppends = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-multiwriter-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(2)
     import spark.implicits._
     try {
       (0 until numAppends).foreach { i =>

@@ -24,24 +24,8 @@ class MultiWriterProcessSpec extends SparkSpec {
       (0L until 10L).map(i => (i, "base")).toDF("doc_id", "text"),
       "doc_id", 1, op = "load")
 
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    def spawn(writerId: Int): Process = {
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx1g", "-Dspark.ui.enabled=false",
-        "-cp", cp, "graft.MultiWriterChild",
-        root, writerId.toString, "3")).toIndexedSeq
-      new ProcessBuilder(cmd: _*).inheritIO().start()
-    }
+    def spawn(writerId: Int): Process =
+      ChildJvm.start("graft.MultiWriterChild", root, writerId.toString, "3")
     val numAppends = 3
     val p1 = spawn(1); val p2 = spawn(2)
     assert(p1.waitFor(300, java.util.concurrent.TimeUnit.SECONDS) &&

@@ -311,27 +311,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("parquet aggregate pushdown serves count/min/max from metadata") {
-    val prevAgg = spark.conf.getOption("spark.sql.parquet.aggregatePushdown")
-    val prevV1 = spark.conf.getOption("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
     // aggregate pushdown is a DataSource V2 feature; parquet defaults to
     // the V1 path, so drop it from the V1 list for this read
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try {
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> "") {
       val plan = spark.read.parquet(s"$sfDir/documents.parquet")
         .agg(count(lit(1)), min(col("doc_id")), max(col("doc_id")))
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedAggregation"),
         s"no PushedAggregation in:\n$plan")
-    } finally {
-      prevAgg match {
-        case Some(v) => spark.conf.set("spark.sql.parquet.aggregatePushdown", v)
-        case None => spark.conf.unset("spark.sql.parquet.aggregatePushdown")
-      }
-      prevV1 match {
-        case Some(v) => spark.conf.set("spark.sql.sources.useV1SourceList", v)
-        case None => spark.conf.unset("spark.sql.sources.useV1SourceList")
-      }
     }
   }
 
@@ -391,22 +379,19 @@ class PlanAuditSpec extends SparkSpec {
   test("unhinted joins flip broadcast -> shuffle with the threshold") {
     val orders = Tables.orders(spark, sfDir)
     val cust = Tables.customer(spark, sfDir)
-    def planOf(): String = orders.join(cust,
-      orders("o_custkey") === cust("c_custkey"))
-      .groupBy(cust("c_nationkey")).count()
-      .queryExecution.sparkPlan.toString
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      assert(planOf().contains("BroadcastHashJoin"),
-        "small dim did not broadcast under the default threshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val big = planOf()
-      assert(!big.contains("BroadcastHashJoin"),
-        s"join still broadcasts with threshold disabled:\n$big")
-      assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"),
-        s"no shuffle join planned:\n$big")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    def planOf(threshold: String): String =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        orders.join(cust, orders("o_custkey") === cust("c_custkey"))
+          .groupBy(cust("c_nationkey")).count()
+          .queryExecution.sparkPlan.toString
+      }
+    assert(planOf("10485760").contains("BroadcastHashJoin"),
+      "small dim did not broadcast under the default threshold")
+    val big = planOf("-1")
+    assert(!big.contains("BroadcastHashJoin"),
+      s"join still broadcasts with threshold disabled:\n$big")
+    assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"),
+      s"no shuffle join planned:\n$big")
   }
 
   /** Column pruning must reach the parquet scan: a narrow projection
@@ -458,9 +443,7 @@ class PlanAuditSpec extends SparkSpec {
     // oracle-proven bit-identical (ScalableIndexSpec): the windowed form
     // IS the §2 reference semantics being demonstrated
     "zip_with_index" -> "S-twin zip_with_index_scalable",
-    "ntile_length_buckets" -> "S-twin ntile_length_buckets_scalable",
-    "sink_per_record_files" -> ("per-record filenames need the dense id; " +
-      "bounded by the sink's per-task output contract"))
+    "ntile_length_buckets" -> "S-twin ntile_length_buckets_scalable")
 
   test("no unpartitioned WindowExec over unbounded input anywhere " +
     "in the registry") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 import graft.streaming.VersionedSource
@@ -13,12 +12,12 @@ import graft.streaming.VersionedSource
   * cross-region / cross-environment corpus-mirroring construction a
   * 100 TB deployment runs: only the per-commit feed ever moves, never
   * the table. */
-class ReplicationSpec extends SparkSpec {
+class ReplicationSpec extends SparkSpec with TempDirs {
 
   test("follower + txn-ledgered apply replicate the source exactly, " +
     "across restarts and further commits") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_repl").toString
+    val dir = tempDir("graft_repl")
     val src = s"$dir/src"; val dst = s"$dir/dst"; val chk = s"$dir/chk"
 
     // source history: load, upsert (update 5..9 + insert 10..14)
@@ -94,7 +93,7 @@ class ReplicationSpec extends SparkSpec {
   test("update-paired feeds maintain a downstream aggregate " +
     "incrementally: fold +post -pre +insert -delete, never rescan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_repl_agg").toString
+    val dir = tempDir("graft_repl_agg")
     val src = s"$dir/src"; val chk = s"$dir/chk"
 
     VersionedTable.append(spark, src,
@@ -146,7 +145,7 @@ class ReplicationSpec extends SparkSpec {
   test("merge-on-read deletes replicate transparently: the follower " +
     "sees plain deletes, and a purge commit feeds ZERO rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_repl_mor").toString
+    val dir = tempDir("graft_repl_mor")
     val src = s"$dir/src"; val chk = s"$dir/chk"
 
     VersionedTable.append(spark, src,
@@ -184,7 +183,7 @@ class ReplicationSpec extends SparkSpec {
     "materializes on the driver or as an isin literal") {
     import spark.implicits._
     import graft.streaming.Replication
-    val dir = Files.createTempDirectory("graft_repl_bulk").toString
+    val dir = tempDir("graft_repl_bulk")
     val src = s"$dir/src"; val dst = s"$dir/dst"; val chk = s"$dir/chk"
 
     val n = 200000L
@@ -223,7 +222,7 @@ class ReplicationSpec extends SparkSpec {
     "after the evolution") {
     import spark.implicits._
     import graft.streaming.Replication
-    val dir = Files.createTempDirectory("graft_repl_evo").toString
+    val dir = tempDir("graft_repl_evo")
     val src = s"$dir/src"; val dst = s"$dir/dst"; val chk = s"$dir/chk"
 
     VersionedTable.append(spark, src,
@@ -271,7 +270,7 @@ class ReplicationSpec extends SparkSpec {
     "exactly-once across restarts, with MoR deletes on the mirror") {
     import spark.implicits._
     import graft.streaming.Replication
-    val dir = Files.createTempDirectory("graft_repl_lib").toString
+    val dir = tempDir("graft_repl_lib")
     val src = s"$dir/src"; val dst = s"$dir/dst"; val chk = s"$dir/chk"
 
     VersionedTable.append(spark, src,

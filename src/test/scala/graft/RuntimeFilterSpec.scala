@@ -22,10 +22,7 @@ class RuntimeFilterSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       // force a shuffle join: broadcast would make the filter pointless
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) =>
-      k -> util.Try(spark.conf.get(k)).toOption }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(confs: _*) {
       val fact = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_extendedprice"))
       val dim = Tables.orders(spark, sfDir)
@@ -38,15 +35,13 @@ class RuntimeFilterSpec extends SparkSpec {
         s"no runtime bloom filter injected:\n$optimized")
       // and the rewrite is semantics-preserving
       val n = joined.collect().head.getLong(0)
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      val n0 = fact.join(dim, col("l_orderkey") === col("o_orderkey"))
-        .agg(count(lit(1))).collect().head.getLong(0)
+      val n0 = withConf(
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+        fact.join(dim, col("l_orderkey") === col("o_orderkey"))
+          .agg(count(lit(1))).collect().head.getLong(0)
+      }
       assert(n === n0)
       assert(n > 0L)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

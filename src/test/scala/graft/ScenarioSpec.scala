@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -32,7 +31,7 @@ import graft.streaming.{Streams, VersionedSource}
   *      stay until consolidation — the segment/tombstone design the
   *      batch ann_index_consolidate/_delete queries own.)
   */
-class ScenarioSpec extends SparkSpec {
+class ScenarioSpec extends SparkSpec with TempDirs {
 
   private val Dim = 256
 
@@ -72,7 +71,7 @@ class ScenarioSpec extends SparkSpec {
   test("ingest -> chunk -> embed -> index -> retrieve, then follow a " +
     "commit's change feed into incremental index maintenance") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_scenario").toString
+    val dir = tempDir("graft_scenario")
     val corpusRoot = s"$dir/corpus"
 
     // ---- 1. ingest: the corpus of record is a VERSIONED table

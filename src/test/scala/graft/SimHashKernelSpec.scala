@@ -57,7 +57,6 @@ class SimHashKernelSpec extends SparkSpec {
   }
 
   test("SQL surface and scan-local plan") {
-    graft.functions.GraftFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT simhash60('a b c') AS s").head().getLong(0)
     import spark.implicits._

@@ -1,14 +1,13 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** The side-effect sinks that can't be oracle-checked (SURVEY S6/S10):
   * partitioned per-record fan-out and idempotent overwrite/ignore. */
-class SinkSpec extends SparkSpec {
+class SinkSpec extends SparkSpec with TempDirs {
 
   test("per-record fan-out: partitionBy(source) writes one dir per corpus") {
-    val out = Files.createTempDirectory("graft_sink").toString
+    val out = tempDir("graft_sink")
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("source"))
       .write.mode("overwrite").partitionBy("source").parquet(out)
@@ -24,7 +23,7 @@ class SinkSpec extends SparkSpec {
 
   test("small-file compaction: many shards rewritten to target file count, " +
     "contents identical") {
-    val out = Files.createTempDirectory("graft_compact").toString
+    val out = tempDir("graft_compact")
     val frag = s"$out/fragmented"
     val compact = s"$out/compacted"
     // simulate a streaming/hourly ingest that left many tiny files
@@ -52,7 +51,7 @@ class SinkSpec extends SparkSpec {
 
   test("writer-side schema evolution: appended column visible under " +
     "mergeSchema, absent rows null") {
-    val out = Files.createTempDirectory("graft_evolve").toString + "/t"
+    val out = tempDir("graft_evolve") + "/t"
     Tables.documents(spark, sfDir).limit(4)
       .select(col("doc_id"), col("text"))
       .write.mode("overwrite").parquet(out)
@@ -69,7 +68,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("idempotent rebuild: overwrite replaces, ignore skips (DG:64-65 semantics)") {
-    val out = Files.createTempDirectory("graft_sink2").toString + "/t"
+    val out = tempDir("graft_sink2") + "/t"
     val d5 = Tables.documents(spark, sfDir).limit(5)
       .select(col("doc_id"), col("text"))
     d5.write.mode("overwrite").parquet(out)
@@ -85,7 +84,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("ORC round-trip: write + read back preserves rows and schema") {
-    val out = Files.createTempDirectory("graft_orc").toString + "/t"
+    val out = tempDir("graft_orc") + "/t"
     val src = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
     src.write.mode("overwrite").orc(out)
@@ -98,7 +97,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("XML round-trip: Spark 4 built-in xml source preserves records") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xml").toString
+    val dir = tempDir("graft-xml")
     val src = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .filter(col("doc_id") < 50)

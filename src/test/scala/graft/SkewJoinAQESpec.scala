@@ -20,9 +20,7 @@ class SkewJoinAQESpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(confs: _*) {
       import spark.implicits._
       // 50k rows, 90% on one hot key; the dim side is forced to shuffle
       // (broadcast disabled) so the join is a genuine SMJ/SHJ.
@@ -40,9 +38,6 @@ class SkewJoinAQESpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"expected a skew-split join in the adaptive plan:\n$plan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -1,28 +1,50 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession mirroring Verify.scala's config. */
+/** The shared test session is the deployed one, [[GraftSession]] at 4
+  * cores: the extension's rewrites, strategies and SQL surface and the
+  * `graft` catalog are live in every spec, so a plan a spec checks is
+  * the plan `Bench` and `Verify` run. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the session confs `pairs` set, then restores each
+    * to its prior value, unsetting those that were not set before. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally pairs.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** The expressions anywhere in `df`'s optimized plan that `pf`
+    * matches. */
+  def optimizedExprs[T](df: DataFrame)(
+      pf: PartialFunction[Expression, T]): Seq[T] =
+    df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect(pf)))
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // old events fixtures carry TIMESTAMP(NANOS) parquet; session-wide so no
-      // reader ever mutates a live session conf (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(4)
+
+  /** Rules listed here are left out of the optimizer: how a spec plans
+    * an un-rewritten reference on the extension session. */
+  val ExcludedRules: String = SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+
+  /** The state store the transformWithState operators require. */
+  val RocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 }

@@ -6,9 +6,10 @@ import graft.sources.v2.GraftSql
 
 /** Negative sweep of the PARSE-LEVEL SQL fallback's documented
   * limitations (GraftSqlDml.scala §doc: top-level columns only, no
-  * subqueries in conditions beyond `key IN (SELECT ...)`).  On a
-  * session WITHOUT the extension, [[GraftSql.sql]] intercepts DML at
-  * parse level — every unsupported grammar shape must error LOUDLY
+  * subqueries in conditions beyond `key IN (SELECT ...)`).
+  * [[GraftSql.sql]] intercepts DML at parse level, before analysis
+  * and so before the extension's GraftDmlRule could see it — every
+  * unsupported grammar shape must error LOUDLY
   * and leave the table byte-identical; a silent mis-translation here
   * would be data corruption with no error to notice.  Each case
   * asserts both the loud error and the unchanged table. */
@@ -24,8 +25,6 @@ class SqlFallbackSpec extends SparkSpec {
     (0 until 10).map(i => (i.toLong, s"g${i % 2}", i.toLong))
       .toDF("id", "grp", "x")
       .write.format("graft-table").option("keyCol", "id").save(root)
-    spark.conf.set("spark.sql.catalog.graft",
-      "graft.sources.v2.GraftCatalog")
   }
 
   /** (version, row checksum) — the "nothing happened" witness. */

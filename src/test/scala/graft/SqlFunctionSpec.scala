@@ -1,12 +1,9 @@
 package graft
 
-import graft.functions.GraftFunctions
-
 /** The native kernel exposed on the SQL surface. */
 class SqlFunctionSpec extends SparkSpec {
 
   test("cosine_similarity callable from spark.sql after registration") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, sfDir).limit(50)
       .createOrReplaceTempView("emb_v")
     val rows = spark.sql(
@@ -26,7 +23,6 @@ class SqlFunctionSpec extends SparkSpec {
   }
 
   test("chunk_spans callable from spark.sql as a generator") {
-    GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).limit(20)
       .createOrReplaceTempView("docs_v")
     val viaSql = spark.sql(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Operational state introspection: Spark 4's state data sources read a
@@ -10,12 +9,12 @@ import org.apache.spark.sql.functions._
   * accumulated (state cardinality, skewed keys, orphaned state) without
   * touching the job. The spec drives a dedup stream, then reads its
   * checkpoint cold. */
-class StateReaderSpec extends SparkSpec {
+class StateReaderSpec extends SparkSpec with TempDirs {
 
   test("statestore source reads the dedup keys back from the " +
     "checkpoint; state-metadata names the operator") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_statereader").toString
+    val root = tempDir("graft_statereader")
     val src = s"$root/src"; val out = s"$root/out"; val chk = s"$root/chk"
     new java.io.File(src).mkdirs()
 

@@ -11,7 +11,7 @@ import graft.streaming.Streams
   * produce exactly the batch answer rows for those queries — including
   * when the query panel arrives split across micro-batches (the index
   * is static; answers are per-query independent). */
-class StreamingAnnServeSpec extends SparkSpec {
+class StreamingAnnServeSpec extends SparkSpec with TempDirs {
 
   private def queryPanel: Seq[(Long, Array[Float])] =
     Tables.embeddings(spark, sfDir)
@@ -32,10 +32,8 @@ class StreamingAnnServeSpec extends SparkSpec {
       : Set[(Long, Long, Long, Long)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_out").toString
-    val chkDir = java.nio.file.Files
-      .createTempDirectory("graft_serve_chk").toString
+    val outDir = tempDir("graft_serve_out")
+    val chkDir = tempDir("graft_serve_chk")
     val corpus = Curation56Queries.hierCorpus(spark, sfDir)
     val und = Curation56Queries.hierAdjacency(spark, sfDir).persist()
     try {
@@ -81,10 +79,8 @@ class StreamingAnnServeSpec extends SparkSpec {
         r.getLong(4), r.getBoolean(5))).toSet
     spark.catalog.clearCache()
     assert(batchRows.nonEmpty)
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_ins_out").toString
-    val chkDir = java.nio.file.Files
-      .createTempDirectory("graft_ins_chk").toString
+    val outDir = tempDir("graft_ins_out")
+    val chkDir = tempDir("graft_ins_chk")
     val corpus = Curation56Queries.hierCorpus(spark, sfDir)
     val und = Curation56Queries.hierAdjacency(spark, sfDir).persist()
     val worst = Curation56Queries.worstEdges(spark, sfDir).persist()
@@ -118,14 +114,11 @@ class StreamingAnnServeSpec extends SparkSpec {
       : (Set[(Long, Long, Long, Long, Long)], Set[Long]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_del_out").toString
+    val outDir = tempDir("graft_del_out")
     lastDeleteOut = outDir
-    val tombDir = java.nio.file.Files
-      .createTempDirectory("graft_del_tomb").toString
+    val tombDir = tempDir("graft_del_tomb")
     lastTombDir = tombDir
-    val chkDir = java.nio.file.Files
-      .createTempDirectory("graft_del_chk").toString
+    val chkDir = tempDir("graft_del_chk")
     val corpus = Curation56Queries.hierCorpus(spark, sfDir)
     val g = Curation56Queries.nnDescentEdges(spark, sfDir)
     val mem = MemoryStream[Long]

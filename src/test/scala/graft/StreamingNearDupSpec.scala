@@ -16,20 +16,6 @@ import graft.streaming.Streams
   * store provider; set per-test and restored. */
 class StreamingNearDupSpec extends SparkSpec {
 
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** Bounded corpus + injected exact copies — the batch
     * dedup_embedding_cosine construction on a 200-vector slice. */
   private lazy val vectors: Seq[(Long, Array[Float])] = {
@@ -80,7 +66,7 @@ class StreamingNearDupSpec extends SparkSpec {
       name: String, cap: Int = 64): Seq[(Long, Long, Long)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
+    withConf(SparkSpec.RocksDb) {
       val mem = MemoryStream[(Long, Array[Float])]
       val q = Streams.nearDupLsh(
           mem.toDS().toDF("vec_id", "embedding").repartition(8), cap)

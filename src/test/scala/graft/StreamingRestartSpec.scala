@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Operational fault-tolerance: a streaming query stopped and restarted
@@ -10,11 +9,11 @@ import org.apache.spark.sql.functions._
   * through a replayable file source (MemoryStream cannot recover across
   * restarts by design).
   */
-class StreamingRestartSpec extends SparkSpec {
+class StreamingRestartSpec extends SparkSpec with TempDirs {
 
   test("dedup state and sink outputs survive a checkpoint restart") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_restart").toString
+    val root = tempDir("graft_restart")
     val src = s"$root/src"; val out = s"$root/out"; val chk = s"$root/chk"
     new java.io.File(src).mkdirs()
 

@@ -14,7 +14,7 @@ final case class StreamDoc(doc_id: Long, text: String, ts: Timestamp)
 /** Structured Streaming twins (T1–T4 + capacity gate) driven by
   * MemoryStream — semantics only; the oracle-checked batch shadows live
   * in EventQueries. */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempDirs {
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
@@ -162,8 +162,8 @@ class StreamingSpec extends SparkSpec {
   test("idempotent foreachBatch sink: batches land once, keyed by id") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("graft-sink")
+    val ckpt = tempDir("graft-ckpt")
     val mem = MemoryStream[Ev]
     mem.addData(Ev(1, ts(0), 1, "click", 1.0, "{}"),
       Ev(2, ts(1), 2, "view", 1.0, "{}"))
@@ -204,8 +204,8 @@ class StreamingSpec extends SparkSpec {
   test("drainAvailable processes the backlog then terminates itself") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft-drain").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-dckpt").toString
+    val out = tempDir("graft-drain")
+    val ckpt = tempDir("graft-dckpt")
     val mem = MemoryStream[Ev]
     mem.addData(Ev(1, ts(0), 1, "click", 1.0, "{}"),
       Ev(2, ts(1), 2, "view", 1.0, "{}"))

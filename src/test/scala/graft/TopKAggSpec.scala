@@ -31,7 +31,6 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("callable from spark.sql after registration") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs_topk_v")
     val viaSql = spark.sql(
       "SELECT lang, topk_longs(n_chars, 5) AS t FROM docs_topk_v GROUP BY lang")

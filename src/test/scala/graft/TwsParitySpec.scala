@@ -13,20 +13,6 @@ import graft.streaming.{JobEvent, Streams}
   * untouched. */
 class TwsParitySpec extends SparkSpec {
 
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   private val gateEvents = Seq(
     JobEvent(1, 1, "click"), JobEvent(2, 1, "click"),
     JobEvent(3, 1, "click"), JobEvent(4, 1, "click"), // 4th rejected
@@ -38,7 +24,7 @@ class TwsParitySpec extends SparkSpec {
   test("capacityGateTws matches capacityGate decision for decision") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = withRocksDb {
+    val out = withConf(SparkSpec.RocksDb) {
       val mem = MemoryStream[JobEvent]
       mem.addData(gateEvents: _*)
       val q = Streams.capacityGateTws(mem.toDS().repartition(8), capacity = 3)
@@ -86,7 +72,8 @@ class TwsParitySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3)))
         .sortBy(_._2).toSeq
     }
-    val tws = withRocksDb(run("retry_tws", Streams.retryGateTws(_, 5)))
+    val tws = withConf(SparkSpec.RocksDb)(
+      run("retry_tws", Streams.retryGateTws(_, 5)))
     val v1 = run("retry_v1", Streams.retryGate(_, 5))
     assert(tws === v1)
     assert(tws.map(_._3) === (1 to 7))

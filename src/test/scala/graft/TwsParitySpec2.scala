@@ -9,25 +9,11 @@ import graft.streaming.{JobEvent, Streams}
   * processing-time TTL expiry of abandoned keys. */
 class TwsParitySpec2 extends SparkSpec {
 
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-
-  private def withRocksDb[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   test("userActivityTws: MapState tally and ListState window carry " +
     "across batches and match a driver fold") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
+    withConf(SparkSpec.RocksDb) {
       val mem = MemoryStream[JobEvent]
       val q = Streams.userActivityTws(mem.toDS().repartition(4), recentK = 3)
         .writeStream.format("memory").queryName("act_tws")
@@ -62,7 +48,7 @@ class TwsParitySpec2 extends SparkSpec {
   test("userActivityTws: processing-time TTL expires abandoned state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
+    withConf(SparkSpec.RocksDb) {
       val mem = MemoryStream[JobEvent]
       val q = Streams.userActivityTws(mem.toDS(), recentK = 3,
         ttlMs = Some(100L))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.streaming.Streams
 
 /** transformWithState RESTART: the arbitrary-state v2 gates must
@@ -12,21 +11,15 @@ import graft.streaming.Streams
   * restart on the SAME checkpoint, and assert the ladder CONTINUES
   * (failures 3,4 after a restart that saw 1,2 — not 1,2 again), plus
   * exactly-once sink output across the boundary. */
-class TwsRestartSpec extends SparkSpec {
-
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+class TwsRestartSpec extends SparkSpec with TempDirs {
 
   test("retryGateTws resumes its ValueState counter across a " +
     "stop/restart on the same RocksDB checkpoint") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_tws_restart").toString
+    val root = tempDir("graft_tws_restart")
     val src = s"$root/src"; val out = s"$root/out"; val chk = s"$root/chk"
     new java.io.File(src).mkdirs()
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try {
+    withConf(SparkSpec.RocksDb) {
       def start() = Streams.retryGateTws(
         spark.readStream
           .schema("event_id LONG, user_id LONG, event_type STRING")
@@ -65,9 +58,6 @@ class TwsRestartSpec extends SparkSpec {
         s"state did not carry across the restart: $got")
       // exactly-once: epoch-1 decisions were not re-emitted
       assert(got.size === 4)
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 }

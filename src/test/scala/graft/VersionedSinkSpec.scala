@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 import graft.streaming.VersionedSink
@@ -10,11 +9,11 @@ import graft.streaming.VersionedSink
   * and a checkpoint restart continues the version chain without
   * double-applying.  Driven through a replayable file source
   * (MemoryStream cannot recover across restarts by design). */
-class VersionedSinkSpec extends SparkSpec {
+class VersionedSinkSpec extends SparkSpec with TempDirs {
 
   test("micro-batches commit as versions; replays and restarts apply once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsink").toString
+    val dir = tempDir("graft_vsink")
     val src = s"$dir/src"; val chk = s"$dir/chk"; val root = s"$dir/table"
     new java.io.File(src).mkdirs()
 
@@ -68,7 +67,7 @@ class VersionedSinkSpec extends SparkSpec {
   test("a two-events-per-key CDC batch upserts exactly one row per key " +
     "(keep-last by orderCol)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsink_dup").toString
+    val dir = tempDir("graft_vsink_dup")
     val src = s"$dir/src"; val chk = s"$dir/chk"; val root = s"$dir/table"
     new java.io.File(src).mkdirs()
 
@@ -107,7 +106,7 @@ class VersionedSinkSpec extends SparkSpec {
   test("a batch replayed after vacuum reclaimed its manifest is still " +
     "not re-applied (txn ledger survives manifest retention)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsink_vac").toString
+    val dir = tempDir("graft_vsink_vac")
     val root = s"$dir/table"
 
     // batch 0 loads, batches 1..3 merge, each with a sink-style txn id
@@ -155,7 +154,7 @@ class VersionedSinkSpec extends SparkSpec {
     "right end state per key, keep-last across change types, " +
     "exactly-once across restarts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_cdcsink").toString
+    val dir = tempDir("graft_cdcsink")
     val src = s"$dir/src"; val chk = s"$dir/chk"; val root = s"$dir/table"
     new java.io.File(src).mkdirs()
 

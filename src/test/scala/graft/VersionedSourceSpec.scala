@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 import graft.streaming.VersionedSource
@@ -10,12 +9,12 @@ import graft.streaming.VersionedSource
   * change feed, in commit order, exactly once across restarts — with
   * catch-up (commits made before the follower started) and live
   * commits behaving identically. */
-class VersionedSourceSpec extends SparkSpec {
+class VersionedSourceSpec extends SparkSpec with TempDirs {
 
   test("the follower delivers each commit's change feed in order, " +
     "exactly once across restarts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsource").toString
+    val dir = tempDir("graft_vsource")
     val root = s"$dir/table"; val chk = s"$dir/chk"
 
     // two commits BEFORE the follower exists: catch-up territory
@@ -60,7 +59,7 @@ class VersionedSourceSpec extends SparkSpec {
   test("a follower started fresh on a VACUUMED table bootstraps from " +
     "the earliest surviving version instead of crashing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsource_vac").toString
+    val dir = tempDir("graft_vsource_vac")
     val root = s"$dir/table"; val chk = s"$dir/chk"
 
     VersionedTable.append(spark, root,
@@ -108,7 +107,7 @@ class VersionedSourceSpec extends SparkSpec {
     * mid-stream data-loss tests below. Returns (root, chk). */
   private def midStreamLossFixture(tag: String): (String, String) = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(s"graft_vsource_$tag").toString
+    val dir = tempDir(s"graft_vsource_$tag")
     val root = s"$dir/table"; val chk = s"$dir/chk"
     VersionedTable.append(spark, root,
       (0L until 10L).map(i => (i, s"t$i")).toDF("doc_id", "text"),
@@ -231,7 +230,7 @@ class VersionedSourceSpec extends SparkSpec {
     "backlog arrives over ceil(5/2) rate-limited micro-batches, in " +
     "order, nothing lost or duplicated") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_vsource_rate").toString
+    val dir = tempDir("graft_vsource_rate")
     val root = s"$dir/table"; val chk = s"$dir/chk"
     VersionedTable.append(spark, root,
       (0L until 10L).map(i => (i, s"t$i")).toDF("doc_id", "text"),

@@ -53,7 +53,6 @@ class WinnowFpsSpec extends SparkSpec {
   }
 
   test("SQL surface: winnow_fps registered, defaults k=8 w=4") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("wf_docs")
     val viaSql = spark.sql(
       """SELECT doc_id, winnow_fps(text) AS fps FROM wf_docs

@@ -55,16 +55,6 @@ class SqDistNativeSpec extends SparkSpec {
         Left("overflow")
     }
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Kernel and HOF agree on `rows`, on both evaluation paths. */
   private def agree(rows: Seq[(Arr, Arr)]): Boolean = {
     val df = frame(rows)
@@ -83,7 +73,7 @@ class SqDistNativeSpec extends SparkSpec {
 
   test("random pairs: empty arrays, length mismatches and NULLs agree") {
     // a generated-code compile error must fail, not fall back
-    withConf("spark.sql.codegen.fallback", "false") {
+    withConf("spark.sql.codegen.fallback" -> "false") {
       val small = arr(Gen.chooseNum(-20L, 20L))
       val fixed = Seq[(Arr, Arr)](
         (Some(Nil), Some(Nil)),                       // 0
@@ -105,7 +95,7 @@ class SqDistNativeSpec extends SparkSpec {
     val square: (Arr, Arr) = (Some(Seq(Some(1L << 32))), Some(Seq(Some(-1L))))
     val sum: (Arr, Arr) = (Some(Seq(Some(3000000000L), Some(3000000000L))),
       Some(Seq(Some(0L), Some(0L))))
-    withConf("spark.sql.ansi.enabled", "true") {
+    withConf("spark.sql.ansi.enabled" -> "true") {
       Seq(square, sum).foreach { row =>
         assert(outcome(frame(Seq(row)), codegen(Vector2Queries.sqDist)) ==
           Left("overflow"))
@@ -113,7 +103,7 @@ class SqDistNativeSpec extends SparkSpec {
       }
       check(Prop.forAll(Gen.zip(big, big))(row => agree(Seq(row))))
     }
-    withConf("spark.sql.ansi.enabled", "false") {
+    withConf("spark.sql.ansi.enabled" -> "false") {
       assert(outcome(frame(Seq(square)), codegen(Vector2Queries.sqDist)) ==
         Right(Seq(Some((1L << 33) + 1))))
       assert(agree(Seq(square, sum)))
