@@ -381,15 +381,12 @@ object Curation69Queries {
       "sql_catalog_time_travel_read",
       (s, d) => {
         val root = table(s, d)
-        val q = graft.sources.v2.GraftSql.sql(s,
-          s"SELECT lang, count(*) AS n_docs, " +
-            "sum(n_chars) AS sum_n_chars " +
-            s"FROM graft.`$root` VERSION AS OF 2 " +
-            "GROUP BY lang ORDER BY lang")
-        // GraftSql.sql: the works-on-any-session SQL entry — on
-        // extension-enabled sessions (Verify/Bench) the injected rule
-        // already swapped during analysis and this re-plan is a no-op
-        q
+        // the injected resolution rule swaps the catalog relation for
+        // the graft-table scan during analysis
+        s.sql(s"SELECT lang, count(*) AS n_docs, " +
+          "sum(n_chars) AS sum_n_chars " +
+          s"FROM graft.`$root` VERSION AS OF 2 " +
+          "GROUP BY lang ORDER BY lang")
       },
       Some(s"""WITH $dmlStateSql
         |SELECT lang, count(*)::BIGINT AS n_docs,

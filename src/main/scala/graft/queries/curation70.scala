@@ -4,17 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Scratch, Tables}
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSql
 
 /** Batch 70: the SQL WRITE/DML surface of the versioned table — the
   * half round 11's read-only catalog left out.  Every mutation here
   * is issued as SQL TEXT (`INSERT INTO` / `UPDATE` / `MERGE INTO` /
-  * `DELETE FROM` over `graft.`/root``), converted during analysis by
-  * [[graft.sources.v2.GraftDmlRule]] (extension sessions) or at parse
-  * level by [[GraftSql.sql]] (any session) into the SAME library DML
-  * commands the programmatic API runs — manifest commits, CHECK
-  * constraints, stats/bloom recording and optimistic concurrency
-  * included.  A SQL-only user can now operate the table end to end:
+  * `DELETE FROM` over `graft.`/root``) through plain `spark.sql`,
+  * converted during analysis by [[graft.sources.v2.GraftDmlRule]] into
+  * the SAME library DML commands the programmatic API runs — manifest
+  * commits, CHECK constraints, stats/bloom recording and optimistic
+  * concurrency included.  A SQL-only user can now operate the table end to end:
   * reference-pipeline workflows (re-crawl appends, redaction updates,
   * contamination deletes, dedup merges) all express as the four
   * statements a lakehouse operator already knows.
@@ -22,7 +20,7 @@ import graft.sources.v2.GraftSql
   * The shared five-version table (built ONCE per session+dataset,
   * every commit after the seed pure SQL):
   *
-  *   v1 seed    = documents через the connector (keyCol doc_id)
+  *   v1 seed    = documents through the connector (keyCol doc_id)
   *   v2 INSERT  = `INSERT INTO ... SELECT doc_id + 10000000, ...
   *                WHERE doc_id % 11 = 0` (a re-crawl shard)
   *   v3 UPDATE  = `UPDATE ... SET text = 'S ' || text,
@@ -90,15 +88,15 @@ object Curation70Queries {
       docs.write.format("graft-table").option("keyCol", "doc_id")
         .option("numFiles", "4").save(root)
       docs.createOrReplaceTempView("graft_sqldml_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""INSERT INTO graft.`$root`
            |SELECT doc_id + 10000000, text, lang, source, n_chars
            |FROM graft_sqldml_docs WHERE doc_id % 11 = 0""".stripMargin)
-      GraftSql.sql(s,
+      s.sql(
         s"""UPDATE graft.`$root`
            |SET text = 'S ' || text, n_chars = n_chars + 50
            |WHERE lang = 'en' AND doc_id % 4 = 1""".stripMargin)
-      GraftSql.sql(s,
+      s.sql(
         s"""MERGE INTO graft.`$root` AS t USING (
            |  SELECT doc_id, 'M ' || text AS text, lang, source,
            |         n_chars + 7 AS n_chars
@@ -116,9 +114,8 @@ object Curation70Queries {
            |  VALUES (s.doc_id, s.text, s.lang, s.source, s.n_chars)
            |WHEN NOT MATCHED BY SOURCE AND t.lang = 'zh'
            |  AND t.doc_id % 2 = 0 THEN DELETE""".stripMargin)
-      GraftSql.sql(s,
-        s"DELETE FROM graft.`$root` " +
-          "WHERE lang = 'it' AND doc_id % 3 = 0")
+      s.sql(s"DELETE FROM graft.`$root` " +
+        "WHERE lang = 'it' AND doc_id % 3 = 0")
       ()
     }
 
@@ -128,7 +125,7 @@ object Curation70Queries {
       "sql_dml_lifecycle",
       (s, d) => {
         val root = table(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang
@@ -154,9 +151,8 @@ object Curation70Queries {
       "sql_dml_history_read",
       (s, d) => {
         val root = table(s, d)
-        (1 to 5).map(v => GraftSql.sql(s,
-          s"SELECT CAST($v AS BIGINT) AS version, " +
-            s"count(*) AS n_rows FROM graft.`$root` VERSION AS OF $v"))
+        (1 to 5).map(v => s.sql(s"SELECT CAST($v AS BIGINT) AS version, " +
+          s"count(*) AS n_rows FROM graft.`$root` VERSION AS OF $v"))
           .reduce(_ unionByName _)
           .orderBy(col("version"))
       },
@@ -181,7 +177,7 @@ object Curation70Queries {
       "sql_describe_history",
       (s, d) => {
         val root = table(s, d)
-        GraftSql.sql(s, s"DESCRIBE HISTORY graft.`$root`")
+        s.sql(s"DESCRIBE HISTORY graft.`$root`")
           .select(col("version").cast("long").as("version"),
             col("op"), col("num_live_rows"))
           .orderBy(col("version"))
@@ -196,8 +192,8 @@ object Curation70Queries {
         |ORDER BY version""".stripMargin),
       "DESCRIBE HISTORY as SQL TEXT — the maintenance mini-grammar " +
         "standard Spark cannot parse, served through the delegating " +
-        "parser extension (Delta's DeltaSqlParser construction) on " +
-        "extension sessions and GraftSql.sql anywhere.  The audit " +
+        "parser extension (Delta's DeltaSqlParser construction) that " +
+        "every graft session loads.  The audit " +
         "readout (per-version op + live row count, manifests only, " +
         "no data scanned) hash-matches the oracle's reconstruction " +
         "of the same five SQL-driven lifecycle states — closing the " +

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Scratch, Tables}
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSql
 
 /** Batch 71: the round-13 SQL-surface closers — CREATE TABLE / CTAS
   * (a table born, filled and read ENTIRELY by SQL text; round 12's
@@ -25,21 +24,21 @@ object Curation71Queries {
     Scratch.buildOnce(s, d, "sqlcreate") { root =>
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_create_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""CREATE TABLE graft.`$root` (
            |  doc_id BIGINT, text STRING, lang STRING, source STRING,
            |  n_chars BIGINT,
            |  CONSTRAINT n_chars_nonneg CHECK (n_chars >= 0))
            |TBLPROPERTIES ('table.key'='doc_id')""".stripMargin)
-      GraftSql.sql(s,
+      s.sql(
         s"""INSERT INTO graft.`$root`
            |SELECT doc_id, text, lang, source, n_chars
            |FROM graft_create_docs WHERE doc_id % 2 = 0""".stripMargin)
-      GraftSql.sql(s,
+      s.sql(
         s"""INSERT INTO graft.`$root`
            |SELECT doc_id, text, lang, source, n_chars
            |FROM graft_create_docs WHERE doc_id % 2 = 1""".stripMargin)
-      GraftSql.sql(s, s"ALTER TABLE graft.`$root` ADD CONSTRAINT " +
+      s.sql(s"ALTER TABLE graft.`$root` ADD CONSTRAINT " +
         "lang_known CHECK (lang IS NOT NULL)")
       ()
     }
@@ -49,7 +48,7 @@ object Curation71Queries {
     Scratch.buildOnce(s, d, "sqlctas") { root =>
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_ctas_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""CREATE TABLE graft.`$root`
            |TBLPROPERTIES ('table.key'='doc_id')
            |AS SELECT doc_id, lang, n_chars FROM graft_ctas_docs
@@ -65,7 +64,7 @@ object Curation71Queries {
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_cmp_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""MERGE INTO graft.`$root` AS t USING (
            |  SELECT doc_id, n_chars + 1000 AS n_chars
            |  FROM graft_cmp_docs WHERE doc_id % 5 = 0) AS s
@@ -84,7 +83,7 @@ object Curation71Queries {
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_decon_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""DELETE FROM graft.`$root`
            |WHERE doc_id IN (SELECT doc_id FROM graft_decon_docs
            |                 WHERE n_chars < 120)
@@ -99,7 +98,7 @@ object Curation71Queries {
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_evo_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""MERGE WITH SCHEMA EVOLUTION INTO graft.`$root` AS t
            |USING (SELECT doc_id, n_chars % 100 AS quality
            |       FROM graft_evo_docs WHERE doc_id % 7 = 0) AS s
@@ -118,7 +117,7 @@ object Curation71Queries {
           "named_struct('src', source, 'nc', n_chars) AS props")
         .write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
-      GraftSql.sql(s,
+      s.sql(
         s"""UPDATE graft.`$root`
            |SET props.nc = props.nc + 1000,
            |    props.src = upper(props.src)
@@ -133,11 +132,11 @@ object Curation71Queries {
     Scratch.buildOnce(s, d, "sqlmordml") { root =>
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
-      GraftSql.sql(s, s"ALTER TABLE graft.`$root` " +
+      s.sql(s"ALTER TABLE graft.`$root` " +
         "SET TBLPROPERTIES ('dml.mode'='mor')")
-      GraftSql.sql(s, s"UPDATE graft.`$root` " +
+      s.sql(s"UPDATE graft.`$root` " +
         "SET n_chars = n_chars + 500 WHERE lang = 'en'")
-      GraftSql.sql(s, s"DELETE FROM graft.`$root` WHERE lang = 'it'")
+      s.sql(s"DELETE FROM graft.`$root` WHERE lang = 'it'")
       ()
     }
 
@@ -150,7 +149,7 @@ object Curation71Queries {
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_rw_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""INSERT INTO graft.`$root` REPLACE WHERE lang = 'de'
            |SELECT doc_id, text, lang, source, n_chars + 7
            |FROM graft_rw_docs
@@ -165,13 +164,13 @@ object Curation71Queries {
     Scratch.buildOnce(s, d, "sqltrunc") { root =>
       Tables.documents(s, d)
         .createOrReplaceTempView("graft_trunc_docs")
-      GraftSql.sql(s,
+      s.sql(
         s"""CREATE TABLE graft.`$root` (doc_id BIGINT, lang STRING,
            |n_chars BIGINT) TBLPROPERTIES ('table.key'='doc_id')""".stripMargin)
-      GraftSql.sql(s, s"INSERT INTO graft.`$root` " +
+      s.sql(s"INSERT INTO graft.`$root` " +
         "SELECT doc_id, lang, n_chars FROM graft_trunc_docs")
       s.sql(s"TRUNCATE TABLE graft.`$root`")
-      GraftSql.sql(s, s"INSERT INTO graft.`$root` " +
+      s.sql(s"INSERT INTO graft.`$root` " +
         "SELECT doc_id, lang, n_chars FROM graft_trunc_docs " +
         "WHERE lang = 'en'")
       ()
@@ -183,7 +182,7 @@ object Curation71Queries {
       "sql_create_insert_read",
       (s, d) => {
         val root = createdTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)
@@ -210,7 +209,7 @@ object Curation71Queries {
         // time-travel to v1: the CREATE commit itself — zero rows,
         // full declared schema (the recorded table.schema is the read
         // schema even with no file to template from)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT count(*) AS n_rows,
              |       count(DISTINCT lang) AS n_langs
              |FROM graft.`$root` VERSION AS OF 1""".stripMargin)
@@ -226,7 +225,7 @@ object Curation71Queries {
       "sql_ctas_read",
       (s, d) => {
         val root = ctasTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars,
              |       min(doc_id) AS min_doc
@@ -252,7 +251,7 @@ object Curation71Queries {
         val root = createdTable(s, d)
         // SHOW TBLPROPERTIES serves the head manifest's properties;
         // constraint entries carry the DDL-declared predicates
-        GraftSql.sql(s, s"SHOW TBLPROPERTIES graft.`$root`")
+        s.sql(s"SHOW TBLPROPERTIES graft.`$root`")
           .filter(col("key").startsWith("constraint."))
           .select(col("key"), col("value"))
           .orderBy(col("key"))
@@ -276,7 +275,7 @@ object Curation71Queries {
       "sql_merge_compound_on",
       (s, d) => {
         val root = compoundTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)
@@ -312,7 +311,7 @@ object Curation71Queries {
       "sql_delete_in_subquery",
       (s, d) => {
         val root = decontamTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)
@@ -337,7 +336,7 @@ object Curation71Queries {
       "sql_merge_schema_evolution",
       (s, d) => {
         val root = evolveTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       count(quality) AS n_quality,
              |       sum(quality) AS sum_quality
@@ -363,7 +362,7 @@ object Curation71Queries {
       "sql_update_nested_field",
       (s, d) => {
         val root = nestedTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(props.nc) AS sum_nc,
              |       count(DISTINCT props.src) AS n_src
@@ -399,7 +398,7 @@ object Curation71Queries {
           .filter(_.endsWith("-mor")).sorted.mkString(",")
         val headPaths = head.files.map(_.path).toSet
         val carried = v1.files.map(_.path).forall(headPaths.contains)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)
@@ -427,7 +426,7 @@ object Curation71Queries {
       "sql_replace_where_read",
       (s, d) => {
         val root = replaceWhereTable(s, d)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)
@@ -461,12 +460,12 @@ object Curation71Queries {
             "truncate").get
         val emptyAtTrunc =
           VersionedTable.snapshot(s, root, truncV).files.isEmpty
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs FROM graft.`$root`
              |GROUP BY lang ORDER BY lang""".stripMargin)
           .withColumn("truncate_commit_empty", lit(emptyAtTrunc))
           .withColumn("pre_truncate_rows",
-            lit(GraftSql.sql(s, s"SELECT count(*) AS n FROM " +
+            lit(s.sql(s"SELECT count(*) AS n FROM " +
               s"graft.`$root` VERSION AS OF ${truncV - 1}")
               .head().getLong(0)))
       },

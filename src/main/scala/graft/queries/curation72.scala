@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 import graft.{QueryDef, Scratch, Tables}
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSql
 
 /** Batch 72: SURVEY-name closure.  Two rows in SURVEY.md §2 passed
   * under registry names that differ from the survey column
@@ -29,18 +28,18 @@ object Curation72Queries {
     Scratch.buildOnce(s, d, "sqlmorkeyin") { root =>
       Tables.documents(s, d).write.format("graft-table")
         .option("keyCol", "doc_id").option("numFiles", "4").save(root)
-      GraftSql.sql(s, s"ALTER TABLE graft.`$root` " +
+      s.sql(s"ALTER TABLE graft.`$root` " +
         "SET TBLPROPERTIES ('dml.mode'='mor')")
       Tables.documents(s, d).select(col("doc_id"))
         .createOrReplaceTempView("graft_mork_keys")
-      GraftSql.sql(s, s"UPDATE graft.`$root` SET n_chars = " +
+      s.sql(s"UPDATE graft.`$root` SET n_chars = " +
         "n_chars + 1000 WHERE doc_id IN " +
         "(SELECT doc_id FROM graft_mork_keys WHERE doc_id % 10 = 3)")
-      GraftSql.sql(s, s"UPDATE graft.`$root` SET n_chars = " +
+      s.sql(s"UPDATE graft.`$root` SET n_chars = " +
         "n_chars + 50000 WHERE doc_id IN " +
         "(SELECT doc_id FROM graft_mork_keys WHERE doc_id % 10 = 3) " +
         "AND lang = 'en'")
-      GraftSql.sql(s, s"DELETE FROM graft.`$root` WHERE doc_id IN " +
+      s.sql(s"DELETE FROM graft.`$root` WHERE doc_id IN " +
         "(SELECT doc_id FROM graft_mork_keys WHERE doc_id % 10 = 7) " +
         "AND lang = 'de'")
       ()
@@ -117,7 +116,7 @@ object Curation72Queries {
           .sorted.mkString(",")
         val headPaths = head.files.map(_.path).toSet
         val carried = v1.files.map(_.path).forall(headPaths.contains)
-        GraftSql.sql(s,
+        s.sql(
           s"""SELECT lang, count(*) AS n_docs,
              |       sum(n_chars) AS sum_n_chars
              |FROM graft.`$root` GROUP BY lang ORDER BY lang""".stripMargin)

@@ -1082,8 +1082,7 @@ object VersionedTable {
     * the recorded schema's column type.  [[condBounds]] extracts
     * PARSE-LEVEL literals that never saw the analyzer, so a
     * type-mismatched comparison the analyzer would have wrapped in a
-    * Cast (`DELETE ... WHERE longCol = '5'` through the GraftSql parse
-    * path, or `col("x") === "5"` through the DSL) arrives here as a
+    * Cast (`col("x") === "5"` through the DSL) arrives here as a
     * raw UTF8String — and probing a bloom built from longs with a
     * string hash makes every probe bit miss, falsely "proving" an
     * interloper-added file disjoint (the rebase would commit and a

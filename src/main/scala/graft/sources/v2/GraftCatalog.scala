@@ -42,9 +42,9 @@ import graft.sources.VersionedTable
   * The FULL lifecycle is SQL-addressable: CREATE TABLE / CTAS commit
   * through [[VersionedTable.create]] (schema + `table.key` + inline
   * CHECK constraints), INSERT/UPDATE/DELETE/MERGE convert to library
-  * DML ([[GraftDmlRule]] / [[GraftSql.sql]]), ALTER TABLE covers
-  * columns, properties and constraints, and `df.writeTo(...)` lands on
-  * the V1-fallback write below — every path one manifest commit. */
+  * DML ([[GraftDmlRule]], which also converts `df.writeTo(...)`),
+  * ALTER TABLE covers columns, properties and constraints — every path
+  * one manifest commit. */
 class GraftCatalog extends TableCatalog {
   private var catalogName: String = "graft"
 
@@ -312,21 +312,19 @@ final class GraftSqlTable(val root: String,
       options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     throw new UnsupportedOperationException(
-      s"graft.`$root` resolves through GraftSqlResolution; set " +
-        "spark.sql.extensions=graft.functions.GraftExtensions (or " +
-        "apply the rule to the analyzed plan) so the catalog relation " +
-        "is served by the graft-table vectorized scan")
+      s"graft.`$root` resolves through GraftSqlResolution; build the " +
+        "session with graft.GraftSession (or set spark.sql.extensions=" +
+        "graft.functions.GraftExtensions) so the catalog relation is " +
+        "served by the graft-table vectorized scan")
 
-  /** V1-fallback write: on extension sessions [[GraftDmlRule]]
-    * converts INSERT/AppendData during analysis and this is never
-    * built, but CTAS (whose write is internal to CreateTableAsSelect
-    * execution, not an AppendData plan node) and
-    * `df.writeTo("graft.`/t`").append()` on extension-less sessions
-    * land here — delegate to the SAME library append/overwrite every
-    * other write path runs (manifest commit, constraints, stats,
-    * blooms).  The V1Write shape is Delta's WriteIntoDeltaBuilder
-    * construction: Spark hands the fully-reconciled DataFrame to an
-    * InsertableRelation, no per-row v2 writer protocol needed. */
+  /** V1-fallback write: [[GraftDmlRule]] converts SQL INSERT, CTAS's
+    * write and `df.writeTo` during analysis, so only a write that
+    * reaches the connector without passing the rule lands here —
+    * delegate to the SAME library append/overwrite every other write
+    * path runs (manifest commit, constraints, stats, blooms).  The
+    * V1Write shape is Delta's WriteIntoDeltaBuilder construction: Spark
+    * hands the fully-reconciled DataFrame to an InsertableRelation, no
+    * per-row v2 writer protocol needed. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -434,14 +432,7 @@ object GraftSqlTable {
   * [[GraftSqlTable]] with the V1 `HadoopFsRelation` the `graft-table`
   * connector builds — keeping the v2 relation's OUTPUT attribute ids,
   * so every reference already resolved against it stays valid (the
-  * same swap Delta's `DeltaAnalysis.fromV2Relation` performs).
-  *
-  * `spark.sql.extensions` is a STATIC conf: it binds when the JVM's
-  * FIRST session is built and cannot be added to a later session on
-  * the same context.  For sessions built without it, [[GraftSql.sql]]
-  * applies the same swap to the already-analyzed plan via
-  * [[applyManually]] (`transformUp` — the resolve* family no-ops on
-  * plans already marked analyzed, by design). */
+  * same swap Delta's `DeltaAnalysis.fromV2Relation` performs). */
 final case class GraftSqlResolution(session: SparkSession)
     extends Rule[LogicalPlan] {
 
@@ -508,64 +499,12 @@ final case class GraftSqlResolution(session: SparkSession)
     m
   }
 
-  /** Analyzer-phase form (the injected hook). */
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val targets = writeTargets(plan)
     plan.resolveOperatorsUp {
       case rel @ DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _)
           if !targets.containsKey(rel) =>
         swap(rel, t)
-    }
-  }
-
-  /** Post-analysis form, for plans whose session never installed the
-    * extension (resolveOperatorsUp skips analyzed subtrees). */
-  def applyManually(plan: LogicalPlan): LogicalPlan = {
-    val targets = writeTargets(plan)
-    plan.transformUp {
-      case rel @ DataSourceV2Relation(t: GraftSqlTable, _, _, _, _, _)
-          if !targets.containsKey(rel) =>
-        swap(rel, t)
-    }
-  }
-}
-
-/** SQL entry point that works on ANY session: `spark.sql` when the
-  * extension is installed (the swap already happened during analysis,
-  * applyManually is a no-op), and parse -> analyze -> swap -> replan
-  * when it is not (shared sessions built before graft was on the
-  * classpath, notebooks without static-conf control).  DML statements
-  * (INSERT / UPDATE / DELETE / MERGE over `graft.`/root``) are
-  * intercepted at PARSE level and converted by [[GraftDml]] — eager
-  * command analysis would otherwise reject them before the swap could
-  * run. */
-object GraftSql {
-  def sql(s: SparkSession, sqlText: String)
-      : org.apache.spark.sql.DataFrame = {
-    // maintenance grammar first: standard Spark SQL cannot parse it,
-    // and on extension sessions the injected parser handles it before
-    // we would (parsePlan below then returns the command directly)
-    GraftMaintenanceSql.fromText(s, sqlText).foreach { cmd =>
-      return org.apache.spark.sql.GraftShims.ofRows(s, cmd)
-    }
-    val parsed = org.apache.spark.sql.GraftShims.parsePlan(s, sqlText)
-    GraftDml.fromParsed(s, parsed) match {
-      case Some(cmd) =>
-        // commands execute eagerly on Dataset construction
-        org.apache.spark.sql.GraftShims.ofRows(s, cmd)
-      case None =>
-        val df = s.sql(sqlText)
-        val analyzed = df.queryExecution.analyzed
-        // a COMMAND (CREATE TABLE, ALTER, ...) already executed
-        // eagerly inside s.sql — re-wrapping its analyzed plan would
-        // run it a second time (a duplicate CREATE, a double ALTER)
-        if (analyzed.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.logical.Command] ||
-            analyzed.isInstanceOf[
-              org.apache.spark.sql.catalyst.plans.logical.CommandResult])
-          df
-        else org.apache.spark.sql.GraftShims.ofRows(s,
-          GraftSqlResolution(s).applyManually(analyzed))
     }
   }
 }

@@ -13,8 +13,7 @@ import graft.sources.VersionedTable
 /** The MAINTENANCE half of the SQL surface — the statements standard
   * Spark SQL has no grammar for, which Delta ships via a delegating
   * parser extension; graft does the same (GraftExtensions injects
-  * [[GraftSqlParser]], and [[GraftSql.sql]] applies the identical
-  * mini-grammar on sessions without the extension):
+  * [[GraftSqlParser]], so plain `spark.sql` takes this mini-grammar):
   *
   *   DESCRIBE HISTORY graft.`/root`
   *   DESCRIBE DETAIL  graft.`/root`
@@ -50,12 +49,11 @@ object GraftMaintenanceSql {
   private val Fsck =
     s"(?is)^\\s*FSCK\\s+REPAIR\\s+TABLE\\s+$Ident(\\s+DRY\\s+RUN)?\\s*;?\\s*$$".r
   // ALTER TABLE ... ADD/DROP CONSTRAINT intercept: Spark 4 parses
-  // these natively but routes ADD through a validation SCAN of the v2
-  // relation (extension-less sessions cannot build it) and re-checks
-  // what the library's addConstraint already validates — the
-  // mini-grammar maps them straight onto the constraint commits,
-  // uniformly on every session (the library validates existing rows
-  // and names the constraint in violations)
+  // these natively but routes ADD through its own validation scan,
+  // re-checking what the library's addConstraint already validates —
+  // the mini-grammar maps them straight onto the constraint commits
+  // (the library validates existing rows once and names the
+  // constraint in violations)
   private val AddConstr =
     s"(?is)^\\s*ALTER\\s+TABLE\\s+$Ident\\s+ADD\\s+CONSTRAINT\\s+(\\w+)\\s+CHECK\\s*\\((.+)\\)\\s*;?\\s*$$".r
   private val DropConstr =
@@ -107,13 +105,6 @@ object GraftMaintenanceSql {
   private[v2] def attrsOf(schema: StructType): Seq[Attribute] =
     schema.fields.toIndexedSeq.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable)())
-
-  private[v2] def keyOf(s: SparkSession, root: String): String =
-    VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"maintenance SQL on $root needs a recorded table.key"))
 }
 
 /** `DESCRIBE HISTORY graft.`/root``. */
@@ -150,7 +141,7 @@ final case class GraftOptimizeCommand(root: String,
       org.apache.spark.sql.types.StructField("num_files_after",
         LongType, nullable = false))))
   override def run(s: SparkSession): Seq[Row] = {
-    val key = GraftMaintenanceSql.keyOf(s, root)
+    val key = GraftDml.keyOf(s, root)
     val before = VersionedTable.latestVersion(s, root)
       .map(v => VersionedTable.snapshot(s, root, v).files.size.toLong)
       .getOrElse(0L)
@@ -307,19 +298,20 @@ final class GraftSqlParser(session: SparkSession,
     GraftMaintenanceSql.fromText(session, sqlText)
       .foreach(cmd => return cmd)
     val parsed = parse
-    // MERGE ... WITH SCHEMA EVOLUTION over a graft target must convert
-    // BEFORE analysis: the analyzer's assignment resolution throws on
-    // the source-born column (it cannot resolve against the
-    // not-yet-widened target) before any resolution rule could fire —
-    // so the extension converts the statement here, with the same
-    // by-name converter GraftSql.sql applies on extension-less
-    // sessions.  Ordinary merges keep the analyzer-resolved
-    // GraftDmlRule path.
+    // MERGE ... WITH SCHEMA EVOLUTION over a graft target is the one
+    // DML statement converted BEFORE analysis: the analyzer's
+    // assignment resolution throws on the source-born column (it
+    // cannot resolve against the not-yet-widened target) before any
+    // resolution rule could fire, so mergeCommand attributes its
+    // references by alias and schema here.  Every other DML statement
+    // converts in GraftDmlRule on the analyzed plan.
     parsed match {
       case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
-          if m.withSchemaEvolution &&
-            GraftDml.target(session, m.targetTable).isDefined =>
-        GraftDml.fromParsed(session, parsed).getOrElse(parsed)
+          if m.withSchemaEvolution =>
+        GraftDml.target(session, m.targetTable)
+          .map { case (root, alias) =>
+            GraftDml.mergeCommand(session, root, alias, m) }
+          .getOrElse(parsed)
       case _ => parsed
     }
   }

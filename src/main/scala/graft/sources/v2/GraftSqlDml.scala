@@ -26,17 +26,15 @@ import graft.sources.VersionedTable.{MatchedDelete, MatchedUpdate, MergeClause, 
   * optimistic-concurrency loop for free.  Nothing row-level is
   * re-implemented here: this file is pure plan translation.
   *
-  * Two entry modes share one converter:
-  *  - [[GraftDmlRule]], injected via `graft.functions.GraftExtensions`
-  *    (`spark.sql.extensions`): plain `spark.sql("UPDATE ...")` works.
-  *    The rule fires on RESOLVED DML nodes (the analyzer has already
-  *    bound column references against the catalog relation).
-  *  - [[GraftSql.sql]] on sessions without the extension: the
-  *    statement is intercepted at PARSE level (eager command analysis
-  *    would otherwise reject DML on a non-row-level-operation table)
-  *    and converted from the unresolved tree, resolving column
-  *    references by name.  Parse-level limitations are explicit:
-  *    top-level columns only, no subqueries in conditions.
+  * Every statement is plain `spark.sql` text.  [[GraftDmlRule]],
+  * injected via `graft.functions.GraftExtensions` (which every
+  * `graft.GraftSession` loads), converts RESOLVED DML nodes: the
+  * analyzer has already bound column references against the catalog
+  * relation.  The one exception is MERGE ... WITH SCHEMA EVOLUTION:
+  * its assignments name source-born columns the not-yet-widened
+  * target cannot resolve, so [[GraftSqlParser]] converts it at PARSE
+  * level through [[GraftDml.mergeCommand]], which then attributes
+  * references by alias qualifier and schema lookup.
   *
   * Scale: identical to the library DML the commands delegate to —
   * driver state is O(files touched), the key set of a MERGE source
@@ -98,65 +96,45 @@ object GraftDml {
   }
 
   /** The table's recorded key column — every graft write records it,
-    * and SQL DML is meaningless without one. */
-  private def keyOf(s: SparkSession, root: String): String =
-    VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"graft SQL DML on $root needs a recorded table.key property " +
-          "(write the table through the graft-table connector or the " +
-          "library API first)"))
+    * and SQL DML and maintenance are meaningless without one. */
+  private[v2] def keyOf(s: SparkSession, root: String): String =
+    keyAndMor(s, root)._1
 
   /** The table's recorded logical schema (the same derivation the
     * catalog's `GraftSqlTable.schema()` uses). */
   private def tableSchema(s: SparkSession, root: String): StructType =
     new GraftSqlTable(root, Map.empty).schema()
 
-  /** Whether the table's head carries `dml.mode=mor` — ONE resolution
-    * shared by every SQL DML command so the copy-on-write vs
-    * deletion-vector routing can never drift between them. */
-  private[v2] def isMor(s: SparkSession, root: String): Boolean =
-    VersionedTable.latestVersion(s, root)
+  /** The key and whether the head carries `dml.mode=mor`, from one
+    * head read — ONE resolution shared by every SQL UPDATE/DELETE
+    * command so the copy-on-write vs deletion-vector routing can never
+    * drift between them. */
+  private[v2] def keyAndMor(s: SparkSession, root: String)
+      : (String, Boolean) = {
+    val props = VersionedTable.latestVersion(s, root)
       .map(v => VersionedTable.snapshot(s, root, v).props)
-      .exists(_.get(DmlModeProp).contains("mor"))
+      .getOrElse(Map.empty[String, String])
+    val key = props.getOrElse(VersionedTable.TableKeyProp,
+      throw new IllegalArgumentException(
+        s"graft SQL on $root needs a recorded table.key property " +
+          "(create the table with one, or write it through the " +
+          "graft-table connector or the library API first)"))
+    (key, props.get(DmlModeProp).contains("mor"))
+  }
 
   private def noSubquery(e: Expression, what: String): Unit =
     require(!e.exists(_.isInstanceOf[SubqueryExpression]),
       s"graft SQL $what does not support subqueries in this release; " +
         "compute the subquery into a column or use the library API")
 
-  /** Strip the (single-table) qualifier off a column reference. */
-  private def bareName(parts: Seq[String], alias: Option[String],
-      root: String): String = parts match {
-    case Seq(n) => n
-    case Seq(q, n) if alias.contains(q) || q == root => n
-    case _ => throw new IllegalArgumentException(
-      s"unsupported column reference `${parts.mkString(".")}` in graft " +
-        "SQL DML (top-level columns of the target table only)")
-  }
-
-  /** Strip an optional table qualifier, KEEPING nested-field tails:
-    * `t.props.n` -> `props.n`, `props.n` -> `props.n`, `t.x` -> `x`.
-    * For expression positions where struct-field ACCESS is legal. */
-  private def bareParts(parts: Seq[String], alias: Option[String],
-      root: String): Seq[String] = parts match {
-    case q +: rest
-        if rest.nonEmpty && (alias.contains(q) || q == root) => rest
-    case other => other
-  }
-
   /** Expression -> Column for single-table DML (UPDATE / DELETE):
-    * resolved attribute references and parse-level unresolved ones
-    * both rewrite to bare by-name references, which the library DML
-    * resolves against its own scan of the table. */
-  private def singleTableColumn(e: Expression, alias: Option[String],
-      root: String, what: String): Column = {
+    * resolved attribute references rewrite to bare by-name references,
+    * which the library DML resolves against its own scan of the
+    * table. */
+  private def singleTableColumn(e: Expression, what: String): Column = {
     noSubquery(e, what)
     GraftShims.columnOf(e.transform {
       case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
-      case u: UnresolvedAttribute =>
-        UnresolvedAttribute(bareParts(u.nameParts, alias, root))
     })
   }
 
@@ -165,13 +143,10 @@ object GraftDml {
     * values take when an IN-subquery DML rewrites to a key-join merge
     * (the joined frame carries both sides, so bare names could be
     * ambiguous with the source's key column). */
-  private def targetQualified(e: Expression, alias: Option[String],
-      root: String, what: String): Column = {
+  private def targetQualified(e: Expression, what: String): Column = {
     noSubquery(e, what)
     GraftShims.columnOf(e.transform {
       case a: AttributeReference => UnresolvedAttribute(Seq("t", a.name))
-      case u: UnresolvedAttribute =>
-        UnresolvedAttribute(Seq("t", bareName(u.nameParts, alias, root)))
     })
   }
 
@@ -188,8 +163,7 @@ object GraftDml {
     * uncorrelated IN-subquery testing the table key; None when the
     * condition is subquery-free; throws (with the supported grammar)
     * for every other subquery shape. */
-  private def keyInSubquery(s: SparkSession, root: String,
-      alias: Option[String], cond: Expression)
+  private def keyInSubquery(s: SparkSession, root: String, cond: Expression)
       : Option[(LogicalPlan, Seq[Expression])] = {
     val cs = conjuncts(cond)
     val (subs, plain) =
@@ -203,7 +177,6 @@ object GraftDml {
       case InSubquery(Seq(v), lq: ListQuery) =>
         val name = v match {
           case a: AttributeReference => a.name
-          case u: UnresolvedAttribute => bareName(u.nameParts, alias, root)
           case other => throw new IllegalArgumentException(
             s"IN-subquery must test a top-level column, got ${other.sql}")
         }
@@ -222,22 +195,14 @@ object GraftDml {
   }
 
   /** An assignment's target as a FIELD PATH: head = top-level column,
-    * tail = nested struct fields (`SET props.f = ...` / resolved
-    * GetStructField chains).  The single-element case is the ordinary
+    * tail = nested struct fields (`SET props.f = ...`, resolved to a
+    * GetStructField chain).  The single-element case is the ordinary
     * top-level assignment. */
-  private def assignPath(e: Expression, alias: Option[String],
-      root: String): Seq[String] = e match {
+  private def assignPath(e: Expression): Seq[String] = e match {
     case a: AttributeReference => Seq(a.name)
     case gs: org.apache.spark.sql.catalyst.expressions.GetStructField =>
-      assignPath(gs.child, alias, root) :+
+      assignPath(gs.child) :+
         gs.name.getOrElse(gs.childSchema(gs.ordinal).name)
-    case u: UnresolvedAttribute => u.nameParts match {
-      case Seq(n) => Seq(n)
-      case q +: rest if alias.contains(q) || q == root =>
-        require(rest.nonEmpty, s"empty assignment target `$q`")
-        rest
-      case parts => parts // struct.field[.deeper] without a qualifier
-    }
     case other => throw new IllegalArgumentException(
       s"graft SQL DML assignment target must be a column or nested " +
         s"field, got ${other.sql}")
@@ -250,10 +215,9 @@ object GraftDml {
     * one struct chain; a struct assigned BOTH whole and per-field is
     * ambiguous and rejected. */
   private def buildSetMap(assignments: Seq[Assignment],
-      alias: Option[String], root: String,
       valueOf: Expression => Column): Map[String, Column] = {
     val parsed: Seq[(Seq[String], Column)] = assignments.map(a =>
-      (assignPath(a.key, alias, root), valueOf(a.value)))
+      (assignPath(a.key), valueOf(a.value)))
     require(parsed.map(_._1).distinct.size == parsed.size,
       "duplicate assignment targets in UPDATE")
     val (tops, nested) = parsed.partition(_._1.length == 1)
@@ -272,55 +236,49 @@ object GraftDml {
   }
 
   /** An assignment's target must be a top-level column. */
-  private def assignName(e: Expression, alias: Option[String],
-      root: String): String = e match {
+  private def assignName(e: Expression): String = e match {
     case a: AttributeReference => a.name
-    case u: UnresolvedAttribute => bareName(u.nameParts, alias, root)
     case other => throw new IllegalArgumentException(
       s"graft SQL DML assignment target must be a top-level column, " +
         s"got ${other.sql}")
   }
 
   private[v2] def updateCommand(s: SparkSession, root: String,
-      alias: Option[String], assignments: Seq[Assignment],
-      cond: Option[Expression]): LeafRunnableCommand = {
+      assignments: Seq[Assignment], cond: Option[Expression])
+      : LeafRunnableCommand = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    cond.flatMap(keyInSubquery(s, root, alias, _)) match {
+    cond.flatMap(keyInSubquery(s, root, _)) match {
       case Some((subPlan, residual)) =>
         // UPDATE ... WHERE key IN (SELECT ...) [AND residual] rewrites
         // to a key-join MERGE: the subquery stays a distributed frame
         // end to end (never an isin literal list), the residual and
         // the SET expressions ride the joined row target-qualified
         val set = assignments.map(a =>
-          assignName(a.key, alias, root) ->
-            targetQualified(a.value, alias, root, "UPDATE")).toMap
+          assignName(a.key) -> targetQualified(a.value, "UPDATE")).toMap
         require(set.size == assignments.size,
           "duplicate assignment targets in UPDATE")
         GraftUpdateKeysCommand(root, set, subPlan,
-          residual.map(targetQualified(_, alias, root, "UPDATE"))
-            .reduceOption(_ && _))
+          residual.map(targetQualified(_, "UPDATE")).reduceOption(_ && _))
       case None =>
-        val set = buildSetMap(assignments, alias, root,
-          singleTableColumn(_, alias, root, "UPDATE"))
+        val set = buildSetMap(assignments, singleTableColumn(_, "UPDATE"))
         GraftUpdateCommand(root, set,
-          cond.map(singleTableColumn(_, alias, root, "UPDATE")))
+          cond.map(singleTableColumn(_, "UPDATE")))
     }
   }
 
   private[v2] def deleteCommand(s: SparkSession, root: String,
-      alias: Option[String], cond: Expression): LeafRunnableCommand =
-    keyInSubquery(s, root, alias, cond) match {
+      cond: Expression): LeafRunnableCommand =
+    keyInSubquery(s, root, cond) match {
       case Some((subPlan, residual)) =>
         // DELETE ... WHERE key IN (SELECT ...): the library's
         // join-based deleteKeys (no residual) or a key-join MERGE
         // DELETE (residual) — the decontamination shape, distributed
         GraftDeleteKeysCommand(root, subPlan,
-          residual.map(targetQualified(_, alias, root, "DELETE"))
-            .reduceOption(_ && _))
+          residual.map(targetQualified(_, "DELETE")).reduceOption(_ && _))
       case None =>
         GraftDeleteCommand(root, cond match {
           case Literal(true, BooleanType) => lit(true)
-          case c => singleTableColumn(c, alias, root, "DELETE")
+          case c => singleTableColumn(c, "DELETE")
         })
     }
 
@@ -339,21 +297,17 @@ object GraftDml {
 
   /** Convert a MergeIntoTable.  `resolvedMode` decides how column
     * references are attributed to a side: by attribute identity when
-    * the analyzer already bound them, by alias qualifier + schema
-    * lookup at parse level. */
+    * the analyzer already bound them ([[GraftDmlRule]]), by alias
+    * qualifier + schema lookup at parse level ([[GraftSqlParser]]'s
+    * WITH SCHEMA EVOLUTION branch). */
   private[v2] def mergeCommand(s: SparkSession, root: String,
       tAlias: Option[String], m: MergeIntoTable): GraftMergeCommand = {
     val resolvedMode =
       m.targetTable.resolved && m.sourceTable.resolved
-    // the source plan the command will execute: analyzed (and, for
-    // sessions without the extension, re-based onto the v1 relation)
+    // the source plan the command will execute, analyzed
     val srcPlan: LogicalPlan =
       if (resolvedMode) m.sourceTable
-      else {
-        val analyzed = GraftShims.ofRows(s, m.sourceTable)
-          .queryExecution.analyzed
-        GraftSqlResolution(s).applyManually(analyzed)
-      }
+      else GraftShims.ofRows(s, m.sourceTable).queryExecution.analyzed
     val sAlias: Option[String] = m.sourceTable match {
       case sa: SubqueryAlias => Some(sa.identifier.name)
       case _ => None
@@ -418,10 +372,6 @@ object GraftDml {
     def tgtName(e: Expression): String = e match {
       case a: AttributeReference if resolvedMode && tSet.contains(a) =>
         a.name
-      case a: AttributeReference
-          if resolvedMode && evolveCols.exists(_.name == a.name) &&
-            sSet.contains(a) =>
-        a.name // an evolution assignment targets the source-born column
       case u: UnresolvedAttribute => u.nameParts match {
         case Seq(n) if tgtCols(n) => n
         case Seq(q, n) if tAlias.contains(q) && tgtCols(n) => n
@@ -529,43 +479,11 @@ object GraftDml {
       matched ++ notMatched ++ nmbs, onExtra, evolveCols)
   }
 
-  /** Parse-level DML dispatch for [[GraftSql.sql]] — Some(command)
-    * when `plan` is a DML statement over a graft table, None when the
-    * statement should take the ordinary read path. */
-  def fromParsed(s: SparkSession, plan: LogicalPlan)
-      : Option[LogicalPlan] = plan match {
-    case u @ UpdateTable(t, assigns, cond) =>
-      target(s, t).map { case (root, alias) =>
-        updateCommand(s, root, alias, assigns, cond) }
-    case DeleteFromTable(t, cond) =>
-      target(s, t).map { case (root, alias) =>
-        deleteCommand(s, root, alias, cond) }
-    case m: MergeIntoTable =>
-      target(s, m.targetTable).map { case (root, alias) =>
-        mergeCommand(s, root, alias, m) }
-    case i: InsertIntoStatement =>
-      target(s, i.table).map { case (root, _) =>
-        insertCommand(s, root, i) }
-    case o: OverwriteByExpression =>
-      target(s, o.table).map { case (root, alias) =>
-        o.deleteExpr match {
-          case Literal(true, BooleanType) =>
-            GraftInsertCommand(root, o.query, overwrite = true, Nil,
-              byName = false, preAligned = false)
-          case c => GraftReplaceWhereCommand(root,
-            replaceCondColumn(c, alias, root), o.query,
-            preAligned = false)
-        }
-      }
-    case _ => None
-  }
-
   /** REPLACE WHERE condition -> Column (bare by-name references; the
     * library replaceWhere evaluates it over BOTH the table scan and
     * the incoming batch for the inside-slice guard). */
-  private[v2] def replaceCondColumn(e: Expression,
-      alias: Option[String], root: String): Column =
-    singleTableColumn(e, alias, root, "REPLACE WHERE")
+  private[v2] def replaceCondColumn(e: Expression): Column =
+    singleTableColumn(e, "REPLACE WHERE")
 }
 
 /** Analyzer rule (injected via `GraftExtensions`, BEFORE the read
@@ -581,38 +499,27 @@ final case class GraftDmlRule(session: SparkSession)
           if GraftDml.target(session, t).isDefined &&
             assigns.forall(a => a.key.resolved && a.value.resolved) &&
             cond.forall(_.resolved) =>
-        val (root, alias) = GraftDml.target(session, t).get
-        GraftDml.updateCommand(session, root, alias, assigns, cond)
+        val (root, _) = GraftDml.target(session, t).get
+        GraftDml.updateCommand(session, root, assigns, cond)
 
       case DeleteFromTable(t, cond)
           if GraftDml.target(session, t).isDefined && cond.resolved =>
-        val (root, alias) = GraftDml.target(session, t).get
-        GraftDml.deleteCommand(session, root, alias, cond)
+        val (root, _) = GraftDml.target(session, t).get
+        GraftDml.deleteCommand(session, root, cond)
 
       case m: MergeIntoTable
           if GraftDml.target(session, m.targetTable).isDefined &&
             m.targetTable.resolved && m.sourceTable.resolved &&
             m.mergeCondition.resolved &&
             (m.matchedActions ++ m.notMatchedActions ++
-              m.notMatchedBySourceActions).forall(a =>
-                actionResolved(a) ||
-                // WITH SCHEMA EVOLUTION: assignments naming the
-                // source-born column CANNOT resolve against the
-                // not-yet-widened target — the analyzer would fail
-                // the statement before this rule converts it, so
-                // accept named-but-unresolved assignment refs here
-                // (the converter resolves them by name, exactly the
-                // partially-resolved conversion Delta's analysis
-                // rule performs) as long as conditions resolved
-                (m.withSchemaEvolution && actionConditionsResolved(a))) =>
+              m.notMatchedBySourceActions).forall(actionResolved) =>
         val (root, alias) = GraftDml.target(session, m.targetTable).get
         GraftDml.mergeCommand(session, root, alias, m)
 
-      // INSERT INTO resolved through the v2 path: ResolveInsertInto
-      // has already turned the statement into AppendData /
-      // OverwriteByExpression with the query reconciled to the table
-      // schema (casts + positional names), so the command skips its
-      // own alignment
+      // AppendData / OverwriteByExpression (the writes of CTAS and
+      // `df.writeTo`): the analyzer has already reconciled the query
+      // to the table schema (casts + positional names), so the
+      // command skips its own alignment
       case a @ AppendData(r: DataSourceV2Relation, query, _, _, _, _)
           if r.table.isInstanceOf[GraftSqlTable] && a.query.resolved &&
             a.outputResolved =>
@@ -637,23 +544,20 @@ final case class GraftDmlRule(session: SparkSession)
           if r.table.isInstanceOf[GraftSqlTable] && o.query.resolved &&
             o.outputResolved && cond.resolved =>
         val root = r.table.asInstanceOf[GraftSqlTable].root
-        GraftReplaceWhereCommand(root,
-          GraftDml.replaceCondColumn(cond, None, root), query,
-          preAligned = true)
+        GraftReplaceWhereCommand(root, GraftDml.replaceCondColumn(cond),
+          query)
 
-      // belt-and-braces: an InsertIntoStatement that survived to us
-      // (e.g. the relation was already swapped to v1 by a prior pass)
-      // must NOT fall through to InsertIntoHadoopFsRelationCommand,
-      // which would write parquet without a manifest commit
+      // SQL INSERT INTO / INSERT OVERWRITE convert here, from the
+      // InsertIntoStatement: GraftInsertCommand aligns the query by
+      // position or column list.  The statement must NOT fall through
+      // to InsertIntoHadoopFsRelationCommand, which would write parquet
+      // without a manifest commit
       case i: InsertIntoStatement
           if GraftDml.target(session, i.table).isDefined &&
             i.query.resolved =>
         val (root, _) = GraftDml.target(session, i.table).get
         GraftDml.insertCommand(session, root, i)
     }
-
-  private def actionConditionsResolved(a: MergeAction): Boolean =
-    a.condition.forall(_.resolved)
 
   private def actionResolved(a: MergeAction): Boolean =
     a.condition.forall(_.resolved) && (a match {
@@ -674,15 +578,9 @@ final case class GraftInsertCommand(root: String, query: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
 
   override def run(s: SparkSession): Seq[Row] = {
-    val analyzed = GraftShims.ofRows(s, query).queryExecution.analyzed
-    val df0 = GraftShims.ofRows(s,
-      GraftSqlResolution(s).applyManually(analyzed))
+    val df0 = GraftShims.ofRows(s, query)
     val schema = new GraftSqlTable(root, Map.empty).schema()
-    val key = VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"INSERT into $root needs a recorded table.key"))
+    val key = GraftDml.keyOf(s, root)
     val out: DataFrame =
       if (preAligned) df0
       else if (byName || userCols.nonEmpty) {
@@ -726,18 +624,13 @@ final case class GraftUpdateCommand(root: String,
     set: Map[String, Column], cond: Option[Column])
     extends LeafRunnableCommand {
   override def run(s: SparkSession): Seq[Row] = {
-    val props = VersionedTable.latestVersion(s, root)
-      .map(v => VersionedTable.snapshot(s, root, v).props)
-      .getOrElse(Map.empty[String, String])
-    val key = props.getOrElse(VersionedTable.TableKeyProp,
-      throw new IllegalArgumentException(
-        s"UPDATE on $root needs a recorded table.key"))
+    val (key, mor) = GraftDml.keyAndMor(s, root)
     // `dml.mode=mor` routes SQL UPDATE through the merge-on-read twin
     // (DV mask + post-image append, O(updated rows) total I/O, zero
     // files rewritten) — the economics Delta's DV-based UPDATE gives
     // a 100 TB table where 0.01% of rows change; default stays
     // copy-on-write (read-side cost bounded at zero outstanding masks)
-    if (GraftDml.isMor(s, root))
+    if (mor)
       VersionedTable.updateMoR(s, root, cond.getOrElse(lit(true)),
         set, key)
     else
@@ -752,13 +645,8 @@ final case class GraftUpdateCommand(root: String,
 final case class GraftDeleteCommand(root: String, cond: Column)
     extends LeafRunnableCommand {
   override def run(s: SparkSession): Seq[Row] = {
-    val props = VersionedTable.latestVersion(s, root)
-      .map(v => VersionedTable.snapshot(s, root, v).props)
-      .getOrElse(Map.empty[String, String])
-    val key = props.getOrElse(VersionedTable.TableKeyProp,
-      throw new IllegalArgumentException(
-        s"DELETE on $root needs a recorded table.key"))
-    if (GraftDml.isMor(s, root))
+    val (key, mor) = GraftDml.keyAndMor(s, root)
+    if (mor)
       VersionedTable.deleteMoR(s, root, cond, key)
     else VersionedTable.delete(s, root, cond, key, 8)
     Seq.empty
@@ -811,19 +699,12 @@ final case class GraftDeleteKeysCommand(root: String,
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(keys)
   override def run(s: SparkSession): Seq[Row] = {
-    val key = VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"DELETE on $root needs a recorded table.key"))
-    val analyzed = GraftShims.ofRows(s, keys).queryExecution.analyzed
-    val kdf0 = GraftShims.ofRows(s,
-      GraftSqlResolution(s).applyManually(analyzed))
+    val (key, mor) = GraftDml.keyAndMor(s, root)
+    val kdf0 = GraftShims.ofRows(s, keys)
     require(kdf0.columns.length == 1,
       s"the IN-subquery must produce exactly one column (the table " +
         s"key), got ${kdf0.columns.length}")
     val kdf = kdf0.toDF(key).distinct()
-    val mor = GraftDml.isMor(s, root)
     // dml.mode=mor routes BOTH shapes through the DV-masking twin —
     // the residual gates the masked rows exactly like a MERGE DELETE's
     // WHEN MATCHED condition, so a sparse decontamination delete on a
@@ -849,14 +730,8 @@ final case class GraftUpdateKeysCommand(root: String,
     residual: Option[Column]) extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(keys)
   override def run(s: SparkSession): Seq[Row] = {
-    val key = VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"UPDATE on $root needs a recorded table.key"))
-    val analyzed = GraftShims.ofRows(s, keys).queryExecution.analyzed
-    val kdf0 = GraftShims.ofRows(s,
-      GraftSqlResolution(s).applyManually(analyzed))
+    val (key, mor) = GraftDml.keyAndMor(s, root)
+    val kdf0 = GraftShims.ofRows(s, keys)
     require(kdf0.columns.length == 1,
       s"the IN-subquery must produce exactly one column (the table " +
         s"key), got ${kdf0.columns.length}")
@@ -865,7 +740,6 @@ final case class GraftUpdateKeysCommand(root: String,
     // consistent with GraftUpdateCommand's routing — a sparse
     // `UPDATE ... WHERE key IN (SELECT ...)` on a mor table must not
     // silently pay a full touched-file copy-on-write rewrite
-    val mor = GraftDml.isMor(s, root)
     if (mor)
       VersionedTable.updateMoRKeys(s, root, kdf, set, key,
         residual = residual)
@@ -882,31 +756,13 @@ final case class GraftUpdateKeysCommand(root: String,
   * batch is VALIDATED to lie inside the slice, untouched files carry
   * by reference (Delta's replaceWhere as SQL text). */
 final case class GraftReplaceWhereCommand(root: String, cond: Column,
-    query: LogicalPlan, preAligned: Boolean)
-    extends LeafRunnableCommand {
+    query: LogicalPlan) extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
   override def run(s: SparkSession): Seq[Row] = {
-    val analyzed = GraftShims.ofRows(s, query).queryExecution.analyzed
-    val df0 = GraftShims.ofRows(s,
-      GraftSqlResolution(s).applyManually(analyzed))
-    val schema = new GraftSqlTable(root, Map.empty).schema()
-    val key = VersionedTable.latestVersion(s, root)
-      .flatMap(v => VersionedTable.snapshot(s, root, v).props
-        .get(VersionedTable.TableKeyProp))
-      .getOrElse(throw new IllegalArgumentException(
-        s"REPLACE WHERE on $root needs a recorded table.key"))
-    val out: DataFrame =
-      if (preAligned) df0
-      else {
-        require(df0.columns.length == schema.length,
-          s"REPLACE WHERE insert needs ${schema.length} columns " +
-            s"(${schema.fieldNames.mkString(", ")}), got " +
-            df0.columns.length)
-        df0.toDF(schema.fieldNames.toIndexedSeq: _*)
-          .select(schema.fields.toIndexedSeq.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)): _*)
-      }
-    VersionedTable.replaceWhere(s, root, cond, out, key, 8)
+    // the analyzer's OverwriteByExpression already reconciled the
+    // query to the table schema (casts + positional names)
+    VersionedTable.replaceWhere(s, root, cond, GraftShims.ofRows(s, query),
+      GraftDml.keyOf(s, root), 8)
     Seq.empty
   }
 }

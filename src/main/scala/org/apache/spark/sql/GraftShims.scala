@@ -34,12 +34,9 @@ object GraftShims {
         isStreaming = true))
   }
 
-  /** DataFrame over an explicit logical plan — lets library code apply
-    * an analyzer-phase rewrite (graft.sources.v2.GraftSqlResolution)
-    * to an already-analyzed plan on sessions built WITHOUT
-    * `spark.sql.extensions` (the shared test session), where the
-    * injected resolution rule never ran.  On extension-enabled
-    * sessions the rewrite is a no-op and this is `Dataset.ofRows`. */
+  /** DataFrame over an explicit logical plan (`Dataset.ofRows`) — how
+    * the SQL DML commands (graft.sources.v2.GraftDml) run the source,
+    * key and query plans they carry. */
   def ofRows(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =
@@ -54,17 +51,9 @@ object GraftShims {
       : Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
-  /** Parse SQL text to an (unresolved) logical plan — lets
-    * [[graft.sources.v2.GraftSql.sql]] intercept DML statements on
-    * sessions built without `spark.sql.extensions`, BEFORE eager
-    * command analysis would reject them. */
-  def parsePlan(s: SparkSession, sqlText: String)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.sqlParser.parsePlan(sqlText)
-
   /** The registered catalog plugin under `name`, if any — used to
-    * recognize `graft.&#96;/root&#96;` identifiers at parse level. */
+    * recognize `graft.&#96;/root&#96;` identifiers at parse level (the
+    * maintenance grammar and MERGE ... WITH SCHEMA EVOLUTION). */
   def catalogOf(s: SparkSession, name: String)
       : Option[org.apache.spark.sql.connector.catalog.CatalogPlugin] =
     scala.util.Try(

@@ -20,12 +20,11 @@ import graft.sources.VersionedTable.{MatchedUpdate, NotMatchedInsert}
   * Every step is spec'd in isolation elsewhere; this pins that the
   * pieces COMPOSE — the judge-facing claim is "a user of a lakehouse
   * + CDC stack can run their whole loop here". */
-class DmlScenarioSpec extends SparkSpec {
+class DmlScenarioSpec extends SparkSpec with TempDirs {
 
-  private def freshRoot(kind: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_dmlscen_${kind}_" +
-        s"${spark.sparkContext.applicationId}")
+  private lazy val roots = tempDir("graft_dmlscen_")
+
+  private def freshRoot(kind: String): String = s"$roots/$kind"
 
   test("convert -> govern -> replicate -> DML -> converged mirror -> " +
     "SQL, end to end") {
@@ -88,7 +87,7 @@ class DmlScenarioSpec extends SparkSpec {
 
     // 6. SQL over both sides through the catalog, with time travel
     def sql1(q0: String): Long =
-      graft.sources.v2.GraftSql.sql(spark, q0).head().getLong(0)
+      spark.sql(q0).head().getLong(0)
     assert(sql1(s"SELECT count(*) AS n FROM graft.`$src`") === 302L)
     assert(sql1(s"SELECT count(*) AS n FROM graft.`$dst`") === 302L)
     // v1 = the pristine conversion

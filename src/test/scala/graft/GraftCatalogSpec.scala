@@ -1,21 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSqlResolution
 
 /** The SQL face: `graft.`/path`` identifiers through a path-based
   * TableCatalog, SQL VERSION AS OF / TIMESTAMP AS OF, and the
-  * v2-relation -> V1 HadoopFsRelation swap, both through
-  * [[graft.sources.v2.GraftSql.sql]] and through plain `spark.sql`,
-  * where the extension's resolution rule does the swap. */
-class GraftCatalogSpec extends SparkSpec {
+  * v2-relation -> V1 HadoopFsRelation swap that the extension's
+  * resolution rule performs during analysis of plain `spark.sql`. */
+class GraftCatalogSpec extends SparkSpec with TempDirs {
 
-  private def freshRoot(kind: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_catspec_${kind}_" +
-        s"${spark.sparkContext.applicationId}")
+  private lazy val roots = tempDir("graft_catspec_")
+
+  private def freshRoot(kind: String): String = s"$roots/$kind"
 
   private def docs(r: Range) = {
     import spark.implicits._
@@ -28,23 +24,18 @@ class GraftCatalogSpec extends SparkSpec {
     ()
   }
 
-  private def swapped(s: SparkSession, sql: String) =
-    graft.sources.v2.GraftSql.sql(s, sql)
-
   test("SELECT through the catalog reads the head; VERSION AS OF " +
     "pins an old snapshot; filters keep manifest file-skipping") {
     val root = freshRoot("sel")
     build(root)
-    assert(swapped(spark,
-      s"SELECT count(*) AS n FROM graft.`$root`")
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$root`")
       .head().getLong(0) === 50L)
-    assert(swapped(spark,
+    assert(spark.sql(
       s"SELECT count(*) AS n FROM graft.`$root` VERSION AS OF 1")
       .head().getLong(0) === 30L)
     // the swap serves the connector's FileIndex: a key-range filter
     // must scan fewer files than the snapshot holds (zone-map skip)
-    val pruned = swapped(spark,
-      s"SELECT * FROM graft.`$root` WHERE doc_id < 5")
+    val pruned = spark.sql(s"SELECT * FROM graft.`$root` WHERE doc_id < 5")
     val scan = pruned.queryExecution.executedPlan.collectLeaves()
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
@@ -59,9 +50,8 @@ class GraftCatalogSpec extends SparkSpec {
     val t1 = VersionedTable.snapshot(spark, root, 1).tsMillis
     val probe = java.time.Instant.ofEpochMilli(t1)
       .toString.replace("T", " ").replace("Z", "")
-    assert(swapped(spark,
-      s"SELECT count(*) AS n FROM graft.`$root` " +
-        s"TIMESTAMP AS OF '$probe'").head().getLong(0) === 30L)
+    assert(spark.sql(s"SELECT count(*) AS n FROM graft.`$root` " +
+      s"TIMESTAMP AS OF '$probe'").head().getLong(0) === 30L)
   }
 
   test("unknown tables and namespaced identifiers are rejected") {

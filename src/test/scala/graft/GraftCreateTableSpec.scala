@@ -9,14 +9,13 @@ import graft.sources.VersionedTable
   * overwrites through the same path, and constraint DDL (inline and
   * ALTER TABLE ADD/DROP CONSTRAINT) round-trips — closing the one
   * missing verb of the round-12 SQL lifecycle. */
-class GraftCreateTableSpec extends SparkSpec {
+class GraftCreateTableSpec extends SparkSpec with TempDirs {
 
-  private def freshRoot(kind: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_create_${kind}_" +
-        s"${spark.sparkContext.applicationId}")
+  private lazy val roots = tempDir("graft_create_")
 
-  private def sql(q: String) = graft.sources.v2.GraftSql.sql(spark, q)
+  private def freshRoot(kind: String): String = s"$roots/$kind"
+
+  private def sql(q: String) = spark.sql(q)
 
   test("CREATE TABLE births an empty readable table; INSERT fills it; " +
     "the whole lifecycle is SQL text") {

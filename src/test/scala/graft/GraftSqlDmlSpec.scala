@@ -2,19 +2,18 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSql
 
 /** The SQL WRITE/DML face: INSERT / UPDATE / DELETE / MERGE over
-  * `graft.`/root`` identifiers.  Most tests drive [[GraftSql.sql]],
-  * which intercepts DML at parse level; the end-to-end test drives
-  * plain `spark.sql` on the shared session, where the extension's
-  * GraftDmlRule and parser take the statements. */
-class GraftSqlDmlSpec extends SparkSpec {
+  * `graft.`/root`` identifiers, all through plain `spark.sql` on the
+  * shared session.  The extension's GraftDmlRule converts each
+  * statement during analysis; its parser converts MERGE ... WITH
+  * SCHEMA EVOLUTION, whose source-born columns the analyzer cannot
+  * resolve, and the maintenance grammar. */
+class GraftSqlDmlSpec extends SparkSpec with TempDirs {
 
-  private def freshRoot(kind: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqldml_${kind}_" +
-        s"${spark.sparkContext.applicationId}")
+  private lazy val roots = tempDir("graft_sqldml_")
+
+  private def freshRoot(kind: String): String = s"$roots/$kind"
 
   private def seed(root: String, n: Int = 10): Unit = {
     import spark.implicits._
@@ -24,32 +23,30 @@ class GraftSqlDmlSpec extends SparkSpec {
   }
 
   private def count(root: String, where: String = ""): Long =
-    GraftSql.sql(spark,
-      s"SELECT count(*) AS n FROM graft.`$root` $where")
+    spark.sql(s"SELECT count(*) AS n FROM graft.`$root` $where")
       .head().getLong(0)
 
   test("INSERT INTO: positional, with column list (null-fill), and " +
     "INSERT OVERWRITE — each one manifest commit, history intact") {
     val root = freshRoot("ins")
     seed(root)
-    GraftSql.sql(spark, s"INSERT INTO graft.`$root` VALUES (100, 'new', 7)")
+    spark.sql(s"INSERT INTO graft.`$root` VALUES (100, 'new', 7)")
     assert(count(root) === 11L)
     assert(count(root, "WHERE id = 100 AND grp = 'new' AND x = 7") === 1L)
-    GraftSql.sql(spark, s"INSERT INTO graft.`$root` (id, x) VALUES (101, 9)")
+    spark.sql(s"INSERT INTO graft.`$root` (id, x) VALUES (101, 9)")
     assert(count(root, "WHERE id = 101 AND grp IS NULL AND x = 9") === 1L)
     assert(VersionedTable.latestVersion(spark, root) === Some(3))
     assert(VersionedTable.snapshot(spark, root, 2).op === "append")
     // INSERT from a SELECT over another graft table
     val src = freshRoot("inssrc")
     seed(src, 3)
-    GraftSql.sql(spark,
-      s"INSERT INTO graft.`$root` SELECT id + 500, grp, x " +
-        s"FROM graft.`$src`")
+    spark.sql(s"INSERT INTO graft.`$root` SELECT id + 500, grp, x " +
+      s"FROM graft.`$src`")
     assert(count(root, "WHERE id >= 500") === 3L)
     // OVERWRITE: content swaps, history stays
-    GraftSql.sql(spark, s"INSERT OVERWRITE graft.`$root` VALUES (1, 'o', 1)")
+    spark.sql(s"INSERT OVERWRITE graft.`$root` VALUES (1, 'o', 1)")
     assert(count(root) === 1L)
-    assert(GraftSql.sql(spark,
+    assert(spark.sql(
       s"SELECT count(*) AS n FROM graft.`$root` VERSION AS OF 3")
       .head().getLong(0) === 12L)
   }
@@ -58,8 +55,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     "with SQL NULL semantics, commits through the library path") {
     val root = freshRoot("upd")
     seed(root)
-    GraftSql.sql(spark,
-      s"UPDATE graft.`$root` SET x = x + 1000, grp = 'u' WHERE id < 3")
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 1000, grp = 'u' WHERE id < 3")
     assert(count(root, "WHERE grp = 'u'") === 3L)
     assert(count(root, "WHERE id = 2 AND x = 1002") === 1L)
     assert(count(root, "WHERE id = 5 AND x = 5") === 1L)
@@ -70,12 +66,12 @@ class GraftSqlDmlSpec extends SparkSpec {
   test("DELETE FROM with and without WHERE") {
     val root = freshRoot("del")
     seed(root)
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root` WHERE id % 2 = 0")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id % 2 = 0")
     assert(count(root) === 5L)
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root`")
+    spark.sql(s"DELETE FROM graft.`$root`")
     assert(count(root) === 0L)
     // history: pre-delete state still readable
-    assert(GraftSql.sql(spark,
+    assert(spark.sql(
       s"SELECT count(*) AS n FROM graft.`$root` VERSION AS OF 1")
       .head().getLong(0) === 10L)
   }
@@ -88,7 +84,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     seed(root, 100)
     Seq((0L, "s0", 1L), (5L, "s5", 2L), (200L, "s2", 3L))
       .toDF("id", "sgrp", "sx").createOrReplaceTempView("sqldml_src")
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE INTO graft.`$root` AS t
          |USING sqldml_src AS s ON t.id = s.id
          |WHEN MATCHED AND sx = 1 THEN UPDATE SET x = sx * 10, grp = sgrp
@@ -112,7 +108,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     seed(root)
     Seq((1L, 77L)).toDF("sid", "sx")
       .createOrReplaceTempView("sqldml_key_src")
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE INTO graft.`$root` AS t USING sqldml_key_src AS s
          |ON t.id = s.sid
          |WHEN MATCHED THEN UPDATE SET x = s.sx""".stripMargin)
@@ -120,7 +116,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     Seq((2L, 1L), (2L, 2L)).toDF("sid", "sx")
       .createOrReplaceTempView("sqldml_dup_src")
     intercept[IllegalArgumentException] {
-      GraftSql.sql(spark,
+      spark.sql(
         s"""MERGE INTO graft.`$root` AS t USING sqldml_dup_src AS s
            |ON t.id = s.sid
            |WHEN MATCHED THEN UPDATE SET x = s.sx""".stripMargin)
@@ -135,34 +131,31 @@ class GraftSqlDmlSpec extends SparkSpec {
     seed(root)
     VersionedTable.addConstraint(spark, root, "x_pos", "x >= 0")
     val e = intercept[IllegalStateException] {
-      GraftSql.sql(spark, s"INSERT INTO graft.`$root` VALUES (50, 'b', -1)")
+      spark.sql(s"INSERT INTO graft.`$root` VALUES (50, 'b', -1)")
     }
     assert(e.getMessage.contains("CHECK constraint"))
     assert(count(root, "WHERE x < 0") === 0L)
     Seq((1L, 1L)).toDF("id", "x").createOrReplaceTempView("sqldml_neg_src")
     intercept[IllegalArgumentException] {
-      GraftSql.sql(spark,
+      spark.sql(
         s"""MERGE INTO graft.`$root` AS t USING sqldml_neg_src AS s
            |ON t.x = s.x
            |WHEN MATCHED THEN DELETE""".stripMargin)
     }
     // non-key IN-subqueries and EXISTS stay rejected with the grammar
     intercept[IllegalArgumentException] {
-      GraftSql.sql(spark,
-        s"DELETE FROM graft.`$root` WHERE x IN " +
-          s"(SELECT x FROM graft.`$root` WHERE x > 5)")
+      spark.sql(s"DELETE FROM graft.`$root` WHERE x IN " +
+        s"(SELECT x FROM graft.`$root` WHERE x > 5)")
     }
     intercept[IllegalArgumentException] {
-      GraftSql.sql(spark,
-        s"DELETE FROM graft.`$root` WHERE EXISTS " +
-          s"(SELECT 1 FROM graft.`$root` WHERE x > 5)")
+      spark.sql(s"DELETE FROM graft.`$root` WHERE EXISTS " +
+        s"(SELECT 1 FROM graft.`$root` WHERE x > 5)")
     }
     intercept[IllegalArgumentException] {
-      GraftSql.sql(spark,
-        s"INSERT INTO graft.`$root` PARTITION (grp='a') VALUES (9, 9)")
+      spark.sql(s"INSERT INTO graft.`$root` PARTITION (grp='a') VALUES (9, 9)")
     }
     // non-graft statements pass through untouched
-    assert(GraftSql.sql(spark, "SELECT 1 AS one").head().getInt(0) === 1)
+    assert(spark.sql("SELECT 1 AS one").head().getInt(0) === 1)
   }
 
   test("ALTER TABLE via SQL: RENAME COLUMN / DROP COLUMN / ADD " +
@@ -219,27 +212,26 @@ class GraftSqlDmlSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("maint")
     seed(root)
-    GraftSql.sql(spark, s"INSERT INTO graft.`$root` VALUES (50, 'z', 5)")
-    val hist = GraftSql.sql(spark, s"DESCRIBE HISTORY graft.`$root`")
+    spark.sql(s"INSERT INTO graft.`$root` VALUES (50, 'z', 5)")
+    val hist = spark.sql(s"DESCRIBE HISTORY graft.`$root`")
       .collect()
     assert(hist.map(_.getInt(0)).toSeq === Seq(1, 2))
     assert(hist.map(_.getString(2)).toSeq === Seq("append", "append"))
-    val det = GraftSql.sql(spark, s"DESCRIBE DETAIL graft.`$root`")
+    val det = spark.sql(s"DESCRIBE DETAIL graft.`$root`")
       .head()
     assert(det.getAs[String]("key_col") === "id")
     assert(det.getAs[Long]("num_live_rows") === 11L)
     // OPTIMIZE bin-packs the two tiny commits into one file
-    val opt = GraftSql.sql(spark, s"OPTIMIZE graft.`$root`").head()
+    val opt = spark.sql(s"OPTIMIZE graft.`$root`").head()
     assert(opt.getAs[Long]("num_files_after") <
       opt.getAs[Long]("num_files_before"))
     assert(VersionedTable.read(spark, root).count() === 11L)
     // OPTIMIZE ZORDER BY re-lays out on (grp, x)
-    GraftSql.sql(spark, s"OPTIMIZE graft.`$root` ZORDER BY (grp, x)")
+    spark.sql(s"OPTIMIZE graft.`$root` ZORDER BY (grp, x)")
     assert(VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get).op === "zorder")
     // DRY RUN lists reclaimable files without deleting them
-    val doomed = GraftSql.sql(spark,
-      s"VACUUM graft.`$root` RETAIN 0 HOURS DRY RUN")
+    val doomed = spark.sql(s"VACUUM graft.`$root` RETAIN 0 HOURS DRY RUN")
       .collect().map(_.getString(0))
     assert(doomed.nonEmpty)
     assert(doomed.forall(p =>
@@ -248,31 +240,29 @@ class GraftSqlDmlSpec extends SparkSpec {
     // (Delta's retentionDurationCheck): RETAIN 0 HOURS would break
     // concurrent readers of recent snapshots
     val guard = intercept[Exception] {
-      GraftSql.sql(spark, s"VACUUM graft.`$root` RETAIN 0 HOURS").head()
+      spark.sql(s"VACUUM graft.`$root` RETAIN 0 HOURS").head()
     }
     assert(guard.getMessage.contains("safety floor") ||
       Option(guard.getCause).exists(_.getMessage.contains("safety floor")))
     VersionedTable.setProperty(spark, root, "vacuum.retentionCheck",
       "false")
     // the real VACUUM (retain 0 h keeps only the head) reclaims them
-    val vac = GraftSql.sql(spark,
-      s"VACUUM graft.`$root` RETAIN 0 HOURS").head()
+    val vac = spark.sql(s"VACUUM graft.`$root` RETAIN 0 HOURS").head()
     assert(vac.getAs[Long]("data_files_deleted") >= doomed.length)
     assert(doomed.forall(p =>
       !new java.io.File(p.stripPrefix("file:")).exists()))
     assert(VersionedTable.read(spark, root).count() === 11L)
     // non-maintenance SQL flows through the ordinary path
-    assert(GraftSql.sql(spark, "SELECT 2 AS two").head().getInt(0) === 2)
+    assert(spark.sql("SELECT 2 AS two").head().getInt(0) === 2)
   }
 
   test("RESTORE TABLE ... TO VERSION AS OF and FSCK REPAIR TABLE " +
     "[DRY RUN] via SQL") {
     val root = freshRoot("restore")
     seed(root)
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root` WHERE id < 8")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id < 8")
     assert(count(root) === 2L)
-    val r = GraftSql.sql(spark,
-      s"RESTORE TABLE graft.`$root` TO VERSION AS OF 1").head()
+    val r = spark.sql(s"RESTORE TABLE graft.`$root` TO VERSION AS OF 1").head()
     assert(r.getAs[Int]("restored_to") === 1)
     assert(count(root) === 10L)
     // TIMESTAMP AS OF accepts the conventional SQL spelling
@@ -281,31 +271,31 @@ class GraftSqlDmlSpec extends SparkSpec {
     // state
     val delTs = VersionedTable.snapshot(spark, root, 2).tsMillis
     val probe = new java.sql.Timestamp(delTs + 1).toString
-    val r2 = GraftSql.sql(spark,
+    val r2 = spark.sql(
       s"RESTORE TABLE graft.`$root` TO TIMESTAMP AS OF '$probe'")
       .head()
     assert(r2.getAs[Int]("restored_to") === 2)
     assert(count(root) === 2L)
-    val badTs = intercept[Exception] { GraftSql.sql(spark,
+    val badTs = intercept[Exception] { spark.sql(
       s"RESTORE TABLE graft.`$root` TO TIMESTAMP AS OF 'yesterday'")
       .head() }
     assert(badTs.getMessage.contains("cannot parse") ||
       Option(badTs.getCause).exists(_.getMessage.contains("cannot parse")))
     // roll forward again for the FSCK half below
-    GraftSql.sql(spark, s"RESTORE TABLE graft.`$root` TO VERSION AS OF 1")
+    spark.sql(s"RESTORE TABLE graft.`$root` TO VERSION AS OF 1")
     assert(count(root) === 10L)
     // FSCK: clean table reports nothing
-    assert(GraftSql.sql(spark,
+    assert(spark.sql(
       s"FSCK REPAIR TABLE graft.`$root` DRY RUN").count() === 0L)
     // break a referenced data file, then audit + repair through SQL
     val victim = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get).files.head.path
     new java.io.File(victim.stripPrefix("file:")).delete()
-    val missing = GraftSql.sql(spark,
+    val missing = spark.sql(
       s"FSCK REPAIR TABLE graft.`$root` DRY RUN").collect()
     assert(missing.length === 1 &&
       missing.head.getString(0) === "missing-data")
-    GraftSql.sql(spark, s"FSCK REPAIR TABLE graft.`$root`")
+    spark.sql(s"FSCK REPAIR TABLE graft.`$root`")
     assert(VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get).op === "fsck")
     // the table reads again (the broken entry is gone)
@@ -525,14 +515,14 @@ class GraftSqlDmlSpec extends SparkSpec {
     // residual `t.grp = 'g0'`: id 4 (g0) matches -> UPDATE; id 5 (g1)
     // FAILS the residual -> target row keeps, source row INSERTS;
     // id 200 matches nothing -> INSERT
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE INTO graft.`$root` AS t
          |USING cmp_src AS s
          |ON t.id = s.id AND t.grp = 'g0'
          |WHEN MATCHED THEN UPDATE SET x = s.nx
          |WHEN NOT MATCHED THEN INSERT (id, grp, x)
          |VALUES (s.id, 'ins', s.nx)""".stripMargin)
-    val got = GraftSql.sql(spark,
+    val got = spark.sql(
       s"SELECT id, grp, x FROM graft.`$root` ORDER BY id, grp")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(got.contains((4L, "g0", 400L)))   // matched + residual: updated
@@ -543,7 +533,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     // a source-side residual conjunct also rides the join
     Seq((0L, 1L), (2L, -1L)).toDF("id", "nx")
       .createOrReplaceTempView("cmp_src2")
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE INTO graft.`$root` AS t
          |USING cmp_src2 AS s
          |ON t.id = s.id AND s.nx > 0
@@ -552,7 +542,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(count(root, "WHERE id = 2") === 1L) // nx<0: unmatched, kept
     // ON without any key equality still refuses
     val noKey = intercept[Exception] {
-      GraftSql.sql(spark,
+      spark.sql(
         s"""MERGE INTO graft.`$root` AS t USING cmp_src AS s
            |ON t.grp = 'g0'
            |WHEN MATCHED THEN DELETE""".stripMargin)
@@ -570,34 +560,31 @@ class GraftSqlDmlSpec extends SparkSpec {
     Seq(1L, 3L, 5L, 7L, 99L).toDF("bad_id")
       .createOrReplaceTempView("contaminated")
     // plain key-IN delete -> join-based deleteKeys
-    GraftSql.sql(spark,
-      s"DELETE FROM graft.`$root` WHERE id IN " +
-        "(SELECT bad_id FROM contaminated)")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id IN " +
+      "(SELECT bad_id FROM contaminated)")
     assert(count(root) === 16L)
     assert(count(root, "WHERE id IN (1, 3, 5, 7)") === 0L)
     assert(VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get).op === "delete")
     // key-IN + residual -> merge delete, residual gates per row
     Seq(2L, 4L, 6L).toDF("k").createOrReplaceTempView("maybe_del")
-    GraftSql.sql(spark,
+    spark.sql(
       s"DELETE FROM graft.`$root` WHERE id IN (SELECT k FROM maybe_del)" +
         " AND grp = 'g0'")
     // 2,4,6 are all g0 -> deleted; total 13
     assert(count(root) === 13L)
     // UPDATE with key-IN + residual: SET sees the pre-update row
     Seq(8L, 9L, 10L).toDF("k").createOrReplaceTempView("maybe_upd")
-    GraftSql.sql(spark,
-      s"UPDATE graft.`$root` SET x = x + 1000 " +
-        "WHERE id IN (SELECT k FROM maybe_upd) AND grp = 'g0'")
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 1000 " +
+      "WHERE id IN (SELECT k FROM maybe_upd) AND grp = 'g0'")
     assert(count(root, "WHERE x = 1008") === 1L)  // id 8 (g0): updated
     assert(count(root, "WHERE id = 9 AND x = 9") === 1L) // g1: kept
     assert(count(root, "WHERE id = 10 AND x = 1010") === 1L)
     // the subquery may read another graft table
     val src = freshRoot("insubsrc")
     seed(src, 5)
-    GraftSql.sql(spark,
-      s"DELETE FROM graft.`$root` WHERE id IN " +
-        s"(SELECT id + 11 FROM graft.`$src`)")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id IN " +
+      s"(SELECT id + 11 FROM graft.`$src`)")
     assert(count(root, "WHERE id >= 11 AND id <= 15") === 0L)
   }
 
@@ -609,14 +596,13 @@ class GraftSqlDmlSpec extends SparkSpec {
     seed(root) // ids 0..9: (id, grp, x)
     Seq((1L, 10L, "fr"), (100L, 7L, "de"))
       .toDF("id", "x", "lang").createOrReplaceTempView("evo_src")
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE WITH SCHEMA EVOLUTION INTO graft.`$root` AS t
          |USING evo_src AS s ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET x = s.x, lang = s.lang
          |WHEN NOT MATCHED THEN INSERT (id, grp, x, lang)
          |VALUES (s.id, 'new', s.x, s.lang)""".stripMargin)
-    val got = GraftSql.sql(spark,
-      s"SELECT id, grp, x, lang FROM graft.`$root`")
+    val got = spark.sql(s"SELECT id, grp, x, lang FROM graft.`$root`")
     assert(got.columns.toSeq === Seq("id", "grp", "x", "lang"))
     // matched row updated, new column filled
     assert(got.filter(col("id") === 1).select("lang").head()
@@ -636,15 +622,14 @@ class GraftSqlDmlSpec extends SparkSpec {
     // UPDATE SET * / INSERT * widen too
     Seq((2L, 20L, "it"), (101L, 8L, "zh"))
       .toDF("id", "x", "lang").createOrReplaceTempView("evo_src2")
-    GraftSql.sql(spark,
+    spark.sql(
       s"""MERGE WITH SCHEMA EVOLUTION INTO graft.`$root` AS t
          |USING (SELECT id, 'g9' AS grp, x, lang, x * 2 AS score
          |       FROM evo_src2) AS s
          |ON t.id = s.id
          |WHEN MATCHED THEN UPDATE SET *
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val got2 = GraftSql.sql(spark,
-      s"SELECT id, grp, x, lang, score FROM graft.`$root`")
+    val got2 = spark.sql(s"SELECT id, grp, x, lang, score FROM graft.`$root`")
     assert(got2.filter(col("id") === 2).select("score").head()
       .getLong(0) === 40L)
     assert(got2.filter(col("id") === 101).select("lang").head()
@@ -653,7 +638,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(got2.count() === 12L)
     // WITHOUT the evolution keyword, a source-only assignment refuses
     val noEvo = intercept[Exception] {
-      GraftSql.sql(spark,
+      spark.sql(
         s"""MERGE INTO graft.`$root` AS t USING
            |(SELECT id, x, 9 AS brand_new FROM evo_src2) AS s
            |ON t.id = s.id
@@ -674,10 +659,9 @@ class GraftSqlDmlSpec extends SparkSpec {
       .selectExpr("id",
         "named_struct('user', props._1, 'n', props._2) AS props")
       .write.format("graft-table").option("keyCol", "id").save(root)
-    GraftSql.sql(spark,
-      s"UPDATE graft.`$root` SET props.n = props.n + 100, " +
-        "props.user = upper(props.user) WHERE id < 3")
-    val got = GraftSql.sql(spark,
+    spark.sql(s"UPDATE graft.`$root` SET props.n = props.n + 100, " +
+      "props.user = upper(props.user) WHERE id < 3")
+    val got = spark.sql(
       s"SELECT id, props.user AS u, props.n AS n FROM graft.`$root`")
     assert(got.filter(col("id") === 1).head().getString(1) === "U1")
     assert(got.filter(col("id") === 1).head().getLong(2) === 101L)
@@ -685,17 +669,16 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(got.filter(col("id") === 5).head().getString(1) === "u5")
     assert(got.filter(col("id") === 5).head().getLong(2) === 5L)
     // assignments see PRE-update values: swap fields in one statement
-    GraftSql.sql(spark,
-      s"UPDATE graft.`$root` SET props.n = length(props.user), " +
-        "props.user = concat('n=', cast(props.n AS string)) " +
-        "WHERE id = 9")
-    val r9 = GraftSql.sql(spark,
+    spark.sql(s"UPDATE graft.`$root` SET props.n = length(props.user), " +
+      "props.user = concat('n=', cast(props.n AS string)) " +
+      "WHERE id = 9")
+    val r9 = spark.sql(
       s"SELECT props.user AS u, props.n AS n FROM graft.`$root` " +
         "WHERE id = 9").head()
     assert(r9.getString(0) === "n=9" && r9.getLong(1) === 2L)
     // whole-column + nested-field double assignment is ambiguous
     val dbl = intercept[Exception] {
-      GraftSql.sql(spark,
+      spark.sql(
         s"UPDATE graft.`$root` SET props = named_struct('user', 'x', " +
           "'n', 0L), props.n = 1 WHERE id = 0")
     }
@@ -709,12 +692,11 @@ class GraftSqlDmlSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("mor")
     seed(root)
-    GraftSql.sql(spark,
+    spark.sql(
       s"ALTER TABLE graft.`$root` SET TBLPROPERTIES ('dml.mode'='mor')")
     val before = VersionedTable.snapshot(spark, root, 1).files
       .map(_.path).toSet
-    GraftSql.sql(spark,
-      s"UPDATE graft.`$root` SET x = x + 1000 WHERE id < 3")
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 1000 WHERE id < 3")
     val afterU = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
     assert(afterU.op === "update-mor")
@@ -722,23 +704,23 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(before.subsetOf(afterU.files.map(_.path).toSet))
     assert(count(root, "WHERE x >= 1000") === 3L)
     assert(count(root) === 10L)
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root` WHERE id >= 8")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id >= 8")
     val afterD = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
     assert(afterD.op === "delete-mor")
     assert(count(root) === 8L)
     // key-IN subquery delete routes to deleteMoRKeys
     Seq(0L, 1L).toDF("k").createOrReplaceTempView("mor_keys")
-    GraftSql.sql(spark,
+    spark.sql(
       s"DELETE FROM graft.`$root` WHERE id IN (SELECT k FROM mor_keys)")
     val afterK = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
     assert(afterK.op === "delete-mor")
     assert(count(root) === 6L)
     // flipping back restores copy-on-write
-    GraftSql.sql(spark,
+    spark.sql(
       s"ALTER TABLE graft.`$root` SET TBLPROPERTIES ('dml.mode'='cow')")
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root` WHERE id = 7")
+    spark.sql(s"DELETE FROM graft.`$root` WHERE id = 7")
     assert(VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get).op === "delete")
     assert(count(root) === 5L)
@@ -751,13 +733,13 @@ class GraftSqlDmlSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("morkeys")
     seed(root)
-    GraftSql.sql(spark,
+    spark.sql(
       s"ALTER TABLE graft.`$root` SET TBLPROPERTIES ('dml.mode'='mor')")
     val before = VersionedTable.snapshot(spark, root, 1).files
       .map(_.path).toSet
     Seq(0L, 1L, 2L, 3L).toDF("k").createOrReplaceTempView("mork_upd")
     // key-IN UPDATE, no residual
-    GraftSql.sql(spark, s"UPDATE graft.`$root` SET x = x + 1000 " +
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 1000 " +
       "WHERE id IN (SELECT k FROM mork_upd)")
     val afterU = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
@@ -767,7 +749,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(count(root, "WHERE x >= 1000") === 4L)
     assert(count(root) === 10L)
     // key-IN UPDATE with a residual conjunct: grp g0 = even ids
-    GraftSql.sql(spark, s"UPDATE graft.`$root` SET x = x + 10000 " +
+    spark.sql(s"UPDATE graft.`$root` SET x = x + 10000 " +
       "WHERE id IN (SELECT k FROM mork_upd) AND grp = 'g0'")
     val afterR = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
@@ -777,7 +759,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(count(root) === 10L)
     // residual key-IN DELETE: grp g1 = odd ids -> 1 and 9 go
     Seq(0L, 1L, 8L, 9L).toDF("k").createOrReplaceTempView("mork_del")
-    GraftSql.sql(spark, s"DELETE FROM graft.`$root` " +
+    spark.sql(s"DELETE FROM graft.`$root` " +
       "WHERE id IN (SELECT k FROM mork_del) AND grp = 'g1'")
     val afterD = VersionedTable.snapshot(spark, root,
       VersionedTable.latestVersion(spark, root).get)
@@ -794,9 +776,8 @@ class GraftSqlDmlSpec extends SparkSpec {
     "rejected, untouched files carry") {
     val root = freshRoot("replwhere")
     seed(root) // ids 0..9, x = id
-    GraftSql.sql(spark,
-      s"INSERT INTO graft.`$root` REPLACE WHERE id < 3 " +
-        "VALUES (0, 'r', 0), (1, 'r', 1)")
+    spark.sql(s"INSERT INTO graft.`$root` REPLACE WHERE id < 3 " +
+      "VALUES (0, 'r', 0), (1, 'r', 1)")
     assert(count(root) === 9L) // 10 - 3 replaced + 2 inserted
     assert(count(root, "WHERE grp = 'r'") === 2L)
     assert(count(root, "WHERE id = 2") === 0L) // in-slice, not re-sent
@@ -806,9 +787,8 @@ class GraftSqlDmlSpec extends SparkSpec {
       "replace-where")
     // a batch outside the slice refuses before anything commits
     val outside = intercept[Exception] {
-      GraftSql.sql(spark,
-        s"INSERT INTO graft.`$root` REPLACE WHERE id < 3 " +
-          "VALUES (100, 'bad', 1)")
+      spark.sql(s"INSERT INTO graft.`$root` REPLACE WHERE id < 3 " +
+        "VALUES (100, 'bad', 1)")
     }
     assert((outside.getMessage + Option(outside.getCause)
       .map(_.getMessage).getOrElse("")).contains("outside"))

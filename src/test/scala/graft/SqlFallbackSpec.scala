@@ -2,23 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
-import graft.sources.v2.GraftSql
 
-/** Negative sweep of the PARSE-LEVEL SQL fallback's documented
-  * limitations (GraftSqlDml.scala §doc: top-level columns only, no
-  * subqueries in conditions beyond `key IN (SELECT ...)`).
-  * [[GraftSql.sql]] intercepts DML at parse level, before analysis
-  * and so before the extension's GraftDmlRule could see it — every
-  * unsupported grammar shape must error LOUDLY
-  * and leave the table byte-identical; a silent mis-translation here
-  * would be data corruption with no error to notice.  Each case
-  * asserts both the loud error and the unchanged table. */
-class SqlFallbackSpec extends SparkSpec {
+/** Negative sweep of the SQL DML converter's documented limits: no
+  * subqueries in conditions beyond `key IN (SELECT ...)`, no subquery
+  * SET values, references to the target's own columns only.  Plain
+  * `spark.sql` hands each statement to the analyzer, where
+  * GraftDmlRule converts it or the analyzer itself refuses it — every
+  * unsupported shape must error LOUDLY and leave the table
+  * byte-identical; a silent mis-translation here would be data
+  * corruption with no error to notice.  Each case asserts both the
+  * loud error and the unchanged table. */
+class SqlFallbackSpec extends SparkSpec with TempDirs {
 
-  private def freshRoot(kind: String): String =
-    Scratch.register(
-      s"${System.getProperty("java.io.tmpdir")}/graft_sqlfall_${kind}_" +
-        s"${spark.sparkContext.applicationId}")
+  private lazy val roots = tempDir("graft_sqlfall_")
+
+  private def freshRoot(kind: String): String = s"$roots/$kind"
 
   private def seed(root: String): Unit = {
     import spark.implicits._
@@ -39,7 +37,7 @@ class SqlFallbackSpec extends SparkSpec {
   private def mustReject(root: String, sql: String,
       msgParts: String*): Unit = {
     val before = state(root)
-    val e = intercept[Exception] { GraftSql.sql(spark, sql) }
+    val e = intercept[Exception] { spark.sql(sql) }
     val all = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     assert(msgParts.isEmpty || msgParts.exists(all.contains),
@@ -89,9 +87,8 @@ class SqlFallbackSpec extends SparkSpec {
     "assignment targets beyond columns/nested fields reject") {
     val root = freshRoot("cols")
     seed(root)
-    // `other.x` is neither the alias nor the root: either the
-    // translator refuses it outright or the analyzer fails resolution
-    // against the single-table frame — both loud, both pre-write;
+    // `other.x` is neither the alias nor the root: the analyzer fails
+    // its resolution against the target — loud and pre-write;
     // silently treating it as the target's column would be the bug
     mustReject(root,
       s"UPDATE graft.`$root` AS t SET x = other.x + 1",
@@ -110,14 +107,13 @@ class SqlFallbackSpec extends SparkSpec {
     val root = freshRoot("corr")
     seed(root)
     Seq(1L, 2L).toDF("k").createOrReplaceTempView("fall_corr")
-    // correlation guard at parse level, or unresolved-column failure
-    // when the subquery plans standalone — either way LOUD, and the
-    // table must be untouched
+    // the converter's correlation guard, or an unresolved-column
+    // failure when the subquery plans standalone — either way LOUD,
+    // and the table must be untouched
     val before = state(root)
     intercept[Exception] {
-      GraftSql.sql(spark,
-        s"DELETE FROM graft.`$root` AS t WHERE id IN " +
-          "(SELECT k FROM fall_corr WHERE k = t.x)")
+      spark.sql(s"DELETE FROM graft.`$root` AS t WHERE id IN " +
+        "(SELECT k FROM fall_corr WHERE k = t.x)")
     }
     assert(state(root) === before)
   }

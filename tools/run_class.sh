@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + Spark jars
 # (same JVM flags as build.sbt). Usage: tools/run_class.sh graft.Bench [args...]
+# The classes are the ones compiled in the checkout this script lives in.
+classes="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 cls="$1"; shift
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
@@ -19,5 +21,5 @@ exec java \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$classes:/opt/spark/jars/*" \
   "$cls" "$@"
