@@ -67,8 +67,8 @@ object Curation66Queries {
         "in-band pins prove the read planned ONE of the four data " +
         "files — with every skipped file's recorded minimum above the " +
         "range, so the skip is provably sound, not sampled luck.  " +
-        "Column stats ride the write-time readback aggregation for " +
-        "free; clustering is what makes them bite (on the key-ranged " +
+        "Column stats come from the written files' parquet footers " +
+        "for free; clustering is what makes them bite (on the key-ranged " +
         "layout the same range prunes nothing — the fixture's length " +
         "is uncorrelated with doc_id).  At 100 TB this is the " +
         "difference between scanning a slice and scanning the table " +

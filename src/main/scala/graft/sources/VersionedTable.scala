@@ -221,11 +221,7 @@ object VersionedTable {
     val mapping = mappingOf(snap)
     val dropped = droppedOf(snap)
     if (mapping.isEmpty && dropped.isEmpty) return df
-    val recorded = snap.props.get(TableSchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalStateException(
-        "column mapping without a recorded table.schema"))
+    val recorded = recordedSchema(snap)
     // ONE SIMULTANEOUS projection physical -> logical: every recorded
     // field selects its physical column (null-fill when an old file
     // predates it) aliased to the logical name.  Simultaneity makes
@@ -244,9 +240,26 @@ object VersionedTable {
     } ++ keep.filter(have).map(col)): _*)
   }
 
+  /** The snapshot's LOGICAL schema, as its manifest records it: every
+    * commit that adds rows, and every DDL, keeps `table.schema`
+    * current, so this is the one schema source for library reads and
+    * the connector alike (Delta reads its schema from the log for the
+    * same reason).  A snapshot without the property holds no files (a
+    * table whose first commits were property-only); it reads as the
+    * zero-column frame. */
+  private[graft] def recordedSchema(snap: Snapshot)
+      : org.apache.spark.sql.types.StructType =
+    snap.props.get(TableSchemaProp)
+      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .getOrElse {
+        require(snap.files.isEmpty, s"v${snap.version} lists " +
+          s"${snap.files.size} data files but records no $TableSchemaProp")
+        new org.apache.spark.sql.types.StructType()
+      }
+
   /** The recorded schema with PHYSICAL field names — what the data
-    * files actually carry; the read schema for mapping-aware aligned
-    * reads ([[diff]]). */
+    * files actually carry. */
   private def physicalSchema(snap: Snapshot,
       recorded: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = {
@@ -255,6 +268,20 @@ object VersionedTable {
     else org.apache.spark.sql.types.StructType(recorded.fields.map(f =>
       f.copy(name = mapping.getOrElse(f.name, f.name))))
   }
+
+  /** The schema every scan of the snapshot's data files reads with: its
+    * [[physicalSchema]], so no read infers a schema from footers.  A
+    * file that predates a column reads it as NULL.  EXISTS_DEFAULT is
+    * left out of the field metadata: Spark's parquet reader would fill
+    * it into such files, and this format never backfills on DDL. */
+  private def readSchema(snap: Snapshot)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      physicalSchema(snap, recordedSchema(snap)).fields.map(f =>
+        if (!f.metadata.contains("EXISTS_DEFAULT")) f
+        else f.copy(metadata =
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata).remove("EXISTS_DEFAULT").build())))
 
   /** Table property opting into TWO-LEVEL manifests: entries per file
     * group (0/absent = classic single-level root listing).  Size it so
@@ -850,36 +877,11 @@ object VersionedTable {
         case Some((lo, hi)) =>
           snap.files.filter(f => f.maxId >= lo && f.minId <= hi)
       }, phys(ranges), phys(strRanges)), phys(eqs))
-    if (kept.isEmpty)
-      // conform the EMPTY branch too: a fully-pruned read of a table
-      // with a metadata-added column must carry the same schema as a
-      // non-empty one, or unions/writes over sliced reads break on
-      // the empty slice
-      conformToRecorded(s, snap,
-        conformToSnapshot(s, snap, emptyLike(s, root, v, snap)))
-    else
-      conformToRecorded(s, snap,
-        conformToSnapshot(s, snap, readLive(s, kept)))
+    // the EMPTY branch carries the recorded schema too: unions/writes
+    // over sliced reads must not break on the empty slice
+    if (kept.isEmpty) conformToSnapshot(s, snap, emptyLike(s, snap))
+    else readFilesOf(s, snap, kept)
   }
-
-  /** Pad a read to the manifest-RECORDED schema: columns the data
-    * files do not yet carry (an [[addColumn]] before any write, an
-    * evolved append none of the kept files saw) surface as NULL, so
-    * the library read and the connector (which always serves the
-    * recorded schema) agree.  No-op when the schemas already match. */
-  private def conformToRecorded(s: SparkSession,
-      snap: Snapshot, df: DataFrame): DataFrame =
-    snap.props.get(TableSchemaProp).map { j =>
-      val recorded = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val have = df.columns.toSet
-      // carry the recorded field METADATA onto the null-fill — the
-      // CURRENT_DEFAULT / comment of a metadata-added column must
-      // survive the library read path, not just the connector's
-      recorded.fields.filterNot(f => have(f.name)).foldLeft(df)(
-        (acc, f) => acc.withColumn(f.name,
-          lit(null).cast(f.dataType).as(f.name, f.metadata)))
-    }.getOrElse(df)
 
   /** Column-stats file pruning: keep a file unless SOME requested
     * range provably excludes it (stats present and disjoint).  String
@@ -1096,10 +1098,8 @@ object VersionedTable {
   private def typedBounds(snap: Snapshot,
       bounds: Seq[(String, String, Any)]): Seq[(String, String, Any)] = {
     import org.apache.spark.sql.types._
-    val recorded: Map[String, DataType] = snap.props.get(TableSchemaProp)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .map(_.fields.map(f => f.name -> f.dataType).toMap)
-      .getOrElse(Map.empty)
+    val recorded: Map[String, DataType] =
+      recordedSchema(snap).fields.map(f => f.name -> f.dataType).toMap
     bounds.filter { case (c, op, v) =>
       // null-count conjuncts carry no literal — type-agnostic
       if (op == "isnull" || op == "isnotnull") recorded.contains(c)
@@ -1166,6 +1166,16 @@ object VersionedTable {
   private[graft] def normPathCol(c: Column): Column =
     regexp_replace(c, "^[A-Za-z][A-Za-z0-9+.\\-]*:(//[^/]*)?/", "/")
 
+  /** Read a specific file subset live (DV-masked) on the snapshot's
+    * logical column surface — what every rewrite, user-facing subset
+    * read and the streaming source's added-files-only feeds use.  A
+    * column no data file carries yet (an ALTER TABLE ADD COLUMN before
+    * any write) reads as NULL, so a merge right after it keeps its
+    * assignments to the new column. */
+  private[graft] def readFilesOf(s: SparkSession, snap: Snapshot,
+      files: Seq[FileEntry]): DataFrame =
+    conformToSnapshot(s, snap, readLive(s, snap, files))
+
   /** Scan `files` and mask out each file's deletion-vector rows.
     * The mask is a per-(file, key) anti-join — NOT a bare key
     * anti-join, because a key deleted from file A may have been
@@ -1174,35 +1184,15 @@ object VersionedTable {
     * union of all live DVs is bounded by un-purged deletes), so AQE
     * broadcasts the build side; the scan side stays a single pass.
     *
-    * mergeSchema: a snapshot can mix files written before and after a
-    * column was added (schema evolution) — older files surface the new
-    * column as null, and a time-travel read of an all-old snapshot
-    * simply lacks the column. */
-  /** Read a specific file subset live (DV-masked), for callers inside
-    * graft that already hold manifest entries — the streaming source's
-    * added-files-only append feeds.  `snap` supplies the column
-    * mapping (identity for unmapped tables). */
-  private[graft] def readFilesOf(s: SparkSession, snap: Snapshot,
+    * The scan reads with the snapshot's [[readSchema]]: a snapshot can
+    * mix files written before and after a column was added (schema
+    * evolution) — older files surface the new column as null, and a
+    * time-travel read of an older snapshot uses that snapshot's
+    * narrower schema. */
+  private def readLive(s: SparkSession, snap: Snapshot,
       files: Seq[FileEntry]): DataFrame =
-    conformToSnapshot(s, snap, readLive(s, files))
-
-  private def readLive(s: SparkSession, files: Seq[FileEntry]): DataFrame = {
-    val raw =
-      s.read.option("mergeSchema", "true").parquet(files.map(_.path): _*)
-    applyDv(s, raw, files)
-  }
-
-  /** [[readLive]] conformed to the snapshot's logical column surface —
-    * what every rewrite and user-facing subset read should use on a
-    * possibly-mapped table (identity wrapper when unmapped). */
-  private def readConformed(s: SparkSession, snap: Snapshot,
-      files: Seq[FileEntry]): DataFrame =
-    // conformToRecorded: a metadata-added column no data file carries
-    // yet must surface (NULL) to DML target scans too, or a merge
-    // right after ALTER TABLE ADD COLUMN would silently drop its
-    // assignments to the new column
-    conformToRecorded(s, snap,
-      conformToSnapshot(s, snap, readLive(s, files)))
+    applyDv(s, s.read.schema(readSchema(snap))
+      .parquet(files.map(_.path): _*), files)
 
   /** [[readLive]] plus a `__graft_file` column carrying each row's
     * (normalized) source data file — the discovery handle merge /
@@ -1214,13 +1204,12 @@ object VersionedTable {
   private def readLiveWithFile(s: SparkSession,
       snap: Snapshot): DataFrame = {
     val files = snap.files
-    val raw = s.read.option("mergeSchema", "true")
+    val raw = s.read.schema(readSchema(snap))
       .parquet(files.map(_.path): _*)
       .withColumn("__graft_file", normPathCol(col("_metadata.file_path")))
-    conformToRecorded(s, snap, conformToSnapshot(s,
-      snap,
+    conformToSnapshot(s, snap,
       applyDv(s, raw, files, fileColumn = Some("__graft_file")),
-      keep = Seq("__graft_file")))
+      keep = Seq("__graft_file"))
   }
 
   /** Apply the deletion vectors of `files` to an already-built scan of
@@ -1238,7 +1227,7 @@ object VersionedTable {
     require(keys.size == 1,
       s"deletion vectors disagree on the table key: $keys")
     val key = keys.head
-    val dv = s.read.parquet(dvPaths: _*)
+    val dv = readDv(s, dvPaths)
       .select(col("path").as("__graft_dv_path"),
         col("id").as("__graft_dv_id"))
     val fc = fileColumn.getOrElse("__graft_dv_probe")
@@ -1251,34 +1240,23 @@ object VersionedTable {
     if (fileColumn.isDefined) masked else masked.drop(fc)
   }
 
-  /** A zero-row DataFrame with the snapshot's schema.  A snapshot can
-    * legitimately list NO files (a delete that matched every row), so
-    * the schema template falls back through earlier versions to the
-    * newest one that still references data; a table that never held
-    * data reads as the zero-column empty frame. */
-  private def emptyLike(s: SparkSession, root: String, v: Int,
-      snap: Snapshot): DataFrame = {
-    val template =
-      if (snap.files.nonEmpty) snap.files
-      else versions(s, root).filter(_ < v).reverse.iterator
-        .map(pv => snapshot(s, root, pv).files)
-        .collectFirst { case fs if fs.nonEmpty => fs }
-        .getOrElse(Seq.empty)
-    if (template.isEmpty)
-      // a CREATEd-but-never-written table has no file to template
-      // from — the recorded schema IS the read schema
-      snap.props.get(TableSchemaProp)
-        .map(j => s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
-        .getOrElse(s.emptyDataFrame)
-    else
-      // limit(0) over the full list: footer-only schema resolution, so
-      // evolution-added columns survive into the empty frame's schema
-      s.read.option("mergeSchema", "true")
-        .parquet(template.map(_.path): _*).limit(0)
-  }
+  /** The fixed schema of a deletion-vector sidecar: (data file path,
+    * masked key) — [[writeDv]] writes nothing else. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("path",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("id",
+      org.apache.spark.sql.types.LongType)))
+
+  private def readDv(s: SparkSession, paths: Seq[String]): DataFrame =
+    s.read.schema(DvSchema).parquet(paths: _*)
+
+  /** A zero-row DataFrame with the snapshot's physical [[readSchema]]
+    * (a snapshot can legitimately list NO files: a delete that matched
+    * every row, or a CREATEd-but-never-written table). */
+  private def emptyLike(s: SparkSession, snap: Snapshot): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      readSchema(snap))
 
   /** The manifest-pruned file list for a key range (exposed so specs
     * and plans can assert how many files a pruned read touches). */
@@ -1313,14 +1291,16 @@ object VersionedTable {
 
   /** Write `df` as `numFiles` parquet files under a fresh commit dir and
     * return their manifest entries — rows + key min/max per file, PLUS
-    * per-file min/max of every other long-typed column AND truncated
-    * min/max of every string column (free at write time: one readback
-    * aggregation already runs; the extra min/max pairs ride it).
-    * Those column stats are the zone maps [[read]]'s `ranges` /
-    * `strRanges` pruning and [[optimizeClusterBy]] trade on — the same
-    * per-column bounds Iceberg manifests and Delta's Add-file stats
-    * carry, with Iceberg's truncate-and-bump rule keeping string
-    * bounds sound at bounded manifest size ([[truncUpper]]).
+    * per-file min/max of every other long-typed column, truncated
+    * min/max of every string column and null counts, all taken from
+    * the files' parquet footers on the driver ([[entriesFromDir]]):
+    * no job reads back what was just written unless the table blooms
+    * a column or stores INT96 timestamps.  Those column stats are the
+    * zone maps [[read]]'s `ranges` / `strRanges` pruning and
+    * [[optimizeClusterBy]] trade on — the same per-column bounds
+    * Iceberg manifests and Delta's Add-file stats carry, with
+    * Iceberg's truncate-and-bump rule keeping string bounds sound at
+    * bounded manifest size ([[truncUpper]]).
     * `partitionCol` overrides the range-partitioning column
     * (clustering); key min/max per file is always the TABLE KEY's,
     * whatever the layout. */
@@ -1370,151 +1350,234 @@ object VersionedTable {
     // temp) and corrupt the written file; a single select is
     // order-independent by construction.  Project ABOVE the exchange +
     // sort: layout unaffected.
-    (if (headMapping.isEmpty) prepared
-     else prepared.select(prepared.columns.toIndexedSeq.map(c =>
-       col(c).as(headMapping.getOrElse(c, c))): _*))
-      .write.parquet(dir)
-    // an all-empty write (every input partition empty — e.g. a MERGE
-    // whose rewrite deleted every row and inserted none) leaves no
-    // part files; reading the bare directory back would throw, and the
-    // correct manifest contribution is simply "no new files"
-    if (!fileSystem(s, root).listStatus(new Path(dir))
-        .exists(st => st.isFile && st.getPath.getName.startsWith("part-")))
-      return Seq.empty
-    entriesFromDir(s, root, dir, idCol)
+    val physical =
+      if (headMapping.isEmpty) prepared
+      else prepared.select(prepared.columns.toIndexedSeq.map(c =>
+        col(c).as(headMapping.getOrElse(c, c))): _*)
+    physical.write.parquet(dir)
+    // bloom.cols names LOGICAL columns; the written files carry
+    // physical names — translate through the head mapping
+    val bloomCols = headSnap.map(_.props.getOrElse(BloomColsProp, ""))
+      .getOrElse("").split(",").map(_.trim).filter(_.nonEmpty)
+      .map(n => headMapping.getOrElse(n, n)).toSet
+    entriesFromDir(s, dir, idCol, physical.schema, bloomCols)
   }
 
-  /** Manifest entries for every parquet part file under `dir`: one
-    * readback pass computes per-file rows, key zone map, long/
-    * timestamp/string column stats and any enrolled blooms, and one
-    * directory listing records sizes.  Shared by [[writeFiles]] (for
-    * files the engine just wrote) and [[convert]] (for files imported
-    * IN PLACE from a plain parquet directory). */
-  private def entriesFromDir(s: SparkSession, root: String,
-      dir: String, idCol: String): Seq[FileEntry] = {
-    val back = s.read.parquet(dir)
+  /** One column's statistics folded over a file's row groups: `known`
+    * is false when some row group holds values but records no min/max
+    * (parquet-mr keeps none for INT96 and drops binary bounds above its
+    * 4 KB stats limit), `bounds` is None when every value is NULL, and
+    * `nulls` is None when some row group records no null count. */
+  private final case class FooterStat[T](known: Boolean,
+      bounds: Option[(T, T)], nulls: Option[Long])
+
+  private def footerStat[T](
+      chunks: Seq[(Long, Option[org.apache.parquet.column.statistics.Statistics[_]])],
+      value: org.apache.parquet.column.statistics.Statistics[_] => (T, T))(
+      implicit ord: Ordering[T]): FooterStat[T] =
+    chunks.foldLeft(FooterStat[T](known = true, None, Some(0L))) {
+      // a file without the column holds it as NULL in every row
+      case (acc, (rows, None)) => acc.copy(nulls = acc.nulls.map(_ + rows))
+      case (acc, (rows, Some(st))) =>
+        val n = if (st.isNumNullsSet) Some(st.getNumNulls) else None
+        val nulls = for (a <- acc.nulls; b <- n) yield a + b
+        if (st.hasNonNullValue) {
+          val (mn, mx) = value(st)
+          FooterStat(acc.known, Some(acc.bounds.fold((mn, mx)) {
+            case (a, b) => (ord.min(a, mn), ord.max(b, mx)) }), nulls)
+        } else FooterStat(acc.known && n.contains(rows), acc.bounds, nulls)
+    }
+
+  /** Manifest entries for every parquet file directly under `dir`,
+    * whose Spark schema is `schema`.  Rows, the key's min/max, long and
+    * timestamp min/max, truncated string min/max and null counts come
+    * from each file's parquet FOOTER (row-group statistics folded per
+    * file), read on the driver — O(files) footer reads, no job; sizes
+    * come from the one directory listing.  A readback job over the
+    * files runs only for what a footer cannot give: bloom words of the
+    * `bloomCols` (physical names) and min/max of INT96 timestamps
+    * (Spark's default timestamp encoding, which parquet-mr keeps no
+    * bounds for) — a table with neither runs none.  A string column
+    * whose footer carries no bounds (values past parquet-mr's 4 KB stats
+    * limit) records no string stats, which keeps the file in every
+    * pruned read.  Files without rows get no entry.  Shared by
+    * [[writeFiles]] (for files the engine just wrote) and [[convert]]
+    * (for files imported IN PLACE from a plain parquet directory). */
+  private def entriesFromDir(s: SparkSession, dir: String, idCol: String,
+      schema: org.apache.spark.sql.types.StructType,
+      bloomCols: Set[String]): Seq[FileEntry] = {
+    import org.apache.parquet.column.statistics.{BinaryStatistics,
+      LongStatistics}
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
+    import scala.jdk.CollectionConverters._
+    val conf = s.sparkContext.hadoopConfiguration
+    val dirPath = new Path(dir)
+    val files = dirPath.getFileSystem(conf).listStatus(dirPath).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    val footers = files.map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try st -> r.getFooter.getBlocks.asScala.toSeq finally r.close()
+    }
     // long columns record raw values; timestamp columns record epoch
-    // MICROS (lossless for parquet timestamp[us]) in the same long
-    // stats map — a `ranges` prune on a timestamp column takes micros
-    val statCols: IndexedSeq[(String, Column)] =
-      back.schema.fields.toIndexedSeq.filter(_.name != idCol).collect {
-        case f if f.dataType == org.apache.spark.sql.types.LongType =>
-          f.name -> col(f.name)
-        case f if f.dataType == org.apache.spark.sql.types.TimestampType =>
-          f.name -> unix_micros(col(f.name))
-      }
-    val statAggs = statCols.flatMap { case (c, e) => Seq(
-      min(e).as(s"__mn_$c"), max(e).as(s"__mx_$c")) }
-    val strCols = back.schema.fields.toIndexedSeq
-      .filter(f => f.dataType == org.apache.spark.sql.types.StringType &&
-        f.name != idCol)
-      .map(_.name)
-    // min/max over the TRUNCATED values: truncation is monotone, so
-    // min(trunc) = trunc(min) and max(trunc) = trunc(max) — the agg
-    // never materializes full document text into the aggregation
-    // buffer, and max(length) tells us whether the max needs the bump
-    val strAggs = strCols.flatMap(c => Seq(
-      min(substring(col(c), 1, StrStatLen)).as(s"__smn_$c"),
-      max(substring(col(c), 1, StrStatLen)).as(s"__smx_$c"),
-      max(length(col(c))).as(s"__sln_$c")))
-    // per-file BLOOM FILTERS for the columns the `bloom.cols` table
-    // property names (string/long only): point-predicate file skipping
-    // without clustering — the role of Delta's bloom index / parquet's
-    // bloom pages.  Positions are projected ONCE per row (4 xxhash64
-    // calls), then the 64 word aggregates are plain bit arithmetic
-    // over those positions, riding the same single stats pass.
-    val bloomCols: Seq[String] = {
-      // bloom.cols names LOGICAL columns; the written files carry
-      // physical names — translate through the head mapping
-      val headProps = latestVersion(s, root)
-        .map(v0 => snapshot(s, root, v0)).toSeq
-      val headMapping =
-        headProps.headOption.map(mappingOf).getOrElse(Map.empty)
-      val wanted = headProps.headOption
-        .map(_.props.getOrElse(BloomColsProp, ""))
-        .getOrElse("")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-        .map(n => headMapping.getOrElse(n, n)).toSet
-      back.schema.fields.toIndexedSeq.filter(f => wanted(f.name) &&
-        (f.dataType == org.apache.spark.sql.types.StringType ||
-         f.dataType == org.apache.spark.sql.types.LongType))
-        .map(_.name)
-    }
-    val enriched = bloomCols.foldLeft(back) { (acc, c) =>
-      (0 until BloomHashes).foldLeft(acc) { (a, i) =>
-        // null contributes no bits (a null can never be looked up);
-        // -1 falls outside every word comparison below
-        a.withColumn(s"__pos_${c}_$i",
-          when(col(c).isNull, lit(-1L))
-            .otherwise(pmod(xxhash64(col(c), lit(i)),
-              lit(BloomBits.toLong))))
-      }
-    }
-    // one directory listing for the just-written files' sizes (split
-    // planning and the connector FileIndex read them from the
-    // manifest; a per-file status sweep would be O(files) RPCs)
-    val sizes: Map[String, Long] = {
-      val fs = fileSystem(s, root)
-      fs.listStatus(new Path(dir)).toSeq.filter(_.isFile)
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith("."))
-        .map(st => normPath(st.getPath.toString) -> st.getLen).toMap
-    }
-    // null counts for every stats-eligible column (Iceberg's
-    // null_value_counts): count(col) rides the same single pass
-    val nullCols = (statCols.map(_._1) ++ strCols).distinct
-    val nullAggs = nullCols.map(c => count(col(c)).as(s"__cnt_$c"))
-    val aggs = Seq(min(col(idCol)).as("minId"),
-      max(col(idCol)).as("maxId")) ++ statAggs ++ strAggs ++ nullAggs ++
-      bloomCols.flatMap { c =>
-        (0 until BloomWords).map { w =>
-          val contrib = (0 until BloomHashes).map { i =>
-            when(shiftright(col(s"__pos_${c}_$i"), 6) === lit(w.toLong),
-              expr(s"shiftleft(1L, cast(__pos_${c}_$i % 64 as int))"))
-              .otherwise(lit(0L))
-          }.reduce(_ bitwiseOR _)
-          bit_or(contrib).as(s"__bf_${c}_$w")
-        }
-      }
-    enriched
-      .groupBy(input_file_name().as("path"))
-      .agg(count(lit(1)).as("rows"), aggs: _*)
-      .collect()
-      .map { r =>
-        // an all-null column in a file has null bounds: no stats entry
-        // (pruning then keeps the file — conservative)
-        val stats = statCols.map(_._1).flatMap { c =>
-          val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-          if (mn == null || mx == null) None
-          else Some(c -> (mn.asInstanceOf[Long], mx.asInstanceOf[Long]))
-        }.toMap
-        val sstats = strCols.flatMap { c =>
-          val mn = r.getAs[String](s"__smn_$c")
-          val mx = r.getAs[String](s"__smx_$c")
-          val ln = r.getAs[Any](s"__sln_$c")
-          if (mn == null || mx == null) None
-          else truncUpper(mx,
-            ln != null && ln.asInstanceOf[Int] > StrStatLen)
-            .map(up => c -> (mn, up))
-        }.toMap
-        val blooms = bloomCols.flatMap { c =>
-          val words = (0 until BloomWords).map { w =>
-            val x = r.getAs[Any](s"__bf_${c}_$w")
-            if (x == null) 0L else x.asInstanceOf[Long]
+    // MICROS in the same long stats map — a `ranges` prune on a
+    // timestamp column takes micros
+    val longCols = schema.fields.toIndexedSeq.filter(f => f.name != idCol &&
+      (f.dataType == LongType || f.dataType == TimestampType))
+    val strCols = schema.fields.toIndexedSeq
+      .filter(f => f.name != idCol && f.dataType == StringType).map(_.name)
+    val blooms = schema.fields.toIndexedSeq.filter(f => bloomCols(f.name) &&
+      (f.dataType == StringType || f.dataType == LongType)).map(_.name)
+    type Chunks = Seq[(Long,
+      Option[org.apache.parquet.column.statistics.Statistics[_]])]
+    def chunks(blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+        c: String): Chunks =
+      blocks.map(b => b.getRowCount -> b.getColumns.asScala
+        .find(_.getPath.toArray.toSeq == Seq(c)).map(_.getStatistics))
+    // INT64 bounds in epoch micros (plain longs and MICROS timestamps
+    // as stored, MILLIS scaled); None = the footer cannot bound this
+    // column (INT96, NANOS), so the readback must
+    def longStat(cs: Chunks): Option[FooterStat[Long]] = {
+      val types = cs.flatMap(_._2).map(_.`type`()).distinct
+      val scale = types match {
+        case Seq() => Some(1L)
+        case Seq(t) if t.getPrimitiveTypeName == PrimitiveTypeName.INT64 =>
+          t.getLogicalTypeAnnotation match {
+            case null => Some(1L)
+            case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              ts.getUnit match {
+                case LogicalTypeAnnotation.TimeUnit.MICROS => Some(1L)
+                case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(1000L)
+                case _ => None
+              }
+            case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation
+                if i.isSigned => Some(1L)
+            case _ => None
           }
-          // an all-null column leaves an empty filter: every lookup
-          // would prune the file, which is CORRECT (no value matches)
-          Some(c -> words)
-        }.toMap
-        val rowsN = r.getAs[Long]("rows")
-        val nulls = nullCols.map { c =>
-          c -> (rowsN - r.getAs[Long](s"__cnt_$c")) }.toMap
-        FileEntry(r.getAs[String]("path"), rowsN,
-          r.getAs[Long]("minId"), r.getAs[Long]("maxId"), None, stats,
-          sstats, blooms,
-          sizes.getOrElse(normPath(r.getAs[String]("path")), 0L), nulls)
+        case _ => None
       }
-      .toSeq.sortBy(_.path)
+      scale.map(k => footerStat[Long](cs, st => {
+        val l = st.asInstanceOf[LongStatistics]
+        (l.getMin * k, l.getMax * k)
+      })).filter(_.known)
+    }
+    implicit val unsignedBytes: Ordering[Array[Byte]] =
+      (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b)
+    val perFile = footers.map { case (st, blocks) =>
+      val key = longStat(chunks(blocks, idCol))
+      val longs = longCols.map(f => f.name -> longStat(chunks(blocks, f.name)))
+      val strs = strCols.map(c => c -> footerStat[Array[Byte]](
+        chunks(blocks, c), x => {
+          val b = x.asInstanceOf[BinaryStatistics]
+          (b.genericGetMin.getBytes, b.genericGetMax.getBytes)
+        }))
+      (st, blocks.map(_.getRowCount).sum, key, longs, strs)
+    }.filter(_._2 > 0)
+    // the readback: bloom words, the bounds and null counts of every
+    // long/timestamp column some footer cannot bound, and the key when
+    // a footer lacks it (never for files the engine writes)
+    val boundCols =
+      (if (perFile.exists(_._3.isEmpty)) Seq(idCol) else Seq.empty) ++
+        longCols.map(_.name).filter(c =>
+          perFile.exists(_._4.exists(l => l._1 == c && l._2.isEmpty)))
+    val backCols = (boundCols ++ blooms).distinct
+    val back: Map[String, org.apache.spark.sql.Row] =
+      if (backCols.isEmpty || perFile.isEmpty) Map.empty
+      else {
+        val backSchema = org.apache.spark.sql.types.StructType(
+          backCols.map(schema(_)))
+        val raw = s.read.schema(backSchema)
+          .parquet(perFile.map(_._1.getPath.toString): _*)
+        def asLong(c: String): Column =
+          if (schema(c).dataType == TimestampType) unix_micros(col(c))
+          else col(c)
+        val boundAggs = boundCols.flatMap(c => Seq(
+          min(asLong(c)).as(s"__mn_$c"), max(asLong(c)).as(s"__mx_$c"),
+          count(col(c)).as(s"__cnt_$c")))
+        // per-file BLOOM FILTERS for the columns the `bloom.cols` table
+        // property names (string/long only): point-predicate file
+        // skipping without clustering — the role of Delta's bloom index
+        // / parquet's bloom pages.  Positions are projected ONCE per row
+        // (4 xxhash64 calls), then the 64 word aggregates are plain bit
+        // arithmetic over those positions.
+        val enriched = blooms.foldLeft(raw) { (acc, c) =>
+          (0 until BloomHashes).foldLeft(acc) { (a, i) =>
+            // null contributes no bits (a null can never be looked up);
+            // -1 falls outside every word comparison below
+            a.withColumn(s"__pos_${c}_$i",
+              when(col(c).isNull, lit(-1L))
+                .otherwise(pmod(xxhash64(col(c), lit(i)),
+                  lit(BloomBits.toLong))))
+          }
+        }
+        val bloomAggs = blooms.flatMap { c =>
+          (0 until BloomWords).map { w =>
+            val contrib = (0 until BloomHashes).map { i =>
+              when(shiftright(col(s"__pos_${c}_$i"), 6) === lit(w.toLong),
+                expr(s"shiftleft(1L, cast(__pos_${c}_$i % 64 as int))"))
+                .otherwise(lit(0L))
+            }.reduce(_ bitwiseOR _)
+            bit_or(contrib).as(s"__bf_${c}_$w")
+          }
+        }
+        enriched.groupBy(input_file_name().as("path"))
+          .agg(count(lit(1)).as("rows"), boundAggs ++ bloomAggs: _*)
+          .collect().map(r => normPath(r.getAs[String]("path")) -> r).toMap
+      }
+    def backLong(r: Option[org.apache.spark.sql.Row], c: String)
+        : Option[(Long, Long)] = r.flatMap { row =>
+      val mn = row.getAs[Any](s"__mn_$c"); val mx = row.getAs[Any](s"__mx_$c")
+      if (mn == null || mx == null) None
+      else Some((mn.asInstanceOf[Long], mx.asInstanceOf[Long]))
+    }
+    perFile.map { case (st, rows, key, longs, strs) =>
+      val path = st.getPath.toUri.toString
+      val r = back.get(normPath(path))
+      // an all-null key records (0, 0), as an aggregate's null bound did
+      val (minId, maxId) = key match {
+        case Some(k) => k.bounds.getOrElse((0L, 0L))
+        case None => backLong(r, idCol).getOrElse((0L, 0L))
+      }
+      // an all-null column has no bounds: no stats entry (pruning then
+      // keeps the file — conservative)
+      val longStats = longs.flatMap {
+        case (c, Some(fs)) => fs.bounds.map(c -> _)
+        case (c, None) => backLong(r, c).map(c -> _)
+      }.toMap
+      // min/max of the values cut to StrStatLen code points: the cut is
+      // monotone, so cut(min) and cut(max) bound the cut values; the max
+      // takes the bump when the max itself was cut
+      def cut(v: String): String =
+        if (v.codePointCount(0, v.length) <= StrStatLen) v
+        else v.substring(0, v.offsetByCodePoints(0, StrStatLen))
+      val sstats = strs.flatMap { case (c, fs) =>
+        fs.bounds.filter(_ => fs.known).flatMap { case (mnB, mxB) =>
+          val mn = new String(mnB, java.nio.charset.StandardCharsets.UTF_8)
+          val mx = new String(mxB, java.nio.charset.StandardCharsets.UTF_8)
+          truncUpper(cut(mx), cut(mx).length < mx.length)
+            .map(up => c -> (cut(mn), up))
+        }
+      }.toMap
+      // null counts for every stats-eligible column (Iceberg's
+      // null_value_counts)
+      val nulls = (longs.flatMap {
+        case (c, Some(fs)) => fs.nulls.map(c -> _)
+        case (c, None) => r.map(row => c -> (rows - row.getAs[Long](s"__cnt_$c")))
+      } ++ strs.flatMap { case (c, fs) => fs.nulls.map(c -> _) }).toMap
+      val bloomWords = blooms.map { c =>
+        // an all-null column leaves an empty filter: every lookup
+        // would prune the file, which is CORRECT (no value matches)
+        c -> (0 until BloomWords).map { w =>
+          val x = r.map(_.getAs[Any](s"__bf_${c}_$w")).orNull
+          if (x == null) 0L else x.asInstanceOf[Long]
+        }
+      }.toMap
+      FileEntry(path, rows, minId, maxId, None, longStats, sstats,
+        bloomWords, st.getLen, nulls)
+    }.sortBy(_.path)
   }
 
   /** Commit `newFiles ++ carryOver(parent)` as the next version via the
@@ -1765,7 +1828,7 @@ object VersionedTable {
         snap.files.partition(f => touched.contains(normPath(f.path)))
       val survivors =
         if (rewrite.isEmpty) df
-        else readConformed(s, snap, rewrite)
+        else readFilesOf(s, snap, rewrite)
           .filter(!coalesce(cond, lit(false)))
           .unionByName(df, allowMissingColumns = true)
       val newFiles = writeFiles(s, root, survivors, idCol, numFiles)
@@ -1785,10 +1848,13 @@ object VersionedTable {
 
   /** CONVERT TO GRAFT: adopt a plain parquet DIRECTORY as version 1
     * of a table IN PLACE — zero rows copied or rewritten, the
-    * onboarding move Delta ships as `CONVERT TO DELTA`.  One readback
-    * pass records the same per-file metadata a native write would
-    * (row counts, key zone map, long/timestamp/string column stats,
-    * file sizes), so time travel, stats-pruned reads, the connector,
+    * onboarding move Delta ships as `CONVERT TO DELTA`.  The schema is
+    * the directory's inferred parquet schema (one footer job), and
+    * [[entriesFromDir]] records the same per-file metadata a native
+    * write would (row counts, key zone map, long/timestamp/string
+    * column stats, file sizes) from the files' footers, plus a
+    * readback for INT96 timestamp bounds when the files carry any,
+    * so time travel, stats-pruned reads, the connector,
     * DML and the streaming source all work immediately; every later
     * commit is ordinary.  The imported files live wherever they
     * already are (typically outside `root/data`), which keeps them
@@ -1801,13 +1867,13 @@ object VersionedTable {
       idCol: String): Int = {
     require(latestVersion(s, root).isEmpty,
       s"convert target $root already has commits")
-    val entries = entriesFromDir(s, root, dir, idCol)
+    val foreign = s.read.parquet(dir)
+    val entries = entriesFromDir(s, dir, idCol, foreign.schema, Set.empty)
     require(entries.nonEmpty, s"no parquet part files under $dir")
     commitManifest(s, root, "convert", entries, _ => Seq.empty, None,
       propsOf = parent => {
         val inherited = parent.map(_.props).getOrElse(Map.empty)
-        schemaProp(inherited + (TableKeyProp -> idCol),
-          s.read.parquet(dir))
+        schemaProp(inherited + (TableKeyProp -> idCol), foreign)
       })
   }
 
@@ -2250,7 +2316,7 @@ object VersionedTable {
         throw new IllegalStateException(
           s"cannot add constraint to empty table $root"))
       val snap = snapshot(s, root, parentV)
-      enforceConstraints(readConformed(s, snap, snap.files),
+      enforceConstraints(readFilesOf(s, snap, snap.files),
         Map(name -> predicate), s"existing rows of $root")
       commitManifest(s, root, "set-constraint", Seq.empty,
         _ => snap.files, requireParent = Some(parentV),
@@ -2413,7 +2479,7 @@ object VersionedTable {
         if (rewrite.isEmpty) upserts
         // readLive: rewriting a DV-carrying file MATERIALIZES its
         // deletions — the fresh file carries no DV
-        else readConformed(s, snap, rewrite)
+        else readFilesOf(s, snap, rewrite)
           .join(broadcast(keys), Seq(idCol), "left_anti")
           // allowMissingColumns: an upsert batch may ADD columns (schema
           // evolution) — surviving old rows carry null for them
@@ -2557,7 +2623,7 @@ object VersionedTable {
       // (duplicate UNMATCHED source keys legitimately insert once per
       // source row, exactly SQL MERGE's semantics).
       if (matchedIdx.isEmpty && nmbsIdx.isEmpty) {
-        val tgtSchema = readConformed(s, snap, snap.files).schema
+        val tgtSchema = readFilesOf(s, snap, snap.files).schema
         // with a residual ON predicate the match test needs target
         // columns beyond the key: anti-join on the FULL condition over
         // aliased frames (Catalyst prunes the target scan to the
@@ -2565,10 +2631,10 @@ object VersionedTable {
         // key-only column-pruned anti-join
         val fresh = onExtra match {
           case None => src.alias("s").join(
-            readConformed(s, snap, snap.files).select(col(idCol)),
+            readFilesOf(s, snap, snap.files).select(col(idCol)),
             Seq(idCol), "left_anti")
           case Some(extra) => src.alias("s").join(
-            readConformed(s, snap, snap.files).alias("t"),
+            readFilesOf(s, snap, snap.files).alias("t"),
             col(s"t.$idCol") === col(s"s.$idCol") && extra, "left_anti")
         }
         def insVal(f: org.apache.spark.sql.types.StructField): Column = {
@@ -2649,7 +2715,7 @@ object VersionedTable {
       val tgtRows =
         if (rewrite.isEmpty)
           current.drop("__graft_file").filter(lit(false))
-        else readConformed(s, snap, rewrite)
+        else readFilesOf(s, snap, rewrite)
       // residual ON predicates ride the SAME equi-join: Catalyst
       // plans the key equality as the shuffle/broadcast hash key and
       // evaluates the residual as the join's non-equi condition — a
@@ -2769,7 +2835,7 @@ object VersionedTable {
         rebaseAddedOk = addedOk(snap))
     else {
       // readLive: the rewrite also materializes any existing DVs
-      val survivors = keepRows(readConformed(s, snap, rewrite))
+      val survivors = keepRows(readFilesOf(s, snap, rewrite))
       val newFiles = writeFiles(s, root, survivors, idCol, numFiles)
       commitManifest(s, root, "delete", newFiles, carryFromHead, txnId,
         requireParent = Some(parentV), rebaseKeep = Some(touched),
@@ -2903,7 +2969,7 @@ object VersionedTable {
               val touchedPaths = touched.map(f => normPath(f.path))
                 .toDF("path")
               matches.unionByName(
-                s.read.parquet(oldDvPaths: _*)
+                readDv(s, oldDvPaths)
                   .join(broadcast(touchedPaths), Seq("path"), "left_semi"))
             }
           val dvPath = writeDv(s, root, dvRows)
@@ -2999,7 +3065,7 @@ object VersionedTable {
         // the very column the condition reads (SET n = n + 100 WHERE
         // n < 100: filtering post-images by the raw condition would
         // miss every updated row, and the constraint check with it)
-        val marked = readConformed(s, snap, rewrite)
+        val marked = readFilesOf(s, snap, rewrite)
           .withColumn("__graft_upd", coalesce(cond, lit(false)))
         val updatedM = applyAssignments(marked, col("__graft_upd"), set)
         enforceConstraints(
@@ -3111,7 +3177,7 @@ object VersionedTable {
               val touchedPaths = touched.map(f => normPath(f.path))
                 .toDF("path")
               masks.unionByName(
-                s.read.parquet(oldDvPaths: _*)
+                readDv(s, oldDvPaths)
                   .join(broadcast(touchedPaths), Seq("path"), "left_semi"))
             }
           val dvPath = writeDv(s, root, dvRows)
@@ -3153,7 +3219,7 @@ object VersionedTable {
         f.dv.exists(_.rows.toDouble >= minDeadRatio * f.rows))
       if (dead.isEmpty) parentV
       else {
-        val newFiles = writeFiles(s, root, readConformed(s, snap, dead), idCol,
+        val newFiles = writeFiles(s, root, readFilesOf(s, snap, dead), idCol,
           numFiles)
         commitManifest(s, root, "purge", newFiles, _ => carry,
           requireParent = Some(parentV))
@@ -3182,7 +3248,7 @@ object VersionedTable {
     else {
       // readLive: compacting a DV-carrying small file materializes its
       // deletions — the packed files start DV-free
-      val packed = readConformed(s, snap, small)
+      val packed = readFilesOf(s, snap, small)
       val newFiles = writeFiles(s, root, packed, idCol, numFiles)
       commitManifest(s, root, "optimize", newFiles, _ => carry,
         requireParent = Some(parentV))
@@ -3225,7 +3291,7 @@ object VersionedTable {
         val total = small.map(_.bytes).sum
         val n = math.max(1L,
           (total + targetBytes - 1L) / targetBytes).toInt
-        val newFiles = writeFiles(s, root, readConformed(s, snap, small), idCol, n)
+        val newFiles = writeFiles(s, root, readFilesOf(s, snap, small), idCol, n)
         commitManifest(s, root, "optimize", newFiles, _ => carry,
           requireParent = Some(parentV))
       }
@@ -3237,7 +3303,7 @@ object VersionedTable {
       val parentV = latestVersion(s, root).getOrElse(
         throw new IllegalStateException("cluster of empty table"))
       val snap = snapshot(s, root, parentV)
-      val newFiles = writeFiles(s, root, readConformed(s, snap, snap.files), idCol,
+      val newFiles = writeFiles(s, root, readFilesOf(s, snap, snap.files), idCol,
         numFiles, partitionCol = Some(clusterCol))
       commitManifest(s, root, "cluster", newFiles, _ => Seq.empty,
         requireParent = Some(parentV))
@@ -3321,7 +3387,7 @@ object VersionedTable {
           val rows = math.max(1L, comp.map(_.liveRows).sum)
           val n = ((rows + targetRowsPerFile - 1L) / targetRowsPerFile)
             .toInt.max(1)
-          writeFiles(s, root, readConformed(s, snap, comp), idCol, n,
+          writeFiles(s, root, readFilesOf(s, snap, comp), idCol, n,
             partitionCol = Some(clusterCol))
         }
         commitManifest(s, root, "cluster", newFiles, _ => carry,
@@ -3409,7 +3475,7 @@ object VersionedTable {
       if (snap.rows == 0L)
         // empty table (manifest metadata — no scan): nothing to lay out
         return parentV
-      val live = readConformed(s, snap, snap.files)
+      val live = readFilesOf(s, snap, snap.files)
       import org.apache.spark.sql.types._
       val fieldType = live.schema.fields.map(f => f.name -> f.dataType).toMap
       val numCols = cols.filter(c => fieldType.get(c) match {
@@ -3613,61 +3679,10 @@ object VersionedTable {
     * table. */
   def changeFeed(s: SparkSession, root: String, vFrom: Int,
       vTo: Int, idCol: Option[String] = None): DataFrame = {
-    // ONE-PASS signed-multiset diff.  The previous form computed
-    // toSide.exceptAll(fromSide) AND fromSide.exceptAll(toSide) — two
-    // full-width shuffles over the same pair of reads, with each
-    // side's scan inlined into both — and the update pairing then
-    // consumed both results twice more (intersect + two joins; the
-    // unoptimized cdf_changes_between plan carried 32 exchanges / 48
-    // scans for a three-commit window).  The fused form unions the
-    // sides ONCE with a +1/-1 marker and takes the signed count per
-    // row value: delta = #to − #from, so delta > 0 emits that many
-    // 'insert'-side rows and delta < 0 that many 'delete'-side rows —
-    // exactly exceptAll's max(count difference, 0) on each side — in
-    // ONE exchange, with each side scanned once.  The pre/post-image
-    // pairing becomes a min/max window over the table key on the
-    // commit-sized diff instead of intersect + joins.  Identical rows
-    // out (the CDF oracles and GraftTableSourceSpec pin it); only the
-    // exchange and scan counts drop.
     val (toSide, fromSide, isEmpty) = diffSides(s, root, vFrom, vTo)
     if (isEmpty)
       return toSide.withColumn("_change_type", lit("insert"))
-    val dataCols = toSide.columns.toSeq
-    val delta = toSide.withColumn("_graft_side", lit(1L))
-      .unionByName(fromSide.withColumn("_graft_side", lit(-1L)))
-      .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("_graft_side")).as("_graft_delta"))
-      .filter(col("_graft_delta") =!= 0L)
-    val diffRows = delta
-      .withColumn("_graft_i",
-        explode(sequence(lit(1L), abs(col("_graft_delta")))))
-      .withColumn("_graft_side",
-        when(col("_graft_delta") > 0, 1).otherwise(-1))
-      .drop("_graft_delta", "_graft_i")
-    val tagged = idCol match {
-      case None =>
-        diffRows.withColumn("_change_type",
-          when(col("_graft_side") > 0, "insert").otherwise("delete"))
-      case Some(id) =>
-        // a key with rows on both sides of the diff is an update; the
-        // isNotNull guard keeps the legacy join semantics where a NULL
-        // key never pairs (idCol is the table key, so this is the
-        // degenerate-input corner only)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(id))
-        diffRows
-          .withColumn("_graft_lo", min(col("_graft_side")).over(w))
-          .withColumn("_graft_hi", max(col("_graft_side")).over(w))
-          .withColumn("_change_type",
-            when(col(id).isNotNull &&
-                col("_graft_lo") < col("_graft_hi"),
-              when(col("_graft_side") > 0, "update_postimage")
-                .otherwise("update_preimage"))
-              .otherwise(when(col("_graft_side") > 0, "insert")
-                .otherwise("delete")))
-          .drop("_graft_lo", "_graft_hi")
-    }
-    tagged.drop("_graft_side")
+    fusedFeed(Seq((vTo, toSide, fromSide)), idCol).drop("_commit_version")
   }
 
   /** CHANGES BETWEEN two versions as PER-COMMIT feeds: every version
@@ -3675,64 +3690,82 @@ object VersionedTable {
     * vs its parent, tagged `_commit_version` — Delta's `readChangeFeed`
     * window contract (inclusive bounds), where [[changeFeed]] alone
     * gives the NET diff of two snapshots.  Version 1 (when included)
-    * feeds as the initial load's pure inserts.  Union is by name with
-    * missing-column backfill, so a schema evolution inside the window
-    * reads as nulls on the pre-evolution commits' rows. */
+    * feeds as the initial load's pure inserts.  Every commit's sides
+    * are aligned to the window's union schema, so a schema evolution
+    * inside the window reads as nulls on the pre-evolution commits'
+    * rows. */
   def changes(s: SparkSession, root: String, startingVersion: Int,
       endingVersion: Int, idCol: Option[String] = None): DataFrame = {
     require(startingVersion >= 1 && startingVersion <= endingVersion,
       s"bad CHANGES BETWEEN window [$startingVersion, $endingVersion]")
-    // FUSED window feed (r15): the per-commit form unioned one full
-    // changeFeed PLAN per version — each with its own groupBy exchange
-    // and pairing window over tiny commit-sized diffs (the r14
-    // cdf_changes_between plan held 3 independent diff chains, ~11
-    // exchanges).  Because every commit's signed-multiset diff is
-    // computed over DISJOINT groups once `_commit_version` joins the
-    // grouping key, the whole window fuses into ONE union + ONE
-    // groupBy + ONE pairing window partitioned by (version, id) —
-    // per-commit semantics unchanged, identical rows out (the CDF
-    // oracles pin it).  Applies when every commit pair in the window
-    // reads the same logical schema; a window straddling a schema
-    // evolution falls back to the per-commit union with
-    // missing-column backfill.
+    // FUSED window feed: because every commit's signed-multiset diff
+    // is computed over DISJOINT groups once `_commit_version` joins the
+    // grouping key, the whole window is ONE union + ONE groupBy + ONE
+    // pairing window partitioned by (version, id) — per-commit
+    // semantics, one exchange instead of one per commit.
     val initial: Option[DataFrame] =
       if (startingVersion > 1) None
       else Some(read(s, root, Some(1))
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(1)))
     val diffVs = math.max(2, startingVersion) to endingVersion
+    if (diffVs.isEmpty) return initial.get
     val sides = diffVs.map(v => (v, diffSides(s, root, v - 1, v)))
-    val nonEmpty = sides.collect { case (v, (to, from, false)) =>
-      (v, to, from) }
-    val schemas = nonEmpty
-      .flatMap(p => Seq(p._2.columns.toSeq, p._3.columns.toSeq)).distinct
-    val feed: Option[DataFrame] =
-      if (nonEmpty.isEmpty) None
-      else if (schemas.size == 1) Some(fusedFeed(nonEmpty, idCol))
-      else Some(nonEmpty.map { case (v, _, _) =>
-        changeFeed(s, root, v - 1, v, idCol)
-          .withColumn("_commit_version", lit(v))
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
-    (initial, feed) match {
-      case (Some(i), Some(f)) =>
-        i.unionByName(f, allowMissingColumns = true)
-      case (Some(i), None) => i
-      case (None, Some(f)) => f
-      case (None, None) =>
+    // the window's union schema over EVERY commit's sides, no-op
+    // commits included (an ADD COLUMN commit contributes its column),
+    // in first-seen order; a name whose type changed across the window
+    // (drop and re-add) takes the newest commit's type
+    val union = sides.flatMap { case (_, (to, from, _)) =>
+      Seq(to.schema, from.schema) }
+      .foldLeft(new org.apache.spark.sql.types.StructType()) { (acc, st) =>
+        org.apache.spark.sql.types.StructType(acc.fields.map(f =>
+          st.find(_.name == f.name)
+            .map(g => f.copy(dataType = g.dataType)).getOrElse(f)) ++
+          st.fields.filterNot(f => acc.fieldNames.contains(f.name)))
+      }
+    // every side aligned to the union by name AND type before tagging,
+    // so one fused feed covers a window straddling a schema evolution:
+    // a commit that predates a column reads it as NULL
+    def align(df: DataFrame): DataFrame = {
+      val have = df.columns.toSet
+      df.select(union.fields.toIndexedSeq.map(f =>
+        (if (have(f.name)) col(f.name) else lit(null))
+          .cast(f.dataType).as(f.name)): _*)
+    }
+    val parts = sides.collect { case (v, (to, from, false)) =>
+      (v, align(to), align(from)) }
+    // the column order a per-commit union by name gives: the first
+    // commit's columns, the tags, then the columns later commits add
+    val lead = initial.map(_.columns.toSeq.dropRight(2)).getOrElse(
+      sides.collectFirst { case (_, (to, _, false)) => to.columns.toSeq }
+        .getOrElse(sides.head._2._1.columns.toSeq))
+    val order = lead ++ Seq("_change_type", "_commit_version") ++
+      union.fieldNames.filterNot(lead.contains)
+    val feed =
+      if (parts.isEmpty)
         // every commit in the window was a no-op: an empty feed with
-        // the window's schema (the aligned empty frame diffSides built)
-        sides.head._2._1
+        // the window's schema
+        align(sides.head._2._1)
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", lit(diffVs.head))
           .filter(lit(false))
-    }
+      else fusedFeed(parts, idCol)
+    initial.map(_.unionByName(feed, allowMissingColumns = true))
+      .getOrElse(feed).select(order.map(col): _*)
   }
 
-  /** One-pass signed-multiset diff over a WHOLE CDF window: exactly
-    * [[changeFeed]]'s algebra with `_commit_version` added to the
-    * grouping key and the pairing-window partition, so each commit's
-    * groups stay disjoint and the results are row-identical to the
-    * per-commit union — in one exchange instead of one per commit. */
+  /** One-pass signed-multiset diff over the (version, to, from) sides
+    * of one or more commits, which must share one schema.  The sides
+    * are unioned ONCE with a +1/-1 marker and the signed count taken
+    * per (row value, version): delta = #to − #from, so delta > 0 emits
+    * that many 'insert'-side rows and delta < 0 that many 'delete'-side
+    * rows — exactly exceptAll's max(count difference, 0) on each side —
+    * in ONE exchange, with each side scanned once.  With `idCol` the
+    * pre/post-image pairing is a min/max window over (version, key):
+    * a key with rows on both sides of one commit's diff is an update.
+    * `_commit_version` in the grouping key and the window partition
+    * keeps each commit's groups disjoint, so a whole CDF window fuses
+    * into one plan. */
   private def fusedFeed(parts: Seq[(Int, DataFrame, DataFrame)],
       idCol: Option[String]): DataFrame = {
     val dataCols = parts.head._2.columns.toSeq
@@ -3771,8 +3804,7 @@ object VersionedTable {
                 .otherwise("delete")))
           .drop("_graft_lo", "_graft_hi")
     }
-    // column order must match the per-commit form: data columns,
-    // then _change_type, then _commit_version
+    // data columns, then _change_type, then _commit_version
     taggedRows.drop("_graft_side")
       .select((dataCols :+ "_change_type" :+ "_commit_version")
         .map(col): _*)
@@ -3912,38 +3944,29 @@ object VersionedTable {
     val toIds = to.files.map(ident).toSet
     val onlyFrom = from.files.filterNot(f => toIds(ident(f)))
     val onlyTo = to.files.filterNot(f => fromIds(ident(f)))
-    if (onlyFrom.isEmpty && onlyTo.isEmpty) {
-      val e = emptyLike(s, root, math.max(vFrom, vTo), to)
-      return (e, e, true)
-    }
-    // one merged schema over the differing files, applied to BOTH
-    // sides: across a schema-evolution boundary the sides would
-    // otherwise disagree on columns (exceptAll AnalysisException) or
-    // silently cancel rows differing only in the evolved column.  A
-    // file missing a schema column reads it as null — exactly the
-    // evolution semantics of read().
-    //
-    // FAST PATH: when both snapshots RECORD the same logical schema
-    // (every commit pair except ones straddling an evolution or a
-    // schema-rolling restore), use it directly — the recorded schema
-    // covers every column any referenced file carries, so alignment
-    // is identical, and the mergeSchema footer sweep (a driver-side
-    // datasource resolution over all differing paths, per diff call)
-    // is skipped.  An incremental consumer calling changeFeed per
-    // commit pays O(1) driver work instead of O(differing files).
     // column mapping: files carry PHYSICAL names — read with the
     // physical form of the schema, then conform both sides to the
-    // LOGICAL surface (identity for unmapped tables, which is every
-    // pre-mapping table).  The newer snapshot's mapping governs: it
-    // maps every physical either side can reference.
-    val mapSnap = if (to.version >= from.version) to else from
-    val recorded = to.props.get(TableSchemaProp)
-      .filter(j => from.props.get(TableSchemaProp).contains(j))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val schema = recorded.map(physicalSchema(mapSnap, _))
-      .getOrElse(s.read.option("mergeSchema", "true")
-        .parquet((onlyFrom ++ onlyTo).map(_.path).distinct: _*).schema)
+    // LOGICAL surface (identity for unmapped tables).  The newer
+    // snapshot's mapping governs: it maps every physical either side
+    // can reference.
+    val (mapSnap, other) =
+      if (to.version >= from.version) (to, from) else (from, to)
+    if (onlyFrom.isEmpty && onlyTo.isEmpty) {
+      val e = conformToSnapshot(s, mapSnap, emptyLike(s, mapSnap))
+      return (e, e, true)
+    }
+    // one schema over both recorded schemas, applied to BOTH sides:
+    // across a schema-evolution boundary (or a schema-rolling restore)
+    // the sides would otherwise disagree on columns (exceptAll
+    // AnalysisException) or silently cancel rows differing only in the
+    // evolved column.  A file missing a schema column reads it as null
+    // — exactly the evolution semantics of read().
+    val schema = {
+      val newer = readSchema(mapSnap)
+      org.apache.spark.sql.types.StructType(newer.fields ++
+        readSchema(other).fields.filterNot(f =>
+          newer.fieldNames.contains(f.name)))
+    }
     def readAligned(entries: Seq[FileEntry]): DataFrame =
       if (entries.isEmpty)
         conformToSnapshot(s, mapSnap, s.createDataFrame(

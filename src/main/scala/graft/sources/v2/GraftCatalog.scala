@@ -317,58 +317,18 @@ final class GraftSqlTable(val root: String,
         "graft.functions.GraftExtensions) so the catalog relation is " +
         "served by the graft-table vectorized scan")
 
-  /** V1-fallback write: [[GraftDmlRule]] converts SQL INSERT, CTAS's
-    * write and `df.writeTo` during analysis, so only a write that
-    * reaches the connector without passing the rule lands here —
-    * delegate to the SAME library append/overwrite every other write
-    * path runs (manifest commit, constraints, stats, blooms).  The
-    * V1Write shape is Delta's WriteIntoDeltaBuilder construction: Spark
-    * hands the fully-reconciled DataFrame to an InsertableRelation, no
-    * per-row v2 writer protocol needed. */
+  /** Never called on a correctly-configured session: [[GraftDmlRule]]
+    * converts SQL INSERT, CTAS's write and `df.writeTo` during
+    * analysis into the library append/overwrite, so no write reaches
+    * the connector.  SupportsWrite is implemented only so analysis
+    * accepts the v2 write target before the rule runs. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var asTruncate = false
-      override def truncate()
-          : org.apache.spark.sql.connector.write.WriteBuilder = {
-        asTruncate = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation
-              : org.apache.spark.sql.sources.InsertableRelation =
-            new org.apache.spark.sql.sources.InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                  overwrite: Boolean): Unit = {
-                val s = data.sparkSession
-                val key = VersionedTable.latestVersion(s, root)
-                  .flatMap(v => VersionedTable.snapshot(s, root, v)
-                    .props.get(VersionedTable.TableKeyProp))
-                  .getOrElse(throw new IllegalArgumentException(
-                    s"write to $root needs a recorded table.key " +
-                      "(CREATE TABLE with TBLPROPERTIES " +
-                      "('table.key'='...') first)"))
-                // align to the recorded schema by POSITION (Spark has
-                // already reconciled the query to the table schema)
-                val schema = new GraftSqlTable(root, Map.empty).schema()
-                require(data.columns.length == schema.length,
-                  s"write to $root carries ${data.columns.length} " +
-                    s"columns, table has ${schema.length}")
-                val aligned = data
-                  .toDF(schema.fieldNames.toIndexedSeq: _*)
-                  .select(schema.fields.toIndexedSeq.map(f =>
-                    org.apache.spark.sql.functions.col(f.name)
-                      .cast(f.dataType).as(f.name)): _*)
-                if (asTruncate || overwrite)
-                  VersionedTable.overwrite(s, root, aligned, key, 8)
-                else VersionedTable.append(s, root, aligned, key, 8)
-                ()
-              }
-            }
-        }
-    }
+    throw new UnsupportedOperationException(
+      s"graft.`$root` writes convert in GraftDmlRule; build the session " +
+        "with graft.GraftSession (or set spark.sql.extensions=" +
+        "graft.functions.GraftExtensions)")
 
   override def name(): String = s"graft.`$root`"
 
@@ -380,22 +340,12 @@ final class GraftSqlTable(val root: String,
       .orElse(VersionedTable.latestVersion(s, root))
       .getOrElse(throw new IllegalStateException(
         s"no committed version under $root"))
-    val snap = VersionedTable.snapshot(s, root, v)
-    snap.props.get(VersionedTable.TableSchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse {
-        require(snap.files.nonEmpty,
-          s"cannot derive a schema for $root at v$v")
-        s.read.option("mergeSchema", "true")
-          .parquet(snap.files.map(_.path): _*).schema
-      }
+    VersionedTable.recordedSchema(VersionedTable.snapshot(s, root, v))
   }
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE)
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   /** `SHOW TBLPROPERTIES graft.`/root``: the pinned snapshot's
     * manifest properties, verbatim — constraints, schema, key,

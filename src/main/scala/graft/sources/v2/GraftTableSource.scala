@@ -45,10 +45,9 @@ import graft.sources.VersionedTable
   * FileFormat for exactly this): the anti-join mask rides above the
   * vectorized inner scan, so the table stays readable with
   * outstanding merge-on-read deletes.  Schema comes from the manifest's
-  * `table.schema` property in O(1) (maintained by every row-adding
-  * commit, widened on evolution so older files surface added columns
-  * as null); pre-property history falls back to a mergeSchema footer
-  * sweep. */
+  * `table.schema` property in O(1) ([[VersionedTable.recordedSchema]]:
+  * maintained by every row-adding commit and every DDL, widened on
+  * evolution so older files surface added columns as null). */
 class GraftTableSource extends RelationProvider
     with CreatableRelationProvider
     with org.apache.spark.sql.sources.StreamSinkProvider
@@ -293,21 +292,11 @@ class GraftTableSource extends RelationProvider
       return new GraftMaskedRelation(ctx,
         VersionedTable.read(s, root, Some(v)), root)
     // schema: O(1) from the manifest's table.schema property (written
-    // by every row-adding commit, widened on evolution); pre-property
-    // history falls back to a full mergeSchema footer sweep — correct,
-    // just not O(1)
-    val schema = snap.props.get(VersionedTable.TableSchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse {
-        if (snap.files.isEmpty) new StructType()
-        else s.read.option("mergeSchema", "true")
-          .parquet(snap.files.map(_.path): _*).schema
-      }
+    // by every row-adding commit, widened on evolution)
     val index = new GraftFileIndex(s, root, snap)
-    HadoopFsRelation(index, new StructType(), schema, None,
-      new ParquetFileFormat(),
-      Map("mergeSchema" -> "true"))(s)
+    HadoopFsRelation(index, new StructType(),
+      VersionedTable.recordedSchema(snap), None,
+      new ParquetFileFormat(), Map.empty)(s)
   }
 
   private def resolveTs(s: SparkSession, root: String, t: String): Int = {
@@ -333,17 +322,10 @@ object GraftTableSource {
     val v = VersionedTable.latestVersion(s, root).getOrElse(
       throw new IllegalStateException(
         s"graft-table streaming source needs an existing table at $root"))
-    val snap = VersionedTable.snapshot(s, root, v)
-    val base = snap.props.get(VersionedTable.TableSchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse {
-        require(snap.files.nonEmpty,
-          s"cannot derive a schema for $root: empty snapshot and no " +
-            "recorded table.schema")
-        s.read.option("mergeSchema", "true")
-          .parquet(snap.files.map(_.path): _*).schema
-      }
+    val base =
+      VersionedTable.recordedSchema(VersionedTable.snapshot(s, root, v))
+    require(base.nonEmpty, s"cannot derive a schema for $root: no " +
+      "recorded table.schema")
     if (parameters.get("readChangeFeed").exists(_.toBoolean))
       base.add("_change_type", org.apache.spark.sql.types.StringType)
         .add("_commit_version", org.apache.spark.sql.types.IntegerType)

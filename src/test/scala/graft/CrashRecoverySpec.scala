@@ -106,7 +106,7 @@ class CrashRecoverySpec extends SparkSpec {
     val vdir = new java.io.File(s"$root/_versions")
     assert(vdir.listFiles().exists(_.getName.startsWith(".tmp-")),
       "the killed committer should have left a tmp-manifest orphan")
-    Thread.sleep(150)
+    ageFiles(s"$root/_versions")
     VersionedTable.vacuum(spark, root,
       keepFrom = 1, retainMs = 0L)
     assert(!vdir.listFiles().exists(_.getName.startsWith(".tmp-")),

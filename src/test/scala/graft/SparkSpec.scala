@@ -28,6 +28,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Sets the mtime of every file under `dir` (hidden ones included)
+    * one minute back, so a `vacuum(..., retainMs = 0L)` right after the
+    * writes sees them past its age horizon without waiting on the
+    * clock. */
+  def ageFiles(dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val past = System.currentTimeMillis() - 60000L
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) fs.setTimes(it.next().getPath, past, -1L)
+  }
+
   /** The expressions anywhere in `df`'s optimized plan that `pf`
     * matches. */
   def optimizedExprs[T](df: DataFrame)(

@@ -37,9 +37,9 @@ class VacuumReaderRaceSpec extends SparkSpec {
     val doomed = VersionedTable.read(spark, root, version = Some(1))
     assert(kept.count() === 30L)
     assert(doomed.count() === 20L)
-    // file mtimes are second-ish granularity: let the horizon pass so
-    // retainMs=0 (the deliberate sub-floor override) can reclaim
-    Thread.sleep(150)
+    // age the data files past the horizon so retainMs=0 (the
+    // deliberate sub-floor override) can reclaim
+    ageFiles(s"$root/data")
     val (_, deleted) =
       VersionedTable.vacuum(spark, root, keepFrom = 2, retainMs = 0L)
     assert(deleted > 0, "v1's exclusive files must be reclaimed")
