@@ -81,9 +81,10 @@ class RecordedSchemaReadSpec extends SparkSpec with TempDirs {
       else {
         val to = mergeSchemaRead(root, v)
         val fromRaw = mergeSchemaRead(root, v - 1)
-        val from = fromRaw.select(to.schema.fields.toIndexedSeq.map(f =>
-          (if (fromRaw.columns.contains(f.name)) col(f.name)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
+        // on the newer read's columns, struct fields it adds included
+        val from = to.limit(0).unionByName(
+          fromRaw.select(fromRaw.columns.filter(to.columns.contains)
+            .map(col).toIndexedSeq: _*), allowMissingColumns = true)
         Seq(tag(to.exceptAll(from), "insert", v),
           tag(from.exceptAll(to), "delete", v))
       }
@@ -130,6 +131,87 @@ class RecordedSchemaReadSpec extends SparkSpec with TempDirs {
     assert(VersionedTable.read(spark, root, Some(1)).columns.toSeq ===
       Seq("doc_id", "text"))
     assertReadParity(root)
+  }
+
+  /** doc_id, text and a `props` struct, with an `extra` field or not. */
+  private def withProps(ids: Range, extra: Boolean): DataFrame = {
+    val fields = Seq(col("id").cast("string").as("user"), col("id").as("n")) ++
+      (if (extra) Seq((col("id") * 10).as("extra")) else Nil)
+    spark.range(ids.start.toLong, ids.end.toLong).select(col("id").as("doc_id"),
+      concat(lit("text "), col("id")).as("text"), struct(fields: _*).as("props"))
+  }
+
+  test("a struct column gaining a field keeps it in every read and " +
+    "through a rewrite, like the mergeSchema read") {
+    val root = tempDir("graft_rs_nested")
+    VersionedTable.append(spark, root, withProps(0 until 10, false),
+      "doc_id", 2) // v1
+    VersionedTable.append(spark, root, withProps(10 until 15, true),
+      "doc_id", 1) // v2
+    VersionedTable.merge(spark, root, withProps(3 until 4, true),
+      "doc_id", 1) // v3
+    VersionedTable.optimize(spark, root, 1000L, "doc_id", 1) // v4
+    assert(VersionedTable.snapshot(spark, root, 4).files.size === 1)
+    val wide = StructType(Seq(StructField("user", StringType),
+      StructField("n", LongType), StructField("extra", LongType)))
+    assert(VersionedTable.read(spark, root).schema("props").dataType === wide)
+    // the rewrite kept the field: the head reads as v3's files did
+    assertSame(VersionedTable.read(spark, root), mergeSchemaRead(root, 3),
+      "v4 against v3's files")
+    assert(VersionedTable.read(spark, root)
+      .filter(col("doc_id").isin(3L, 5L, 12L)).orderBy("doc_id")
+      .select(col("props.extra")).collect().toSeq ===
+      Seq(Row(30L), Row(null), Row(120L)))
+    assertReadParity(root)
+    // a batch whose struct field has another type is refused before
+    // it writes a file
+    val clash = spark.range(20L, 21L).select(col("id").as("doc_id"),
+      lit("t").as("text"), struct(lit("u").as("user"), lit("x").as("n"))
+        .as("props"))
+    val e = intercept[IllegalArgumentException](
+      VersionedTable.append(spark, root, clash, "doc_id", 1))
+    assert(e.getMessage.contains("props.n"))
+    assert(VersionedTable.latestVersion(spark, root) === Some(4))
+  }
+
+  test("an overwrite may change a column's type and reads it like the " +
+    "mergeSchema read; an append of another type is refused") {
+    val root = tempDir("graft_rs_retype")
+    VersionedTable.append(spark, root,
+      (0 until 10).map(i => (i.toLong, s"text $i", i.toLong))
+        .toDF("doc_id", "text", "score"), "doc_id", 2) // v1
+    VersionedTable.overwrite(spark, root,
+      (0 until 6).map(i => (i.toLong, s"grade $i")).toDF("doc_id", "score"),
+      "doc_id", 1) // v2
+    // no live file carries `text`: it keeps its recorded position (the
+    // connector's order), where the reference, ordered by the files'
+    // footers, appends it
+    assert(VersionedTable.read(spark, root).schema.map(f =>
+      f.name -> f.dataType) === Seq("doc_id" -> LongType,
+        "text" -> StringType, "score" -> StringType))
+    assertSame(VersionedTable.read(spark, root),
+      mergeSchemaRead(root, 2).select("doc_id", "text", "score"), "read v2")
+    assertSame(VersionedTable.read(spark, root, Some(1)),
+      mergeSchemaRead(root, 1), "read v1")
+    val e = intercept[IllegalArgumentException](
+      VersionedTable.append(spark, root,
+        Seq((20L, "t", 3L)).toDF("doc_id", "text", "score"), "doc_id", 1))
+    assert(e.getMessage.contains("'score'"))
+    assert(VersionedTable.latestVersion(spark, root) === Some(2))
+    // decimals of one scale widen to the larger precision, as mergeSchema
+    VersionedTable.append(spark, root,
+      spark.range(30L, 33L).select(col("id").as("doc_id"),
+        col("id").cast("decimal(5,2)").as("price")), "doc_id", 1) // v3
+    VersionedTable.append(spark, root,
+      spark.range(33L, 35L).select(col("id").as("doc_id"),
+        col("id").cast("decimal(9,2)").as("price")), "doc_id", 1) // v4
+    assert(VersionedTable.read(spark, root).schema("price").dataType ===
+      DecimalType(9, 2))
+    Seq(3, 4).foreach { v =>
+      val got = VersionedTable.read(spark, root, Some(v))
+      assertSame(got, mergeSchemaRead(root, v).select(got.columns.map(col)
+        .toIndexedSeq: _*), s"read v$v")
+    }
   }
 
   test("a column-mapped (renamed) table reads like the mergeSchema " +
@@ -199,5 +281,21 @@ class RecordedSchemaReadSpec extends SparkSpec with TempDirs {
     assert(all.orderBy("doc_id").select("doc_id", "score", "_commit_version")
       .collect().toSeq === Seq(Row(5L, null, 2), Row(6L, null, 2),
         Row(7L, null, 2), Row(8L, "80", 5), Row(9L, "high", 8)))
+    // a window from v1 whose first load carries the column the later
+    // drop and re-add retypes: v1 is aligned like every other commit
+    val root1 = tempDir("graft_rs_cdf_v1")
+    VersionedTable.append(spark, root1,
+      Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "score"), "doc_id", 1) // v1
+    VersionedTable.dropColumn(spark, root1, "score") // v2, no-op
+    VersionedTable.addColumn(spark, root1, "score", StringType) // v3, no-op
+    VersionedTable.append(spark, root1,
+      Seq((3L, "high")).toDF("doc_id", "score"), "doc_id", 1) // v4
+    val fromV1 = VersionedTable.changes(spark, root1, 1, 4, Some("doc_id"))
+    assert(fromV1.schema.map(f => f.name -> f.dataType) === Seq(
+      "doc_id" -> LongType, "score" -> StringType,
+      "_change_type" -> StringType, "_commit_version" -> IntegerType))
+    assert(fromV1.orderBy("doc_id").collect().toSeq === Seq(
+      Row(1L, "10", "insert", 1), Row(2L, "20", "insert", 1),
+      Row(3L, "high", "insert", 4)))
   }
 }
